@@ -24,6 +24,10 @@ Design notes for comparability across rounds:
   kills the process mid-run, the file still holds ingest + calibration +
   every per-query time measured so far. The stdout JSON line is printed
   once, last, after spark.stop().
+- ``cpus`` is ``$SPARK_GRAFT_CPUS`` when it holds a positive integer,
+  else ``os.cpu_count()``; the session runs on exactly that many cores.
+- Each run stands alone: nothing merges with a previous artifact, so
+  every number comes from the code and box of this run.
 - A subset of ``queries()`` is excluded from the BENCH set (still in the
   correctness gate): the md5-portable oracle twins (qd13/14/15/17/18/20 —
   intentionally slow, exist only so DuckDB can replay the math) and two of
@@ -99,8 +103,7 @@ BENCH_EXCLUDE = {
 # 1.1 s → 8.4 s with no code change on its path, muddying every
 # round-over-round read). These keys are measured VOLATILE_REPEATS
 # times per pass and record the MEDIAN, so one slow scheduling window
-# cannot define the key in any single run — the cross-run best-of merge
-# stops being the only defense.
+# cannot define the key in any single run.
 BENCH_VOLATILE = {"qd07_embedding_dupes"}
 _VOLATILE_REPEATS = int(
     os.environ.get("SPARK_GRAFT_BENCH_VOLATILE_REPEATS", "3")
@@ -152,18 +155,13 @@ def _semantic_digest(blob: bytes) -> str:
 
 def _code_fingerprint(root: str | None = None) -> str | None:
     """Content hash of the MEASURED code paths as they sit in the
-    WORKING TREE — identifies the code a bench run measured, so
-    best-of-run merging (below) can never mix timings from two different
-    code states, while committing notes or bench artifacts keeps the
-    fingerprint stable.
+    WORKING TREE — identifies the code a bench run measured, while
+    committing notes or bench artifacts keeps the fingerprint stable.
 
     Python sources hash via :func:`_semantic_digest` (AST minus
     docstrings), NOT raw bytes: a docstring/comment-only edit cannot
-    change what a run measures, but under the old blob hash it silently
-    de-merged the artifact — a round-9 docstring commit made the
-    driver's single run OVERWRITE the committed best-of-4 result
-    (VERDICT r9 process defect). Comment/doc edits now keep the
-    fingerprint; any executable change still rotates it.
+    change what a run measures, so it keeps the fingerprint; any
+    executable change rotates it.
 
     ``root`` (tests only) points the scan at a different git tree so the
     protocol tests can mutate a THROWAWAY copy of a measured file — the
@@ -199,31 +197,15 @@ def _code_fingerprint(root: str | None = None) -> str | None:
         return None
 
 
-def _load_prior(
-    path: str, fingerprint: str | None, sf_val, cpus: int
-) -> dict | None:
-    """The best-of-runs merge guard: a prior COMPLETE artifact merges
-    only when it measured the SAME code (fingerprint), scale, and core
-    count. ``cpus`` is part of the key (round-11 verdict harness bug
-    #2): the driver's low-core `$SPARK_GRAFT_CPUS` run used to merge
-    32-core minima and flatten the scaling measurement. Artifacts
-    written before the ``cpus`` field never merge."""
-    if not (fingerprint and os.path.exists(path)):
-        return None
+def _cpus() -> int:
+    """Cores the bench session runs on: ``$SPARK_GRAFT_CPUS`` when it is
+    a positive integer, else ``os.cpu_count()`` (unset or malformed
+    values fall back rather than kill the run)."""
     try:
-        with open(path) as fh:
-            cand = json.load(fh)
-        if (
-            cand.get("complete")
-            and cand.get("code_fingerprint") == fingerprint
-            and cand.get("sf") == sf_val
-            and cand.get("cpus") == cpus
-            and isinstance(cand.get("queries"), dict)
-        ):
-            return cand
-    except Exception:  # noqa: BLE001
-        return None
-    return None
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        n = 0
+    return n if n > 0 else (os.cpu_count() or 1)
 
 
 def _cpu_calibration() -> float:
@@ -260,7 +242,10 @@ def main() -> None:
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
 
-    spark = get_spark("bench")
+    cpus = _cpus()
+    spark = get_spark(
+        "bench", master=f"local[{cpus}]", shuffle_partitions=cpus
+    )
     qs = {
         name: fn
         for name, fn in entrymod.queries().items()
@@ -276,24 +261,6 @@ def main() -> None:
         qs = {n: f for n, f in qs.items() if n in want}
 
     fingerprint = _code_fingerprint()
-    # Best-of-runs merging (round-6 verdict #5): same-box bench totals of
-    # IDENTICAL code swing 50%+ with neighbor noise, so the committed
-    # artifact should be the best-of-runs, not the last. A prior COMPLETE
-    # artifact for the same code fingerprint, scale, and full query set is
-    # loaded now (the file is overwritten incrementally below) and merged
-    # per-query-best into the final result, with ``merged_runs`` recording
-    # how many runs contributed. A different fingerprint — any code edit —
-    # never merges. Disable with SPARK_GRAFT_BENCH_KEEP_BEST=0.
-    keep_best = os.environ.get("SPARK_GRAFT_BENCH_KEEP_BEST", "1") != "0"
-    # The core count is part of what a run measures: merging an 8-core
-    # run's artifact with 32-core minima produced "8 cores ≈ 32 cores"
-    # scaling artifacts (round-11 verdict harness bug #2) — a prior
-    # artifact merges ONLY when it was measured at the same
-    # $SPARK_GRAFT_CPUS (older artifacts without the field never merge).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    prior: dict | None = None
-    if keep_best and subset is None:
-        prior = _load_prior(_RESULT_PATH, fingerprint, sf_val, cpus)
 
     out: dict = {
         "metric": "headline_queries_total_runtime",
@@ -434,22 +401,6 @@ def main() -> None:
     out["cold_total"] = round(sum(passes[0].values()), 2)
     out["calibrations"]["end"] = _cpu_calibration()
     out["complete"] = True
-    if prior is not None and set(prior["queries"]) == set(out["queries"]):
-        out["last_run_value"] = out["value"]
-        out["last_run_value_normalized"] = out["value_normalized"]
-        pq, pn = prior["queries"], prior.get("queries_normalized", {})
-        out["queries"] = {k: min(v, pq[k]) for k, v in out["queries"].items()}
-        out["queries_normalized"] = {
-            k: min(v, pn.get(k, v)) for k, v in out["queries_normalized"].items()
-        }
-        out["value"] = round(sum(out["queries"].values()), 3)
-        out["value_normalized"] = round(sum(out["queries_normalized"].values()), 3)
-        prior_rps = prior.get("bronze_rows_per_second")
-        if prior_rps:
-            out["bronze_rows_per_second"] = max(
-                out.get("bronze_rows_per_second") or 0.0, prior_rps
-            )
-        out["merged_runs"] = int(prior.get("merged_runs", 1)) + 1
     _write_partial(out)
 
     # The stdout metrics line must (a) survive the harness's stdout tail
@@ -473,7 +424,8 @@ def main() -> None:
         "calibrations": out["calibrations"],
         "bronze_rows_per_second": out.get("bronze_rows_per_second"),
         "n_queries": len(out["queries"]),
-        "merged_runs": out.get("merged_runs", 1),
+        # kept for stdout-line compatibility: runs never merge
+        "merged_runs": 1,
         "complete": True,
         "queries": slowest,
     }

@@ -102,7 +102,7 @@ def _run_curate(docs_path: str, out_dir: str) -> int:
     spark = get_spark("curate-cli")
     try:
         docs = spark.read.parquet(docs_path)
-        stages = curate.curate_corpus(docs, materialize=True)
+        stages = curate.curate_corpus(docs)
         write_dataset(
             stages["curated"], os.path.join(out_dir, "curated"),
             partition_by=["split"],

@@ -18,14 +18,17 @@ pushes down to the parquet scan.
 Atomic publish (round 9): a managed table is a metastore VIEW pointing
 at a physical GENERATION table (``<table>__gNNNNNN``). ``overwrite``
 writes the new state as a brand-new generation table, then republishes
-the view with ONE ``CREATE OR REPLACE VIEW`` statement — a single
-metastore update, so a concurrent ``spark.table()``/``Catalog.read``
-never observes a missing table or a half-swapped state (the reference
+the view with ONE ``ALTER VIEW … AS`` statement — a single metastore
+update, so a concurrent ``spark.table()``/``Catalog.read`` never
+observes a missing table or a half-swapped state (the reference
 gets this from PostgreSQL transactions, ``sql/dml.py:96-167,248-337``;
 Delta would make it a table-format commit — this is the metastore-native
 equivalent, the same pointer-commit idea as ``sources/manifest.py``).
 Readers resolve through the view automatically; filters and column
 pruning push through view resolution into the physical scan unchanged.
+The view definition is the only record of which generation is
+published: writers read it back from the view text
+(:meth:`Catalog.resolve_table`), so no second pointer can go stale.
 The previous generation is retained for one publish cycle (in-flight
 scans drain), older ones are pruned; a crash anywhere leaves the old
 view intact plus at most an orphan generation for
@@ -50,8 +53,8 @@ LAYERS = ("bronze", "silver", "gold", "logs")
 
 #: physical generation tables backing a published view: <table>__gNNNNNN
 GEN_RE = re.compile(r"^(?P<base>.+)__g(?P<seq>\d{6})$")
-#: view property holding the qualified name of the published generation
-GEN_PROP = "spark_graft.generation"
+#: a published view's definition, naming its qualified generation table
+_VIEW_TEXT_RE = re.compile(r"^\s*SELECT \* FROM (?P<gen>\S+)\s*$", re.IGNORECASE)
 
 #: Managed-table metadata columns (reference ``sql/ddl.py:178-189``;
 #: README list README.md:517-525).
@@ -135,19 +138,20 @@ class Catalog:
             return False
 
     def resolve_table(self, layer: str, table: str) -> str:
-        """The qualified PHYSICAL table behind a published view (reads the
-        view's generation pointer property) — the view's own name for a
-        legacy plain table. Physical-only operations (append, ANALYZE,
-        DESCRIBE location, insertInto) go through this; plain reads never
-        need it (``spark.table`` resolves the view)."""
+        """The qualified PHYSICAL table behind a published view, read from
+        the view's own definition (``View Text``) — the view's own name
+        for a legacy plain table. Physical-only operations (append,
+        ANALYZE, DESCRIBE location, insertInto) go through this; plain
+        reads never need it (``spark.table`` resolves the view)."""
         q = self.qualified(layer, table)
         if not self._is_view(q):
             return q
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES {q}").collect()
-        for r in rows:
-            if r["key"] == GEN_PROP:
-                return r["value"]
-        raise RuntimeError(f"view {q} has no {GEN_PROP} pointer")
+        for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {q}").collect():
+            if r["col_name"] == "View Text":
+                m = _VIEW_TEXT_RE.match(r["data_type"] or "")
+                if m:
+                    return m.group("gen")
+        raise RuntimeError(f"view {q} does not select from a generation table")
 
     def _generations(self, layer: str, table: str) -> list[str]:
         """Existing generation table NAMES for ``table``, seq-ascending
@@ -174,32 +178,21 @@ class Catalog:
         implements replace as ``dropTable`` + ``createTable`` ("nothing
         we need to retain… just drop and create"), leaving a real
         TABLE_OR_VIEW_NOT_FOUND window that the concurrent-reader test
-        hit under a loaded box (round 12). The generation pointer (and
-        an explicit comment) follow as ``ALTER VIEW … SET
-        TBLPROPERTIES`` — a reader between the two statements sees the
-        new definition with the previous pointer, whose generation
-        table is still retained, i.e. consistent-but-stale, never
-        broken. Only the FIRST publish of a table creates the view —
-        no reader can hold its name before it ever exists."""
+        hit under a loaded box (round 12). The repoint is the whole
+        publish: :meth:`resolve_table` reads the generation back from the
+        view text, so there is no second statement for a crash to split
+        from it. Only the FIRST publish of a table creates the view (with
+        ``comment``) — no reader can hold its name before it ever
+        exists."""
         q = self.qualified(layer, table)
-        escaped = (
-            comment.replace("\\", "\\\\").replace("'", "\\'")
-            if comment else None
-        )
         if self._is_view(q):
             self.spark.sql(f"ALTER VIEW {q} AS SELECT * FROM {gen_q}")
-            props = f"'{GEN_PROP}'='{gen_q}'"
-            if escaped:
-                props += f", 'comment'='{escaped}'"
-            self.spark.sql(f"ALTER VIEW {q} SET TBLPROPERTIES ({props})")
             return
         stmt = f"CREATE OR REPLACE VIEW {q} "
-        if escaped:
+        if comment:
+            escaped = comment.replace("\\", "\\\\").replace("'", "\\'")
             stmt += f"COMMENT '{escaped}' "
-        stmt += (
-            f"TBLPROPERTIES ('{GEN_PROP}'='{gen_q}') AS SELECT * FROM {gen_q}"
-        )
-        self.spark.sql(stmt)
+        self.spark.sql(stmt + f"AS SELECT * FROM {gen_q}")
 
     #: previous generations retained per table after a publish (in-flight
     #: readers' grace window); older ones are pruned by overwrite itself

@@ -313,17 +313,3 @@ def soft_delete_table(
 ) -> None:
     target = catalog.read(layer, table, include_deleted=True)
     catalog.overwrite(soft_delete(target, condition, **kw), layer, table)
-
-
-def merge_table(
-    catalog: Catalog,
-    layer: str,
-    table: str,
-    source: DataFrame,
-    key_columns: Sequence[str],
-    **kw,
-) -> dict[str, int]:
-    target = catalog.read(layer, table, include_deleted=True)
-    new_state, counts = merge(target, source, key_columns, **kw)
-    catalog.overwrite(new_state, layer, table)
-    return counts

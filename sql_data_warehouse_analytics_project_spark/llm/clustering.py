@@ -1,8 +1,7 @@
 """Duplicate-cluster resolution: near-dup PAIRS → connected components →
 one canonical document per cluster (north-star extension; the reference
 has no graph surface — its nearest analogue is the recursive lineage
-traversal ``logs/data_lineage.py:378-435``, and this module rides the
-same bounded-iteration discipline as ``operators.setops.iterate``).
+traversal ``logs/data_lineage.py:378-435``).
 
 Why this exists: every near-dup detector in :mod:`~.llm.dedup` emits
 *pairs* (a ~ b). Dropping one side of each pair independently
@@ -18,9 +17,9 @@ and near-dup graphs are short-diameter by construction (detectors emit
 near-cliques; chains longer than a few hops are vanishingly rare), so
 3-5 rounds close real corpora. Each round is one shuffle on node id
 (join + min-aggregate, both map-side combinable); frontiers are
-localCheckpointed like :func:`~.operators.setops.iterate` so the plan
-stays flat and the convergence probe reads materialized rows. For
-adversarial long-chain graphs the alternating large-star/small-star
+localCheckpointed each round so the plan stays flat and the
+convergence probe reads materialized rows. For adversarial
+long-chain graphs the alternating large-star/small-star
 variant (Kiveris et al., "Connected Components in MapReduce") drops the
 round count to O(log n); min-label propagation is the right default for
 dedup workloads and keeps every round a plain equi-join Catalyst can

@@ -5,8 +5,9 @@ resolution → quality filter → leakage-safe split.
 This is the "switch your pipeline to this engine" entry point: every
 stage is the same operator the per-stage oracle queries exercise
 (qd01/qd09/qd28/qd36/qd35), wired in the order a production curation run
-uses them. Everything stays a lazy DataFrame graph until the caller
-writes; nothing collects to the driver.
+uses them. Stage boundaries are pinned (``localCheckpoint``), or
+persisted as datasets under ``write_through``; nothing collects to the
+driver.
 
 Scale shape: exact dedup shuffles once on a 32-byte fingerprint; MinHash
 candidate generation is banded (never all-pairs); cluster resolution is
@@ -40,7 +41,6 @@ def curate_corpus(
     near_dup_threshold: float = 0.8,
     splits: Mapping[str, float] | None = None,
     filter_kwargs: Mapping[str, Any] | None = None,
-    materialize: bool = False,
     write_through: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full curation chain; returns every intermediate stage so
@@ -61,13 +61,14 @@ def curate_corpus(
     training twin that was dropped for quality (it no longer exists) but
     DOES stay clustered with any other surviving members.
 
-    ``materialize=True`` localCheckpoints each stage boundary so that
-    consumers issuing SEVERAL actions over the stages (audits,
+    By default every stage is pinned (``localCheckpoint``) so consumers
+    issuing SEVERAL actions over the stages (audits,
     :func:`curation_report`'s funnel counts) execute each stage once
-    instead of re-running the whole upstream chain per action (measured
-    4x on the funnel). Leave False for the normal single-write path —
-    the lazy graph lets Catalyst fuse stages, and at full scale
-    persisting intermediates is a caller-owned budget decision.
+    instead of re-running the whole upstream chain per action. The
+    stages after ``pairs``/``clusters`` are one narrow map over the
+    pinned exact-dedup survivors, so ``near``, ``decisions`` and
+    ``curated`` are projections of ONE shared pin (see the fused chain
+    below).
 
     ``write_through=<dir>`` is the 100 TB audit-trail mode: every stage
     boundary (plus the ``shingles`` index and the resolved ``clusters``
@@ -82,7 +83,9 @@ def curate_corpus(
     stage written from DIFFERENT input would be wrong, and this function
     cannot know.) The corpus stages keep their materialized ``_toks``
     arrays on disk (the single-tokenizer-pass contract survives the
-    round-trip). Supersedes ``materialize``.
+    round-trip). This mode keeps the staged chain because each stage
+    must be its own dataset, written from its own upstream dataset so
+    lineage auto-capture records one edge per stage boundary.
 
     The chain pays the tokenizer regex — the CPU hot spot of every
     text-derived stage — exactly ONCE: the exact-dedup survivors carry a
@@ -111,14 +114,7 @@ def curate_corpus(
     # those consumers into concurrent leaf stages racing on the
     # unmaterialized partitions' block locks (measured ~2x wall on the
     # funnel) — see the policy note in llm/dedup.shingle-index docstring.
-    def _mat(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint() if materialize else df
-
     def _boundary(df: DataFrame, stage: str) -> DataFrame:
-        return _persist(df, stage) if write_through is not None else _mat(df)
-
-    def _always(df: DataFrame, stage: str) -> DataFrame:
-        # pairs/clusters feed multiple consumers: always materialized
         return (
             _persist(df, stage)
             if write_through is not None
@@ -140,14 +136,14 @@ def curate_corpus(
     # write_through — which also keeps the lineage auto-capture chain
     # intact (a localCheckpoint severs plan provenance, so the pairs
     # dataset would otherwise record no source edge)
-    sh = _always(
+    sh = _boundary(
         D.shingle_index(exact_tok, id_col, text_col, tokens_col="_toks"),
         "shingles",
     )
     # pairs are tiny (near-dup density, not corpus size) and feed BOTH the
     # near-dedup anti-join and the split keys — materialize once so the
     # 64-hash MinHash pipeline never re-executes downstream
-    pairs = _always(
+    pairs = _boundary(
         D.minhash_dedup_pairs(
             exact, id_col, threshold=near_dup_threshold, index=sh
         ),
@@ -155,11 +151,11 @@ def curate_corpus(
     )
     # one connected-components resolution serves the anti-join AND the
     # split keys (clusters table is pairs-sized: checkpoint is cheap)
-    clusters = _always(dup_clusters(pairs, "id_a", "id_b"), "clusters")
+    clusters = _boundary(dup_clusters(pairs, "id_a", "id_b"), "clusters")
     near_tok_lazy = dedup_by_pairs(exact_tok, pairs, id_col, clusters=clusters)
     near_cols = [c for c in near_tok_lazy.columns if c != "_toks"]
 
-    if materialize and write_through is None:
+    if write_through is None:
         # FUSED post-pairs chain (round-11 verdict next-round item 3):
         # everything after `pairs`/`clusters` is a NARROW map over the
         # pinned exact_tok — the anti-join against the (tiny) cluster
@@ -210,9 +206,11 @@ def curate_corpus(
             "curated": curated,
         }
 
-    near_tok = _boundary(near_tok_lazy, "near")
+    # staged chain (write_through): one dataset per stage, each read
+    # back before the next stage consumes it
+    near_tok = _persist(near_tok_lazy, "near")
     near = near_tok.drop("_toks")
-    decisions = _boundary(
+    decisions = _persist(
         T.corpus_filter(
             near_tok, id_col, text_col, tokens_col="_toks", **(filter_kwargs or {})
         ),
@@ -221,7 +219,7 @@ def curate_corpus(
     kept = near.join(
         decisions.filter(F.col("keep")).select(id_col), id_col, "left_semi"
     )
-    curated = _boundary(
+    curated = _persist(
         leakage_safe_split(kept, pairs, id_col, splits, clusters=clusters),
         "curated",
     )
@@ -241,10 +239,10 @@ def curation_report(stages: Mapping[str, DataFrame], id_col: str = "doc_id") -> 
 
     The counts are LAZY single-row aggregates unioned into one plan, not
     eager ``count()`` actions: the caller's one action then runs every
-    count in a single Spark job (the four stage subtrees are checkpointed
-    by ``curate_corpus(materialize=True)``/``write_through``, so each is
-    one cheap scan), where four sequential driver actions previously paid
-    four rounds of fixed job latency — pure scheduling overhead at any
+    count in a single Spark job (``curate_corpus`` pins every stage, or
+    persists it under ``write_through``, so each is one cheap scan),
+    where four sequential driver actions previously paid four rounds of
+    fixed job latency — pure scheduling overhead at any
     scale, and the stage counts are independent so nothing orders them."""
 
     def _stage_count(df: DataFrame, name: str) -> DataFrame:

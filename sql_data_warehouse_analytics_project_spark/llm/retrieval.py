@@ -597,29 +597,6 @@ def search_bm25(
     ).filter(F.col("rank") <= k)
 
 
-def bm25_scores(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    query_id_col: str = "query_id",
-    query_text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """One-shot BM25 relevance for every (query, document) pair sharing
-    ≥1 term: ``(query_id, doc_id, score)``. Convenience composition of
-    :func:`build_bm25_index` + :func:`search_bm25` (k≤0 = no cut) — the
-    ad-hoc path; repeated searches should build the index once."""
-    index = build_bm25_index(corpus, id_col, text_col)
-    return search_bm25(
-        index, queries, k=0, id_col=id_col,
-        query_id_col=query_id_col, query_text_col=query_text_col,
-        k1=k1, b=b,
-    )
-
-
 def bm25_topk(
     corpus: DataFrame,
     queries: DataFrame,

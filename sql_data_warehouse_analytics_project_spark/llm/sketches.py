@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import md5_60bit
+from .text import md5_60bit, tokens, word_ngrams
 
 #: md5_60bit yields 60 uniform bits: p go to the register index, the
 #: remaining 60-p feed the leading-zero rank rho ∈ [1, 61-p].
@@ -153,11 +153,21 @@ def hll_distinct(
 
 # -- Bloom membership --------------------------------------------------------
 
+#: Largest filter membership supports: the bitmap rides the plan as a
+#: LITERAL long-array (64 Kbits → 1024 longs). A 10^9-bit filter belongs
+#: in a broadcast variable, not an expression tree, and is refused here.
+_BLOOM_EXPR_MAX_BITS = 1 << 16
+
 
 def _bloom_positions(term: Column, k: int, mbits: int, salt: str) -> Column:
     """The k salted bit positions of a term (array<int>)."""
     if k < 1 or mbits < 2:
         raise ValueError("k must be >= 1 and mbits >= 2")
+    if mbits > _BLOOM_EXPR_MAX_BITS:
+        raise ValueError(
+            f"mbits={mbits} exceeds _BLOOM_EXPR_MAX_BITS="
+            f"{_BLOOM_EXPR_MAX_BITS} (the literal-bitmask membership cap)"
+        )
     return F.array(*[
         (md5_60bit(F.concat(F.lit(f"{salt}{j}|"), term)) % mbits)
         .cast("int")
@@ -182,33 +192,26 @@ def bloom_build(
     return df.select(F.explode(pos).alias("pos")).distinct()
 
 
-#: Largest filter that rides the plan as a LITERAL long-array bitmask
-#: (64 Kbits → 1024 longs). Bigger filters keep the broadcast-join form
-#: — at the 10^9-bit scale the mask belongs in a broadcast variable,
-#: not an expression tree.
-_BLOOM_EXPR_MAX_BITS = 1 << 16
-
-
-def _bloom_mask_words(bloom: DataFrame, mbits: int) -> "list[int] | None":
+def _bloom_mask(bloom: DataFrame, mbits: int) -> Column:
     """Collect the (≤ mbits, by construction) set-bit positions into an
-    mbits-bit bitmask as signed-64 words, or None when the filter is too
-    large for the literal-expression membership path. The collect is the
+    mbits-bit bitmask literal of signed-64 words. The collect is the
     operator's one bounded action — exactly the manual Bloom-filter
     broadcast of guide §3.2, with the bitmap as plan constant."""
-    if mbits > _BLOOM_EXPR_MAX_BITS:
-        return None
     words = [0] * ((mbits + 63) // 64)
     for r in bloom.select("pos").collect():
         p = int(r["pos"])
         words[p >> 6] |= 1 << (p & 63)
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+    return F.array(*[
+        F.lit(w - (1 << 64) if w >= (1 << 63) else w).cast("long")
+        for w in words
+    ])
 
 
 def _bloom_hit_expr(term: Column, mask: Column, k: int, mbits: int,
                     salt: str) -> Column:
     """Pure-expression membership: ALL k salted positions set in the
     literal mask — no explode, no join, no exchange. NULL terms probe
-    NULL positions and coalesce to false (the join form's behavior)."""
+    NULL positions and coalesce to false."""
     pos = _bloom_positions(term, k, mbits, salt)
     return F.coalesce(
         F.forall(
@@ -234,38 +237,26 @@ def bloom_possibly_contains(
     mbits: int = 4096,
     salt: str = "bloom",
 ) -> DataFrame:
-    """Membership probe: a term is possibly-present iff ALL k of its
-    positions are set. No false negatives ever (every inserted term set
-    exactly these bits); false-positive odds fall with mbits/k sizing.
+    """Membership probe, one row per DISTINCT term: a term is
+    possibly-present iff ALL k of its positions are set. No false
+    negatives ever (every inserted term set exactly these bits, and
+    duplicated probe terms evaluate the same expression); false-positive
+    odds fall with mbits/k sizing.
 
-    For filters up to ``_BLOOM_EXPR_MAX_BITS`` the bitmap collects into
-    a literal long-array and membership is a per-row EXPRESSION (k md5
-    probes + bit tests) — the k-way position explode, the broadcast
-    join, and its regrouping exchange disappear from the plan entirely
-    (the probe side previously shuffled k rows per term). Larger
-    filters keep the join form."""
-    words = _bloom_mask_words(bloom, mbits)
-    if words is not None:
-        mask = F.array(*[F.lit(w).cast("long") for w in words])
-        return (
-            terms.select(F.col(term_col).alias("term"))
-            .distinct()  # the join form's groupBy(term) output grain
-            .select(
-                "term",
-                _bloom_hit_expr(
-                    F.col("term"), mask, k, mbits, salt
-                ).alias("possibly_present"),
-            )
-        )
-    pos = _bloom_positions(F.col(term_col), k, mbits, salt)
-    probe = terms.select(
-        F.col(term_col).alias("term"), F.explode(pos).alias("pos")
-    )
+    The bitmap collects into a literal long-array and membership is a
+    per-row EXPRESSION (k md5 probes + bit tests): no position explode,
+    no join, no exchange beyond the term distinct. Filters above
+    ``_BLOOM_EXPR_MAX_BITS`` raise ``ValueError``."""
+    mask = _bloom_mask(bloom, mbits)
     return (
-        probe.join(F.broadcast(bloom.withColumn("__set", F.lit(1))),
-                   "pos", "left")
-        .groupBy("term")
-        .agg((F.count(F.col("__set")) == k).alias("possibly_present"))
+        terms.select(F.col(term_col).alias("term"))
+        .distinct()
+        .select(
+            "term",
+            _bloom_hit_expr(
+                F.col("term"), mask, k, mbits, salt
+            ).alias("possibly_present"),
+        )
     )
 
 
@@ -294,81 +285,32 @@ def bloom_contamination_prefilter(
     ``(id, n_shingles, n_bloom_hits, possibly_contaminated)`` —
     shingles count with multiplicity (the ``contamination_score``
     convention); rows shorter than n tokens report false.
+
+    ``tokens_col`` names a pre-tokenized array column (the
+    ``shingle_index`` contract): a pipeline running this prefilter AND
+    the exact join over one corpus (qd78's production shape) pins the
+    tokenize once instead of re-running the regex — the dominant CPU of
+    the pass — in every branch.
+
+    The bitmap is a plan constant, so the per-doc counts are ONE narrow
+    map over the token arrays: no position explode, no join, no
+    regrouping exchange (``word_ngrams`` of a short/NULL-token doc is the
+    empty array, so those docs report ``(0, 0, false)``).
     """
-    from .text import tokens, word_ngrams
-
-    def _shingles(frame: DataFrame, keep_id: bool) -> DataFrame:
-        cols = [F.col(id_col)] if keep_id else []
-        # ``tokens_col`` names a pre-tokenized array column (the
-        # ``shingle_index`` contract): a pipeline running this prefilter
-        # AND the exact join over one corpus (qd78's production shape)
-        # pins the tokenize once instead of re-running the regex — the
-        # dominant CPU of the pass — in every branch.
-        t = F.col(tokens_col) if tokens_col else tokens(text_col)
-        toks = frame.select(*cols, t.alias("__t"))
-        # posexplode: the ordinal is the occurrence identity the hit
-        # regrouping below keys on (duplicate shingles in one doc stay
-        # distinct occurrences)
-        return toks.select(
-            *cols,
-            F.posexplode(word_ngrams(F.col("__t"), n))
-            .alias("occ", "shingle"),
-        )
-
-    bloom = bloom_build(
-        _shingles(eval_df, keep_id=False).select("shingle").distinct(),
-        "shingle", k=k, mbits=mbits, salt=salt,
-    )
-    words = _bloom_mask_words(bloom, mbits)
-    if words is not None:
-        # Expression form (the 100 TB shape made literal): the bitmap is
-        # a plan constant, so the per-doc counts are ONE narrow map over
-        # the token arrays — the k-way position explode (k rows per
-        # shingle occurrence through a broadcast join) and BOTH
-        # regrouping exchanges ((id, occ) then id) vanish, as does the
-        # final ids left-join (every doc row computes its own counts;
-        # word_ngrams of a short/NULL-token doc is the empty array, so
-        # the (0, 0, false) rows fall out identically).
-        from .text import tokens, word_ngrams
-
-        mask = F.array(*[F.lit(w).cast("long") for w in words])
-        t = F.col(tokens_col) if tokens_col else tokens(text_col)
-        grams = word_ngrams(t, n)
-        n_sh = F.size(grams).cast("long")
-        n_hit = F.size(
-            F.filter(
-                grams,
-                lambda g: _bloom_hit_expr(g, mask, k, mbits, salt),
-            )
-        ).cast("long")
-        return df.select(
-            F.col(id_col),
-            n_sh.alias("n_shingles"),
-            n_hit.alias("n_bloom_hits"),
-            (n_hit > 0).alias("possibly_contaminated"),
-        )
-    train = _shingles(df, keep_id=True)
-    pos = _bloom_positions(F.col("shingle"), k, mbits, salt)
-    hits = (
-        train.select(id_col, "occ", F.explode(pos).alias("pos"))
-        .join(F.broadcast(bloom.withColumn("__set", F.lit(1))),
-              "pos", "left")
-        # bloom positions are distinct ⇒ the join never fans out: each
-        # occurrence contributes exactly k rows, hit ⟺ all k matched
-        .groupBy(id_col, "occ")
-        .agg((F.count("__set") == k).alias("hit"))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.col("hit").cast("long")).alias("n_bloom_hits"),
-        )
-    )
-    ids = df.select(id_col)
-    return ids.join(hits, id_col, "left").select(
-        id_col,
-        F.coalesce("n_shingles", F.lit(0)).cast("long").alias("n_shingles"),
-        F.coalesce("n_bloom_hits", F.lit(0)).cast("long")
-        .alias("n_bloom_hits"),
-        F.coalesce(F.col("n_bloom_hits") > 0, F.lit(False))
-        .alias("possibly_contaminated"),
+    t = F.col(tokens_col) if tokens_col else tokens(text_col)
+    eval_grams = eval_df.select(
+        F.explode(word_ngrams(t, n)).alias("shingle")
+    ).distinct()
+    bloom = bloom_build(eval_grams, "shingle", k=k, mbits=mbits, salt=salt)
+    mask = _bloom_mask(bloom, mbits)
+    grams = word_ngrams(t, n)
+    n_sh = F.size(grams).cast("long")
+    n_hit = F.size(
+        F.filter(grams, lambda g: _bloom_hit_expr(g, mask, k, mbits, salt))
+    ).cast("long")
+    return df.select(
+        F.col(id_col),
+        n_sh.alias("n_shingles"),
+        n_hit.alias("n_bloom_hits"),
+        (n_hit > 0).alias("possibly_contaminated"),
     )

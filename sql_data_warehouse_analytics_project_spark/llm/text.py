@@ -791,6 +791,12 @@ def corpus_filter(
     )
 
 
+#: Working columns :func:`_filter_decisions` adds and drops again.
+_CF_WORK_COLS = (
+    "_cf_nc", "_cf_mtl", "_cf_pr", "_cf_dlf", "_cf_sh", "_cf_tnf", "__cf_toks",
+)
+
+
 def _filter_decisions(
     df: DataFrame,
     text_col: str = "text",
@@ -818,7 +824,13 @@ def _filter_decisions(
     decision table back to the corpus; output column names are
     caller-chosen because the input may already carry e.g. a ``lang``
     column that the dropped-columns form of :func:`corpus_filter` never
-    collided with."""
+    collided with. An input already carrying one of the working or output
+    column names is refused with ``ValueError``."""
+    for reserved in (*_CF_WORK_COLS, lang_name, reasons_name, keep_name):
+        if reserved in df.columns:
+            raise ValueError(
+                f"_filter_decisions: column {reserved!r} already exists"
+            )
     created_toks = False
     if tokens_col is None:
         # Materialize the token arrays in their OWN projection first: the

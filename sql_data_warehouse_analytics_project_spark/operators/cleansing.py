@@ -16,17 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def trim_strings(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """Strip leading/trailing whitespace (name-whitespace defect)."""
-    cols = columns if columns is not None else [
-        c for c, t in df.dtypes if t == "string"
-    ]
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.trim(F.col(c)))
-    return out
-
-
 def standardize_codes(
     column: str,
     mapping: Mapping[str, str],
@@ -45,12 +34,6 @@ def standardize_codes(
         branch = (src == key, F.lit(label))
         expr = F.when(*branch) if expr is None else expr.when(*branch)
     return (expr.otherwise(F.lit(default)) if expr is not None else F.lit(default))
-
-
-def dedup_exact(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — hash-based groupBy under the hood
-    (``dropDuplicates`` shuffles once on the dedup key)."""
-    return df.dropDuplicates(list(columns)) if columns else df.dropDuplicates()
 
 
 def dedup_keep_latest(

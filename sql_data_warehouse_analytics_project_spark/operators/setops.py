@@ -1,19 +1,14 @@
-"""Set operations + bounded recursion (maps reference §2.7: U1 UNION ALL,
-U2 cte_builder ``sql/query_builder.py:245-275``, U3 recursive_cte_builder
-:361-387 — real recursion lives in lineage traversal
-``logs/data_lineage.py:378-435``).
+"""Set operations (maps reference §2.7 U1 UNION ALL plus INTERSECT/EXCEPT).
 
-Spark has no recursive CTE; ``iterate`` is the engine-wide replacement — a
-depth-bounded driver loop of DataFrame joins (each iteration is a
-distributed job; the loop itself only sequences plans, it never touches
-rows).
+U2 CTE composition needs no operator: intermediate DataFrames are the
+CTEs. U3 recursive CTEs exist in the reference only for lineage
+traversal (``logs/data_lineage.py:378-435``), which
+``plans.lineage.traverse`` implements as a bounded driver-side walk.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def union_all(*dfs: DataFrame) -> DataFrame:
@@ -41,63 +36,3 @@ def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
     """Bag INTERSECT ALL — keeps min(multiplicity) copies per row, the
     multiset semantics ``intersect`` (distinct) loses."""
     return a.intersectAll(b)
-
-
-def with_ctes(
-    spark: SparkSession, ctes: Mapping[str, DataFrame], sql: str
-) -> DataFrame:
-    """U2 — CTE composition: register each intermediate DataFrame as a temp
-    view and run the main query (Catalyst inlines views; no materialization
-    unless the plan reuses one, in which case caller should .cache())."""
-    for name, df in ctes.items():
-        df.createOrReplaceTempView(name)
-    return spark.sql(sql)
-
-
-def iterate(
-    base: DataFrame,
-    step: Callable[[DataFrame, int], DataFrame],
-    max_depth: int,
-    *,
-    checkpoint_every: int | None = 1,
-    frontier_partitions: int | None = 4,
-) -> DataFrame:
-    """U3 — recursive-CTE semantics as a bounded fixpoint loop:
-    ``result = base ∪ step(base) ∪ step²(base) ...`` up to ``max_depth``
-    (the reference bounds at 3-5: ``common_queries.py:118``,
-    ``data_lineage.py:362``).
-
-    ``step(frontier, depth)`` returns the next frontier; empty frontier
-    short-circuits.
-
-    Every frontier is materialized (``localCheckpoint``) before the next
-    round: the emptiness probe and each subsequent step then read the
-    materialized rows instead of re-executing a d-deep nested-join plan —
-    without this the loop recomputes O(d²) joins (measured 13.7s → 1.4s on
-    a depth-4 traversal) and the plan nests exponentially past ~10 rounds.
-    This is the standard shape for iterative algorithms on Spark (GraphX /
-    GraphFrames checkpoint the same way); ``checkpoint_every=N`` thins it
-    to every Nth round for steps cheap to recompute, and ``None`` disables
-    checkpointing entirely (accepting the recompute cost).
-
-    Frontiers are typically tiny relative to the cluster (a lineage
-    traversal's frontier is a handful of edges), but each one inherits the
-    session's full shuffle-partition count, so every checkpoint round pays
-    dozens of near-empty tasks of fixed scheduler overhead.
-    ``frontier_partitions`` coalesces the frontier before materializing it
-    (a narrow dependency — no shuffle); pass ``None`` for genuinely large
-    frontiers (e.g. connected components over a big graph) to keep the
-    step's native parallelism.
-    """
-    result = base
-    frontier = base
-    for depth in range(1, max_depth + 1):
-        frontier = step(frontier, depth)
-        if checkpoint_every and depth % checkpoint_every == 0:
-            if frontier_partitions:
-                frontier = frontier.coalesce(frontier_partitions)
-            frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            break
-        result = result.unionByName(frontier)
-    return result

@@ -1,6 +1,6 @@
 """Analytics over the ``logs`` tables (maps reference L6 error-pattern
-analysis ``error_handler.py:573-699``, L12 perf summary / throughput
-``performance_monitor.py:385-537``, L13 bottleneck identification
+analysis ``error_handler.py:573-699``, L12 perf summary
+``performance_monitor.py:385-450``, L13 bottleneck identification
 :552-636). All plain groupBy aggregations — one pass each."""
 
 from __future__ import annotations
@@ -28,28 +28,6 @@ def error_frequency(ctx: RunContext, days: int = 30) -> DataFrame:
     )
 
 
-def error_daily_trend(ctx: RunContext, days: int = 30) -> DataFrame:
-    """Daily counts (error_handler.py:601-610)."""
-    return (
-        _recent_errors(ctx, days)
-        .groupBy(F.to_date("error_timestamp").alias("error_date"))
-        .agg(F.count(F.lit(1)).alias("error_count"))
-        .orderBy("error_date")
-    )
-
-
-def top_problem_tables(ctx: RunContext, days: int = 30, k: int = 10) -> DataFrame:
-    """Top-k tables by error count (error_handler.py:613-624)."""
-    return (
-        _recent_errors(ctx, days)
-        .filter(F.col("table_name").isNotNull())
-        .groupBy("table_name")
-        .agg(F.count(F.lit(1)).alias("error_count"))
-        .orderBy(F.col("error_count").desc(), "table_name")
-        .limit(k)
-    )
-
-
 def resolution_rate(ctx: RunContext, days: int = 30) -> DataFrame:
     errs = _recent_errors(ctx, days)
     return errs.agg(
@@ -67,7 +45,7 @@ def _recent_errors(ctx: RunContext, days: int) -> DataFrame:
     )
 
 
-# -- L12: performance summary & throughput ---------------------------------
+# -- L12: performance summary ----------------------------------------------
 
 
 def performance_summary(ctx: RunContext) -> DataFrame:
@@ -82,23 +60,6 @@ def performance_summary(ctx: RunContext) -> DataFrame:
             F.max("metric_value").alias("max_value"),
             F.stddev("metric_value").alias("stddev_value"),
         )
-    )
-
-
-def throughput_analysis(ctx: RunContext, days: int = 30) -> DataFrame:
-    """Daily rows/sec from process_log (performance_monitor.py:452-537)."""
-    hist = ctx.process_history(days=days, status="SUCCESS")
-    return (
-        hist.filter(F.col("rows_processed").isNotNull() & (F.col("duration_seconds") > 0))
-        .groupBy(F.to_date("start_time").alias("run_date"))
-        .agg(
-            F.sum("rows_processed").alias("total_rows"),
-            F.sum("duration_seconds").alias("total_seconds"),
-            F.round(
-                F.sum("rows_processed") / F.sum("duration_seconds"), 2
-            ).alias("rows_per_second"),
-        )
-        .orderBy("run_date")
     )
 
 

@@ -4,11 +4,12 @@
 :670-751).
 
 PostgreSQL recursive CTEs (``WITH RECURSIVE`` + ``ARRAY`` path accumulator
-+ ``= ANY(path)`` cycle guard, ``data_lineage.py:393,413,420``) become the
-engine-wide bounded fixpoint loop (``operators.setops.iterate``): each
-depth is one distributed self-join of the edge table against the frontier;
-the path is an ``ArrayType`` column and ``array_contains`` is the cycle
-guard. Depth is bounded like the reference (default 5).
++ ``= ANY(path)`` cycle guard, ``data_lineage.py:393,413,420``) become a
+bounded breadth-first walk on the driver: a lineage graph is metadata
+(thousands of tables), so the edge list collects in one job and each
+depth extends every frontier path by one edge, skipping nodes already on
+the path (the cycle guard). Depth is bounded like the reference
+(default 5).
 """
 
 from __future__ import annotations
@@ -16,7 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sql_data_warehouse_analytics_project_spark.operators.setops import iterate
+#: Largest distinct edge list ``traverse`` walks.
+MAX_EDGES = 1_000_000
+#: Largest number of (node, depth, path) rows ``traverse`` enumerates.
+MAX_PATHS = 2_000_000
 
 #: node identity = "schema.table" (the reference keys edges the same way)
 
@@ -33,37 +37,19 @@ def traverse(
     start_node: str,
     direction: str = "upstream",
     max_depth: int = 5,
-    *,
-    broadcast_frontier: bool = True,
-    driver_max_edges: int = 1_000_000,
-    driver_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """All nodes reachable from ``start_node``, with depth and full path.
 
     ``direction='upstream'`` walks target→source (what feeds this table);
     ``'downstream'`` walks source→target (what this table feeds).
-    Returns (node, depth, path:array<string>).
+    Returns (node, depth, path:array<string>): one row per distinct
+    cycle-free path of length 1..``max_depth``; the walk stops early at
+    the first depth that adds no path.
 
-    ``broadcast_frontier`` hash-joins each depth without shuffling either
-    side: the frontier (just-checkpointed, a handful of paths) broadcasts
-    and the edge table stays in place. Right for lineage metadata graphs —
-    a warehouse has thousands of tables, so frontiers are KBs. Pass False
-    for dense million-edge graphs where path enumeration can explode past
-    broadcast size; the loop then falls back to plain shuffle joins.
-
-    Graphs at or under ``driver_max_edges`` oriented edges (known for
-    free — the edge list is pinned and counted anyway) traverse with a
-    plain BFS on the driver: a lineage graph is metadata (thousands of
-    tables), and the distributed loop's cost is per-round driver JOB
-    overhead — broadcast build + join + checkpoint + emptiness probe
-    per depth — not data, so the in-memory walk beats ``max_depth``
-    rounds of fixed cost by ~5× (the ``connected_components``
-    ``driver_max_edges`` pattern, third use). The BFS replays the
-    fixpoint step EXACTLY (same join/cycle-guard/distinct per depth,
-    same short-circuit), so the row set is identical; if path
-    enumeration explodes past ``driver_max_rows`` mid-walk, the
-    distributed loop takes over from scratch on the already-pinned
-    edges. Million-edge graphs go distributed as before.
+    The distinct edge list is read with one ``collect()`` and walked on
+    the driver. A graph above ``MAX_EDGES`` edges, or a walk that
+    enumerates more than ``MAX_PATHS`` rows, raises ``ValueError``: that
+    is no longer a lineage graph.
     """
     if direction not in ("upstream", "downstream"):
         raise ValueError(direction)
@@ -73,68 +59,35 @@ def traverse(
         oriented = edges.select(F.col("dst").alias("node"), F.col("src").alias("next"))
     else:
         oriented = edges.select(F.col("src").alias("node"), F.col("dst").alias("next"))
-    # the bounded fixpoint embeds this subtree once per depth level —
-    # materialize so the edge derivation (scan + distinct) computes once
-    # (localCheckpoint, not persist: no CacheManager residue — see dedup).
-    # In small-graph mode, coalesce first: every depth's join launches one
-    # task per edge partition, and 8 beats the session's full
-    # shuffle-partition count for a KB-sized edge list. The dense-graph
-    # escape hatch (broadcast_frontier=False) keeps the edge table's
-    # native parallelism — a hardcoded coalesce would cap every depth at
-    # 8 tasks on exactly the graphs that need the cluster.
-    if broadcast_frontier:
-        oriented = oriented.coalesce(8)
-    # lazy: the driver_max_edges count below scans the whole edge list,
-    # so it doubles as the pin's materializing action (one driver job)
-    oriented = oriented.localCheckpoint(eager=False)
-
-    spark = lineage.sparkSession
-    if oriented.count() <= driver_max_edges:
-        adj: dict[str, list[str]] = {}
-        for row in oriented.collect():
-            adj.setdefault(row["node"], []).append(row["next"])
-        frontier: set[tuple] = {(start_node, 0, (start_node,))}
-        rows: list[tuple] = []
-        overflow = False
-        for depth in range(1, max_depth + 1):
-            nxt: set[tuple] = set()
-            for node, _d, path in frontier:
-                for nb in adj.get(node, ()):
-                    if nb not in path:  # cycle guard
-                        nxt.add((nb, depth, path + (nb,)))
-            if not nxt:
-                break
-            rows.extend(nxt)
-            if len(rows) > driver_max_rows:
-                overflow = True  # dense enumeration → distributed loop
-                break
-            frontier = nxt
-        if not overflow:
-            return spark.createDataFrame(
-                [(n, d, list(p)) for n, d, p in rows],
-                "node string, depth int, path array<string>",
-            )
-
-    base = spark.createDataFrame(
-        [(start_node, 0, [start_node])], "node string, depth int, path array<string>"
-    )
-
-    def step(frontier: DataFrame, depth: int) -> DataFrame:
-        if broadcast_frontier:
-            frontier = F.broadcast(frontier)
-        return (
-            oriented.join(frontier, "node")
-            .filter(~F.array_contains(F.col("path"), F.col("next")))  # cycle guard
-            .select(
-                F.col("next").alias("node"),
-                F.lit(depth).alias("depth"),
-                F.concat(F.col("path"), F.array(F.col("next"))).alias("path"),
-            )
-            .distinct()
+    edge_rows = oriented.collect()
+    if len(edge_rows) > MAX_EDGES:
+        raise ValueError(
+            f"lineage graph has more than MAX_EDGES={MAX_EDGES} edges"
         )
-
-    out = iterate(base, step, max_depth)
-    return out.filter(F.col("depth") > 0)
+    adj: dict[str, list[str]] = {}
+    for row in edge_rows:
+        adj.setdefault(row["node"], []).append(row["next"])
+    frontier: set[tuple] = {(start_node, 0, (start_node,))}
+    rows: list[tuple] = []
+    for depth in range(1, max_depth + 1):
+        nxt: set[tuple] = set()
+        for node, _d, path in frontier:
+            for nb in adj.get(node, ()):
+                if nb not in path:  # cycle guard
+                    nxt.add((nb, depth, path + (nb,)))
+        if not nxt:
+            break
+        rows.extend(nxt)
+        if len(rows) > MAX_PATHS:
+            raise ValueError(
+                f"lineage traversal from {start_node!r} enumerates more "
+                f"than MAX_PATHS={MAX_PATHS} paths"
+            )
+        frontier = nxt
+    return lineage.sparkSession.createDataFrame(
+        [(n, d, list(p)) for n, d, p in rows],
+        "node string, depth int, path array<string>",
+    )
 
 
 def upstream(lineage: DataFrame, node: str, max_depth: int = 5) -> DataFrame:

@@ -270,7 +270,8 @@ def q33_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_recursive_traversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4/U3/L8 — recursive upstream traversal (reference recursive CTE
     with ARRAY path + cycle guard, ``logs/data_lineage.py:378-435``) as the
-    engine's iterative DataFrame BFS, oracle-checked against DuckDB's real
+    engine's driver-side BFS over the collected edge list (``lineage.
+    traverse``), oracle-checked against DuckDB's real
     WITH RECURSIVE on the same edge list. The DAG is derived from the
     TPC-H FK structure (customer-bucket → nation → region → world), so
     fan-out and multi-path counts are data-dependent, not hand-written."""

@@ -1422,7 +1422,7 @@ def qd37_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sql_data_warehouse_analytics_project_spark.llm import curate
 
     docs = load_table(spark, sf_dir, "documents")
-    stages = curate.curate_corpus(docs, materialize=True)
+    stages = curate.curate_corpus(docs)
     return curate.curation_report(stages)
 
 

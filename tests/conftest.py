@@ -9,7 +9,9 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the repository root (this file lives in ``<root>/tests``)
+_REPO_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_REPO_ROOT))
 
 from sql_data_warehouse_analytics_project_spark.session import get_spark
 
@@ -48,7 +50,9 @@ def spark():
     # the (in-memory) metastore forgets them, making saveAsTable fail with
     # LOCATION_ALREADY_EXISTS. The warehouse dir is pure test scratch — start
     # each session from a clean slate before the JVM pins it.
-    warehouse = os.environ.get(_WAREHOUSE_ENV, "/root/repo/spark-warehouse")
+    warehouse = os.environ.get(
+        _WAREHOUSE_ENV, str(_REPO_ROOT / "spark-warehouse")
+    )
     shutil.rmtree(Path(warehouse), ignore_errors=True)
     s = get_spark(
         "tests",
@@ -179,9 +183,10 @@ def _run_sharded(session, n: int) -> bool:
 
     cpus = os.cpu_count() or 8
     per_worker_cpus = str(max(3, cpus // len(shards)))
-    # -x/--exitfirst is stored as maxfail=1; honor any maxfail as
-    # stop-early (workers get -x, peers are terminated on first failure)
-    exitfirst = bool(session.config.getoption("maxfail", 0))
+    # -x/--exitfirst is stored as maxfail=1: only then do workers get -x
+    # and peers stop on the first failing shard. A larger --maxfail lets
+    # every shard run to completion so all failures are reported.
+    exitfirst = session.config.getoption("maxfail", 0) == 1
 
     out_dir = Path(f"/tmp/spark_graft_test_shards_{os.getpid()}")
     out_dir.mkdir(parents=True, exist_ok=True)
@@ -212,7 +217,7 @@ def _run_sharded(session, n: int) -> bool:
                 i,
                 subprocess.Popen(
                     cmd,
-                    cwd="/root/repo",
+                    cwd=str(_REPO_ROOT),
                     env=env,
                     stdout=log,
                     stderr=subprocess.STDOUT,

@@ -1,11 +1,8 @@
 """bench.py measurement-protocol invariants (no Spark session needed).
 
-The code fingerprint decides whether a bench run MERGES into the
-committed best-of-runs artifact or OVERWRITES it. Round 9's process
-defect: a docstring-only commit rotated the blob-based fingerprint, so
-the driver's single run overwrote a best-of-4 artifact. The fingerprint
-is therefore SEMANTIC — AST minus docstrings — and these tests pin that
-contract.
+The code fingerprint identifies the code a bench artifact measured. It
+is SEMANTIC — AST minus docstrings — so a docstring-only commit keeps
+it, and these tests pin that contract plus the core-count resolution.
 """
 
 from __future__ import annotations
@@ -14,8 +11,10 @@ from pathlib import Path
 
 import bench
 
-ENGINE_INIT = Path(
-    "/root/repo/sql_data_warehouse_analytics_project_spark/__init__.py"
+ENGINE_INIT = (
+    Path(bench.__file__).resolve().parent
+    / "sql_data_warehouse_analytics_project_spark"
+    / "__init__.py"
 )
 
 
@@ -97,30 +96,16 @@ def test_code_fingerprint_stable_and_docstring_insensitive(tmp_path):
     assert bench._code_fingerprint() is not None
 
 
-def test_merge_guard_requires_matching_core_count(tmp_path):
-    """A prior artifact merges only at the same (fingerprint, sf, cpus):
-    the round-11 driver's 8-core run merged 32-core minima because the
-    guard omitted the core count, flattening the scaling block."""
-    import json
+def test_cpus_from_env_else_cpu_count(monkeypatch):
+    """``SPARK_GRAFT_CPUS`` sets the core count only when it is a
+    positive integer; unset or malformed values fall back to the box's
+    ``os.cpu_count()`` instead of a hard-coded guess or a crash."""
+    import os
 
-    path = str(tmp_path / "bench_result.json")
-    art = {
-        "complete": True,
-        "code_fingerprint": "f" * 24,
-        "sf": 0.1,
-        "cpus": 32,
-        "queries": {"q01": 1.0},
-    }
-    path_obj = tmp_path / "bench_result.json"
-    path_obj.write_text(json.dumps(art))
-
-    assert bench._load_prior(path, "f" * 24, 0.1, 32) is not None
-    # a different core count must NOT merge
-    assert bench._load_prior(path, "f" * 24, 0.1, 8) is None
-    # different code or scale never merged; still true
-    assert bench._load_prior(path, "e" * 24, 0.1, 32) is None
-    assert bench._load_prior(path, "f" * 24, 0.01, 32) is None
-    # pre-cpus-field artifacts (no "cpus" key) never merge
-    del art["cpus"]
-    path_obj.write_text(json.dumps(art))
-    assert bench._load_prior(path, "f" * 24, 0.1, 32) is None
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert bench._cpus() == (os.cpu_count() or 1)
+    for bad in ("", "four", "2.5", "0", "-3"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert bench._cpus() == (os.cpu_count() or 1), bad
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", " 6 ")
+    assert bench._cpus() == 6

@@ -297,3 +297,39 @@ def test_partitioned_overwrite_and_recovery_repair_partitions(spark):
         assert cat._is_view(legacy)
     finally:
         cat.drop_layers()
+
+
+def test_append_after_half_published_repoint_lands_in_view(spark):
+    """A publish that stopped after its ``ALTER VIEW … AS`` repoint, with
+    a generation property on the view still naming the previous
+    generation, must not route later appends into that invisible
+    generation: the view definition alone says which generation is live."""
+    cat = Catalog(spark, prefix="halfpub_")
+    cat.drop_layers()
+    cat.create_layers()
+    try:
+        q = cat.qualified("silver", "t")
+        cat.create_table(
+            "silver", "t", spark.createDataFrame([], "k int").schema,
+            medallion_metadata=False, comment="kept across repoints",
+        )
+        cat.append(spark.createDataFrame([(1,)], "k int"), "silver", "t")
+        g1 = f"{cat.db('silver')}.t__g000001"
+        g2 = f"{cat.db('silver')}.t__g000002"
+        spark.sql(f"ALTER VIEW {q} SET TBLPROPERTIES "
+                  f"('spark_graft.generation'='{g1}')")
+        spark.createDataFrame([(2,)], "k int").write.format(
+            "parquet").saveAsTable(g2)
+        spark.sql(f"ALTER VIEW {q} AS SELECT * FROM {g2}")
+
+        assert cat.resolve_table("silver", "t") == g2
+        cat.append(spark.createDataFrame([(3,)], "k int"), "silver", "t")
+        assert sorted(r.k for r in spark.table(q).collect()) == [2, 3]
+        # a regular overwrite repoints with one statement and keeps the
+        # view's comment
+        cat.overwrite(spark.createDataFrame([(4,)], "k int"), "silver", "t")
+        assert [r.k for r in cat.read("silver", "t").collect()] == [4]
+        assert cat.resolve_table("silver", "t").endswith("t__g000003")
+        assert spark.catalog.getTable(q).description == "kept across repoints"
+    finally:
+        cat.drop_layers()

@@ -16,7 +16,6 @@ from sql_data_warehouse_analytics_project_spark.operators import (
     aggregates,
     joins,
     relational,
-    setops,
     windows,
 )
 
@@ -151,20 +150,6 @@ def test_cohort_retention_shape(spark):
     assert by_period[0].metric_value == 2
     assert by_period[1].metric_value == 1
     assert by_period[1].retention_pct == 50.0
-
-
-def test_iterate_fixpoint(spark):
-    edges = spark.createDataFrame([Row(src=1, dst=2), Row(src=2, dst=3), Row(src=3, dst=4)])
-    base = spark.createDataFrame([Row(node=1)])
-
-    def step(frontier, depth):
-        return (
-            edges.join(frontier, edges.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-        )
-
-    out = setops.iterate(base, step, max_depth=10, checkpoint_every=2)
-    assert sorted(r.node for r in out.collect()) == [1, 2, 3, 4]
 
 
 def test_row_hash_order_independent_and_null_safe(spark):
@@ -504,20 +489,6 @@ def test_declared_constraints_enforced_on_write(spark, tmp_path):
         assert cat.read("silver", "accounts").count() == 2
     finally:
         cat.drop_layers()
-
-
-def test_iterate_without_frontier_coalesce(spark):
-    """frontier_partitions=None keeps the step's native parallelism."""
-    from sql_data_warehouse_analytics_project_spark.operators import setops
-
-    base = spark.createDataFrame([(0,)], "n int")
-    out = setops.iterate(
-        base,
-        lambda f, d: f.selectExpr("n + 1 AS n").filter("n < 4"),
-        max_depth=10,
-        frontier_partitions=None,
-    )
-    assert sorted(r.n for r in out.collect()) == [0, 1, 2, 3]
 
 
 def test_validate_unique_rule_is_null_safe(spark):

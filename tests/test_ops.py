@@ -727,15 +727,11 @@ def test_record_metric_clamps_unrepresentable_values(spark):
         cat.drop_layers()
 
 
-def test_traverse_driver_and_distributed_parity(spark):
-    """The lineage driver-BFS fast path (round-12: the q34 engine's
-    `driver_max_edges` pattern) must produce the exact row set of the
-    distributed fixpoint loop — cycle guard, per-depth distinct, and
-    depth short-circuit included."""
-    from sql_data_warehouse_analytics_project_spark.plans import (
-        lineage as lin,
-    )
-
+def test_traverse_expected_rows_and_caps(spark, monkeypatch):
+    """The lineage BFS emits one row per distinct cycle-free path up to
+    ``max_depth``: the cycle back to the start is cut by the path guard,
+    the duplicate edge yields one row, and the depth bound drops nodes
+    only reachable deeper. Graphs or walks above the module caps raise."""
     edges = spark.createDataFrame(
         [
             ("a", "t1", "b", "t2"),
@@ -752,20 +748,23 @@ def test_traverse_driver_and_distributed_parity(spark):
     def norm(df):
         return sorted((r.node, r.depth, tuple(r.path)) for r in df.collect())
 
-    fast = lin.traverse(edges, "d.t4", "upstream", max_depth=4)
-    slow = lin.traverse(
-        edges, "d.t4", "upstream", max_depth=4, driver_max_edges=0
-    )
-    assert norm(fast) == norm(slow) and norm(fast)
+    # depth 4 would revisit d.t4: the cycle guard ends the walk at 3
+    assert norm(lin.traverse(edges, "d.t4", "upstream", max_depth=4)) == [
+        ("a.t1", 3, ("d.t4", "c.t3", "b.t2", "a.t1")),
+        ("a.t4", 2, ("d.t4", "c.t3", "a.t4")),
+        ("b.t2", 2, ("d.t4", "c.t3", "b.t2")),
+        ("c.t3", 1, ("d.t4", "c.t3")),
+    ]
+    # d.t4 is reachable downstream at depth 3, beyond the bound of 2
+    assert norm(lin.traverse(edges, "a.t1", "downstream", max_depth=2)) == [
+        ("b.t2", 1, ("a.t1", "b.t2")),
+        ("c.t3", 2, ("a.t1", "b.t2", "c.t3")),
+    ]
+    assert norm(lin.traverse(edges, "x.none", "upstream")) == []
 
-    fd = lin.traverse(edges, "a.t1", "downstream", max_depth=3)
-    sd = lin.traverse(
-        edges, "a.t1", "downstream", max_depth=3, driver_max_edges=0
-    )
-    assert norm(fd) == norm(sd) and norm(fd)
-
-    # the mid-walk row-cap overflow falls back to the distributed loop
-    capped = lin.traverse(
-        edges, "d.t4", "upstream", max_depth=4, driver_max_rows=1
-    )
-    assert norm(capped) == norm(slow)
+    monkeypatch.setattr(lin, "MAX_PATHS", 2)
+    with pytest.raises(ValueError, match="MAX_PATHS=2"):
+        lin.traverse(edges, "d.t4", "upstream", max_depth=4)
+    monkeypatch.setattr(lin, "MAX_EDGES", 4)
+    with pytest.raises(ValueError, match="MAX_EDGES=4"):
+        lin.traverse(edges, "d.t4", "upstream", max_depth=4)

@@ -129,3 +129,47 @@ def test_bloom_contamination_prefilter_sound_vs_exact(spark):
     # multiplicity convention: doc 0 has 2 shingles of length 5? no — 6
     # tokens → 2 occurrences
     assert rows[0]["n_shingles"] == 2
+
+
+def test_bloom_duplicated_terms_have_no_false_negatives(spark):
+    """Soundness must not depend on the input being distinct: a probe
+    term repeated many times, and a training doc repeating an eval
+    shingle, are still reported possibly-present."""
+    inserted = [f"in{i}" for i in range(50)]
+    bloom = S.bloom_build(_terms(spark, inserted * 3), "term", k=4, mbits=1024)
+    probes = inserted * 4 + ["out0", "out0"]
+    got = S.bloom_possibly_contains(
+        bloom, _terms(spark, probes), "term", k=4, mbits=1024
+    ).collect()
+    assert len(got) == 51  # one row per distinct term
+    assert all(r["possibly_present"] for r in got if r["term"] in inserted)
+
+    rep = "alpha beta gamma delta epsilon"
+    train = spark.createDataFrame(
+        [(0, f"{rep} {rep} {rep}"), (1, "no shared words in this one at all")],
+        "doc_id bigint, text string",
+    )
+    evals = spark.createDataFrame(
+        [(100, rep), (101, rep)], "doc_id bigint, text string"
+    )
+    rows = {r["doc_id"]: r for r in S.bloom_contamination_prefilter(
+        train, evals, "doc_id", "text", n=5, k=4, mbits=1024).collect()}
+    # 15 tokens -> 11 shingle occurrences, 3 of them the eval shingle
+    assert rows[0]["n_shingles"] == 11
+    assert rows[0]["n_bloom_hits"] >= 3 and rows[0]["possibly_contaminated"]
+
+
+def test_bloom_rejects_filters_above_literal_mask_cap(spark):
+    too_big = S._BLOOM_EXPR_MAX_BITS + 1
+    terms = _terms(spark, ["a"])
+    bloom = S.bloom_build(terms, "term", mbits=4096)
+    with pytest.raises(ValueError, match="_BLOOM_EXPR_MAX_BITS"):
+        S.bloom_build(terms, "term", mbits=too_big)
+    with pytest.raises(ValueError, match="_BLOOM_EXPR_MAX_BITS"):
+        S.bloom_possibly_contains(bloom, terms, "term", mbits=too_big)
+    with pytest.raises(ValueError, match="_BLOOM_EXPR_MAX_BITS"):
+        S.bloom_contamination_prefilter(
+            terms.withColumnRenamed("term", "text").withColumn("id", F.lit(1)),
+            terms.withColumnRenamed("term", "text"),
+            "id", mbits=too_big,
+        )

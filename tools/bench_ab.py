@@ -37,7 +37,6 @@ def _run_pass(code_dir: str, out_path: str, *, sf_dir: str, queries: str | None)
         os.environ,
         SPARK_GRAFT_BENCH_PASSES="1",
         SPARK_GRAFT_BENCH_OUT=out_path,
-        SPARK_GRAFT_BENCH_KEEP_BEST="0",  # merging is this tool's job
         SPARK_GRAFT_SF_DIR=sf_dir,
     )
     if queries:
