@@ -28,6 +28,13 @@ Design notes for comparability across rounds:
   else ``os.cpu_count()``; the session runs on exactly that many cores.
 - Each run stands alone: nothing merges with a previous artifact, so
   every number comes from the code and box of this run.
+- Each timed query runs inside ``ops.spark_metrics.capture``, and
+  ``query_work`` in the artifact records, per key and from the final
+  pass, where its time went: ``build_s`` (until the query function
+  returned its DataFrame), Spark ``jobs``/``stages``/``tasks``, executor
+  ``task_s``, shuffle read/write MB and spill MB. The status-store lookup
+  runs after the end timestamp, outside the timed window. To profile a
+  few keys: ``SPARK_GRAFT_BENCH_QUERIES=k1,k2 python bench.py``.
 - A subset of ``queries()`` is excluded from the BENCH set (still in the
   correctness gate): the md5-portable oracle twins (qd13/14/15/17/18/20 —
   intentionally slow, exist only so DuckDB can replay the math) and two of
@@ -45,6 +52,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from sql_data_warehouse_analytics_project_spark.ops.spark_metrics import capture  # noqa: E402
 from sql_data_warehouse_analytics_project_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -105,9 +113,15 @@ BENCH_EXCLUDE = {
 # times per pass and record the MEDIAN, so one slow scheduling window
 # cannot define the key in any single run.
 BENCH_VOLATILE = {"qd07_embedding_dupes"}
-_VOLATILE_REPEATS = int(
-    os.environ.get("SPARK_GRAFT_BENCH_VOLATILE_REPEATS", "3")
-)
+_VOLATILE_REPEATS = 3
+
+# 3 passes: per-query best-of-N is the steady-state estimator, and the
+# measured single-core VM drift (calibration swinging 0.35→0.89 WITHIN
+# one run, round 4) poisons adjacent queries for a whole pass — a third
+# pass costs ~1 steady total and halves the odds a slow window defines
+# a query's "best". No further pass starts after half the budget.
+_PASSES = 3
+_BUDGET_S = 900.0
 
 _RESULT_PATH = os.environ.get(
     "SPARK_GRAFT_BENCH_OUT",
@@ -217,6 +231,31 @@ def _cpu_calibration() -> float:
     return round(time.time() - t0, 3)
 
 
+def _run_query(spark, name: str, fn, sf_dir: str) -> "tuple[float, dict]":
+    """Time one query end to end through a noop sink; returns its wall
+    seconds and its ``query_work`` record (module docstring)."""
+    with capture(spark, f"bench:{name}") as work:
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t_build = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        t_end = time.time()
+
+    def total(*keys: str) -> float:
+        return sum(work.get(k, (0.0, ""))[0] for k in keys)
+
+    return t_end - t0, {
+        "build_s": round(t_build - t0, 3),
+        "jobs": int(total("jobs")),
+        "stages": int(total("n_stages")),
+        "tasks": int(total("tasks")),
+        "task_s": round(total("task_time"), 3),
+        "shuffle_read_mb": round(total("shuffle_read_mb"), 3),
+        "shuffle_write_mb": round(total("shuffle_write_mb"), 3),
+        "spill_mb": round(total("spill_memory_mb", "spill_disk_mb"), 3),
+    }
+
+
 def _write_partial(out: dict) -> None:
     tmp = _RESULT_PATH + ".tmp"
     with open(tmp, "w") as fh:
@@ -234,13 +273,6 @@ def main() -> None:
 
     calib = _cpu_calibration()
     start = time.time()
-    # 3 passes: per-query best-of-N is the steady-state estimator, and the
-    # measured single-core VM drift (calibration swinging 0.35→0.89 WITHIN
-    # one run, round 4) poisons adjacent queries for a whole pass — a third
-    # pass costs ~1 steady total and halves the odds a slow window defines
-    # a query's "best". The half-budget guard still bounds the worst case.
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
 
     cpus = _cpus()
     spark = get_spark(
@@ -251,7 +283,7 @@ def main() -> None:
         for name, fn in entrymod.queries().items()
         if name not in BENCH_EXCLUDE
     }
-    # targeted subset (A/B runs, quick local iteration): comma list of keys
+    # targeted subset (profiling, quick local iteration): comma list of keys
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if subset:
         want = {s.strip() for s in subset.split(",") if s.strip()}
@@ -267,6 +299,7 @@ def main() -> None:
         "value": None,
         "unit": "sec",
         "queries": {},
+        "query_work": {},
         "passes": 0,
         "sf": sf_val,
         "cpus": cpus,
@@ -374,27 +407,26 @@ def main() -> None:
         except Exception:  # noqa: BLE001
             pass
 
-    for _ in range(max(n_passes, 1)):
+    for _ in range(_PASSES):
         pass_calibs.append(_cpu_calibration())
         timings: dict[str, float] = {}
         for name, fn in qs.items():
             reps = _VOLATILE_REPEATS if name in BENCH_VOLATILE else 1
-            ts = []
-            for _r in range(max(reps, 1)):
+            runs = []
+            for _r in range(reps):
                 _purge_context()
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                ts.append(time.time() - t0)
-            ts.sort()
-            timings[name] = round(ts[len(ts) // 2], 3)
+                runs.append(_run_query(spark, name, fn, sf_dir))
+            runs.sort(key=lambda run: run[0])
+            wall, work = runs[len(runs) // 2]
+            timings[name] = round(wall, 3)
+            out["query_work"][name] = work
             _record(passes + [timings])
             if not passes:
                 out["cold_total"] = round(sum(timings.values()), 2)
             _write_partial(out)
         passes.append(timings)
         # never let a repeat pass push us past the harness's patience
-        if time.time() - start > budget_s / 2:
+        if time.time() - start > _BUDGET_S / 2:
             break
 
     _record(passes)

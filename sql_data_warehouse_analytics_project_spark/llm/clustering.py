@@ -33,6 +33,10 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: graphs with at most this many raw pair rows resolve on the driver
+#: (union-find); larger ones take the distributed label propagation
+DRIVER_MAX_EDGES = 1_000_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -40,7 +44,6 @@ def connected_components(
     dst: str = "id_b",
     *,
     max_iter: int = 25,
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Resolve the undirected graph in ``edges`` to components.
 
@@ -51,7 +54,7 @@ def connected_components(
     ``max_iter`` bounds the label-propagation rounds (diameter bound);
     convergence short-circuits as soon as a round changes no label.
 
-    Graphs at or under ``driver_max_edges`` raw pair rows (known for free
+    Graphs at or under :data:`DRIVER_MAX_EDGES` raw pair rows (known for free
     — the pair list is materialized anyway) resolve with union-find on
     the driver: near-dup pair sets are typically tiny next to the corpus,
     and the distributed loop's cost is per-round JOB overhead, not data,
@@ -75,10 +78,10 @@ def connected_components(
     # path and the distributed min-propagation path the SAME edge set: the
     # fast path would otherwise raise comparing None while the distributed
     # path silently ignored such rows.
-    # lazy: the driver_max_edges count() is a full scan, so it doubles as
+    # lazy: the DRIVER_MAX_EDGES count() is a full scan, so it doubles as
     # the materializing action (one job instead of two)
     e0 = e0.localCheckpoint(eager=False)
-    if e0.count() <= driver_max_edges:
+    if e0.count() <= DRIVER_MAX_EDGES:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -89,7 +92,7 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        # bounded by driver_max_edges rows → one collect job (a
+        # bounded by DRIVER_MAX_EDGES rows → one collect job (a
         # toLocalIterator here costs one round-trip per partition)
         for row in e0.collect():
             u, v = row.u, row.v

@@ -192,7 +192,7 @@ def train_bpe(
     # Word-type vocabularies at or under ``driver_max_types`` rows (known
     # for free — the collapse is materialized anyway) train with the
     # classic in-memory merge loop on the driver (the
-    # ``connected_components`` driver_max_edges pattern): after the one
+    # ``clustering.DRIVER_MAX_EDGES`` pattern): after the one
     # corpus-sized collapse, BPE's working set is the TYPE vocabulary —
     # bounded by the language, not the corpus (this is why every
     # production BPE trainer is single-machine past the word count) — and

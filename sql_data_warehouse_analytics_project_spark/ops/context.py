@@ -37,7 +37,7 @@ import threading
 from collections import defaultdict
 import time
 import traceback
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -474,13 +474,13 @@ class RunContext:
         """Shared capture core for catalog writes (:meth:`begin_write`)
         and path-dataset writes (:meth:`begin_path_write`): plan-derived
         lineage edges, an ``observe``-ridden row count, wall-clock write
-        time, and — new with the status-store telemetry — the executor
-        metrics of the stages the write ran (shuffle read/write bytes,
-        task time, spill; ``ops/spark_metrics.py``). The executor rows
-        share one ``capture:<id>`` tag in ``additional_context`` with the
-        write's time/row rows, so ``analysis.identify_bottlenecks`` can
-        correlate a slow write with its shuffle volume and call it
-        SHUFFLE_HEAVY instead of merely SLOW_EXECUTION."""
+        time, and the Spark work the write ran (jobs, stages, tasks,
+        shuffle read/write, task time, spill — ``ops/spark_metrics.py``).
+        The Spark-work rows share one ``capture:<id>`` tag in
+        ``additional_context`` with the write's time/row rows, so
+        ``analysis.identify_bottlenecks`` can correlate a slow write with
+        its shuffle volume and call it SHUFFLE_HEAVY instead of merely
+        SLOW_EXECUTION."""
         from pyspark.sql import Observation
 
         from sql_data_warehouse_analytics_project_spark.ops import spark_metrics
@@ -500,18 +500,16 @@ class RunContext:
         logs_db = self.catalog.db("logs")
         obs = Observation()
         instrumented = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # the capture id doubles as the Spark JOB GROUP for the bracketed
-        # write, so executor-metric attribution is exact even when other
-        # threads interleave jobs on this SparkContext (job-group scoping;
-        # the stage-id snapshot stays as the fallback window)
+        # the capture stays open from here until the caller's finish(),
+        # so the write's jobs run under its job group
         corr = f"capture:{_new_id()}"
-        prev_group = spark_metrics.begin_capture_group(self.spark, corr)
-        stage0 = spark_metrics.latest_stage_id(self.spark)
+        bracket = ExitStack()
+        work = bracket.enter_context(spark_metrics.capture(self.spark, corr))
         t0 = time.time()
 
         def finish() -> None:
-            spark_metrics.end_capture_group(self.spark, prev_group)
             elapsed = time.time() - t0
+            bracket.close()  # restores the job group and fills ``work``
             try:
                 rows = int(obs.get["rows"])
             except Exception:  # noqa: BLE001 — metrics are best-effort
@@ -554,17 +552,7 @@ class RunContext:
                 f"{metric_prefix}.write_time", elapsed, "seconds",
                 context=corr,
             )
-            executor = spark_metrics.stage_metrics_for_group(
-                self.spark, corr, stage0
-            )
-            if executor is not None:
-                for suffix, value in executor.items():
-                    self.record_metric(
-                        f"{metric_prefix}.{suffix}",
-                        value,
-                        spark_metrics.metric_unit(suffix),
-                        context=corr,
-                    )
+            self._record_work(metric_prefix, work, context=corr)
 
         return instrumented, finish
 
@@ -609,25 +597,34 @@ class RunContext:
             },
         )
 
-    @contextmanager
-    def measure(
+    def _record_work(
         self,
-        name: str,
+        prefix: str,
+        work: dict,
         *,
+        context: str,
         process_log_id: int | None = None,
-        executor_metrics: bool = True,
-    ):
+    ) -> None:
+        """Record a :func:`spark_metrics.capture` result as one
+        ``<prefix>.<key>`` row per key, in the key's own unit."""
+        for key, (value, unit) in work.items():
+            self.record_metric(
+                f"{prefix}.{key}", value, unit,
+                process_log_id=process_log_id, context=context,
+            )
+
+    @contextmanager
+    def measure(self, name: str, *, process_log_id: int | None = None):
         """Context-managed timing (+ psutil cpu/mem when available,
-        performance_monitor.py:273-322), now ALSO recording the
-        status-store executor metrics of the Spark stages the block ran
-        (shuffle bytes, task time, spill — ``ops/spark_metrics.py``),
-        tagged with one ``capture:<id>`` so
+        performance_monitor.py:273-322), ALSO recording the Spark work the
+        block ran (jobs, stages, tasks, shuffle bytes, task time, spill —
+        ``ops/spark_metrics.py``), tagged with one ``capture:<id>`` so
         ``analysis.identify_bottlenecks`` can call a slow measured block
         SHUFFLE_HEAVY. Attribution is job-group-exact (the block's jobs
         run under the capture's group; interleaved jobs from other
         threads are excluded — a nested capture attributes its stages to
-        ITS OWN tag, not this block's); ``executor_metrics=False`` opts
-        out for blocks that run no Spark jobs."""
+        ITS OWN tag, not this block's); a block that runs no Spark job
+        records only its timing rows."""
         from sql_data_warehouse_analytics_project_spark.ops import spark_metrics
 
         try:
@@ -639,18 +636,14 @@ class RunContext:
         except Exception:  # noqa: BLE001 — psutil optional
             proc = None
         corr = f"capture:{_new_id()}"
-        prev_group = None
-        stage0 = -1
-        if executor_metrics:
-            prev_group = spark_metrics.begin_capture_group(self.spark, corr)
-            stage0 = spark_metrics.latest_stage_id(self.spark)
+        bracket = ExitStack()
+        work = bracket.enter_context(spark_metrics.capture(self.spark, corr))
         t0 = time.time()
         try:
             yield
         finally:
             elapsed = time.time() - t0
-            if executor_metrics:
-                spark_metrics.end_capture_group(self.spark, prev_group)
+            bracket.close()  # restores the job group and fills ``work``
             self.record_metric(f"{name}.execution_time", elapsed, "seconds",
                                process_log_id=process_log_id, context=corr)
             if proc is not None:
@@ -665,19 +658,9 @@ class RunContext:
                     (proc.memory_info().rss - mem0) / 1e6,
                     "MB", process_log_id=process_log_id, context=corr,
                 )
-            if executor_metrics:
-                stages = spark_metrics.stage_metrics_for_group(
-                    self.spark, corr, stage0
-                )
-                if stages is not None:
-                    for suffix, value in stages.items():
-                        self.record_metric(
-                            f"{name}.{suffix}",
-                            value,
-                            spark_metrics.metric_unit(suffix),
-                            process_log_id=process_log_id,
-                            context=corr,
-                        )
+            self._record_work(
+                name, work, process_log_id=process_log_id, context=corr
+            )
 
     # -- lifecycle wrapper --------------------------------------------------
 

@@ -5,22 +5,19 @@ reference anchor: ``logs/performance_monitor.py:184-334``, whose
 MetricsCollector samples driver-process psutil numbers that say nothing
 about where a distributed job actually spent its time).
 
-Spark's ``AppStatusStore`` (the store behind the UI and the REST API —
-fed by the always-on ``AppStatusListener``, so reading it costs nothing
-extra) keeps per-stage totals of exactly the quantities that
-distinguish a shuffle-bound stage from a slow one: shuffle read/write
-bytes, executor task time, and spill. This module brackets a
-materialization with a per-capture Spark JOB GROUP and aggregates the
-stages of exactly the jobs that carried the group — so two captures
-interleaving on one SparkContext (the parallel bronze loader threads)
-never cross-attribute each other's stages. The job group rides Spark's
-thread-local ``spark.jobGroup.id`` property (PySpark pins Python
+:func:`capture` is the engine's one Spark-work counter: ``RunContext``
+(``measure()`` blocks and auto-captured writes) and ``bench.py`` both
+call it. It runs a block under its own Spark JOB GROUP and, on exit,
+totals the stages of exactly the jobs that carried the group — so two
+captures interleaving on one SparkContext (the parallel bronze loader
+threads) never cross-attribute each other's stages. The job group rides
+Spark's thread-local ``spark.jobGroup.id`` property (PySpark pins Python
 threads to JVM threads, so a group set on the capturing thread tags
-precisely that thread's jobs). When group information is unavailable
-the aggregation falls back to the stage-id window (stages submitted
-after the pre-capture snapshot) — the best-effort attribution every
-wall-clock profiler carries. Extraction failures degrade to ``None``;
-telemetry must never break a write.
+precisely that thread's jobs). Jobs are looked up by group and stages by
+id, so Python touches only the block's own jobs and stages, never every
+job and stage the store retains. A block that ran no job of its own records nothing, and
+any extraction failure does the same: telemetry must never break a
+write.
 
 Units: byte-valued stage totals are recorded in MB (1e6 bytes), not raw
 bytes — the ``performance_metrics`` value column is DECIMAL(15,4)
@@ -31,7 +28,10 @@ resolution.
 
 from __future__ import annotations
 
-#: StageData accessor -> (metric suffix, unit, scale) for the totals a
+import itertools
+from contextlib import contextmanager
+
+#: StageData accessor -> (metric key, unit, scale) for the totals a
 #: bottleneck analysis needs; executorRunTime is milliseconds in the
 #: store; byte counters record as MB (see module docstring)
 _STAGE_FIELDS = (
@@ -46,143 +46,80 @@ _STAGE_FIELDS = (
 #: and ``JobData.jobGroup`` reports).
 _JOB_GROUP_PROP = "spark.jobGroup.id"
 
+#: makes every capture's job group unique, so a tag reused across
+#: captures (a bench key timed once per pass) never counts earlier jobs
+_seq = itertools.count()
 
-def _stage_iter(spark):
-    """Iterate the JVM ``v1.StageData`` rows of every stage attempt the
-    status store retains (bounded by ``spark.ui.retainedStages``; recent
-    stages — the ones a just-finished write cares about — are always
-    present). Raises on any py4j surprise; callers wrap."""
+
+@contextmanager
+def capture(spark, tag: str):
+    """Run the block's Spark jobs under a job group named after ``tag``
+    and yield a dict that is filled on exit with ``{key: (value, unit)}``:
+    ``jobs``, ``tasks``, ``n_stages`` and the ``_STAGE_FIELDS`` totals
+    over the COMPLETE stages of the block's jobs (SKIPPED stages reused
+    an earlier stage's output). The dict stays empty when no job carried
+    the group — a block that ran no Spark job, or any status-store
+    failure — so callers record nothing rather than zeros that would
+    skew per-metric percentiles.
+
+    The thread's previous job group is restored on exit, so a nested
+    capture attributes its own stages to ITS tag; the outer block
+    deliberately does not double-count them."""
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    gw = sc._gateway
-    jvm = sc._jvm
-    # stageList(statuses, details, withSummaries, unsortedQuantiles, taskStatus)
-    # — empty statuses list = all stages; no task details / summaries
-    stages = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        gw.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    it = stages.iterator()
-    while it.hasNext():
-        yield it.next()
-
-
-def _group_stage_ids(spark, group: str) -> "set[int] | None":
-    """Stage ids of every job the status store attributes to ``group``
-    (None when no job carries it — group info unavailable or the jobs
-    were evicted), via ``AppStatusStore.jobsList``. ``JobData.jobGroup``
-    is a scala Option and ``stageIds`` a scala Seq; both iterate fine
-    over py4j (probed on PySpark 4.1)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm = sc._jvm
-    jobs = store.jobsList(jvm.java.util.ArrayList())
-    ids: set[int] = set()
-    found = False
-    it = jobs.iterator()
-    while it.hasNext():
-        j = it.next()
-        grp = j.jobGroup()
-        if not grp.isDefined() or grp.get() != group:
-            continue
-        found = True
-        sit = j.stageIds().iterator()
-        while sit.hasNext():
-            ids.add(int(sit.next()))
-    return ids if found else None
-
-
-def begin_capture_group(spark, tag: str) -> "str | None":
-    """Tag the CURRENT thread's subsequent Spark jobs with ``tag`` (the
-    capture's job group). Returns the previous group so nested captures
-    restore it — a nested capture attributes its own stages to ITS tag;
-    the outer bracket deliberately does not double-count them. Failures
-    return the sentinel unchanged-None (telemetry is best-effort)."""
-    sc = spark.sparkContext
+    group = f"{tag}#{next(_seq)}"
+    work: dict[str, tuple[float, str]] = {}
     try:
         prev = sc.getLocalProperty(_JOB_GROUP_PROP)
-        sc.setLocalProperty(_JOB_GROUP_PROP, tag)
-        return prev
+        sc.setLocalProperty(_JOB_GROUP_PROP, group)
     except Exception:  # noqa: BLE001 — telemetry is best-effort
-        return None
-
-
-def end_capture_group(spark, previous: "str | None") -> None:
-    """Restore the thread's job group to what :func:`begin_capture_group`
-    saw (None clears it)."""
+        prev = None
     try:
-        spark.sparkContext.setLocalProperty(_JOB_GROUP_PROP, previous)
-    except Exception:  # noqa: BLE001 — telemetry is best-effort
-        pass
+        yield work
+    finally:
+        try:
+            sc.setLocalProperty(_JOB_GROUP_PROP, prev)
+            work.update(_group_work(sc, group))
+        except Exception:  # noqa: BLE001 — telemetry is best-effort
+            pass
 
 
-def latest_stage_id(spark) -> int:
-    """The highest stage id submitted so far (-1 before any job) — the
-    fallback-window snapshot to take BEFORE a write; returns -1 on
-    extraction failure so a broken snapshot over-attributes rather than
-    raises."""
-    try:
-        return max((s.stageId() for s in _stage_iter(spark)), default=-1)
-    except Exception:  # noqa: BLE001 — telemetry is best-effort
-        return -1
-
-
-def _aggregate(spark, keep) -> "dict[str, float] | None":
-    """Sum ``_STAGE_FIELDS`` over every COMPLETE stage ``keep`` accepts,
-    in final units; ``None`` when nothing matched (a metadata-only
-    write) — callers record nothing rather than zeros that would skew
-    per-metric percentiles."""
-    totals = {suffix: 0.0 for _, suffix, _, _ in _STAGE_FIELDS}
-    n = 0
-    for s in _stage_iter(spark):
-        if not keep(s):
+def _group_work(sc, group: str) -> "dict[str, tuple[float, str]]":
+    """Totals of the jobs that ran under ``group`` (empty when none did).
+    Waits for the listener bus first, so the status store has seen the
+    block's last stage complete."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    if not job_ids:
+        return {}
+    store = jsc.statusStore()
+    stage_ids: set[int] = set()
+    for jid in job_ids:
+        it = store.job(jid).stageIds().iterator()
+        while it.hasNext():
+            stage_ids.add(int(it.next()))
+    # stageData(id, details, taskStatus, withSummaries, quantiles) lists a
+    # stage's attempts, oldest first, and is empty for a stage the store
+    # evicted (SKIPPED ones go first); lastStageAttempt raises there, and
+    # a py4j exception costs several lookups
+    no_status = sc._jvm.java.util.ArrayList()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    totals = dict.fromkeys((key for _, key, _, _ in _STAGE_FIELDS), 0.0)
+    n_stages = tasks = 0
+    for sid in stage_ids:
+        attempts = store.stageData(sid, False, no_status, False, no_quantiles)
+        if attempts.isEmpty():
             continue
+        s = attempts.last()
         if str(s.status()) != "COMPLETE":
-            continue  # SKIPPED reused an earlier stage's output; ACTIVE isn't ours
-        n += 1
-        for accessor, suffix, _unit, scale in _STAGE_FIELDS:
-            totals[suffix] += float(getattr(s, accessor)()) * scale
-    if n == 0:
-        return None
-    totals["n_stages"] = float(n)
-    return totals
+            continue
+        n_stages += 1
+        tasks += s.numCompleteTasks()
+        for accessor, key, _unit, scale in _STAGE_FIELDS:
+            totals[key] += float(getattr(s, accessor)()) * scale
+    work = {key: (totals[key], unit) for _, key, unit, _ in _STAGE_FIELDS}
+    work["n_stages"] = (float(n_stages), "count")
+    work["jobs"] = (float(len(job_ids)), "count")
+    work["tasks"] = (float(tasks), "count")
+    return work
 
-
-def stage_metrics_since(spark, after_stage_id: int) -> "dict[str, float] | None":
-    """Window attribution: aggregate executor metrics over every COMPLETE
-    stage with ``stageId > after_stage_id`` — exact only when nothing
-    else runs on the SparkContext; the fallback when group attribution
-    is unavailable."""
-    try:
-        return _aggregate(spark, lambda s: s.stageId() > after_stage_id)
-    except Exception:  # noqa: BLE001 — telemetry is best-effort
-        return None
-
-
-def stage_metrics_for_group(
-    spark, group: str, after_stage_id: int
-) -> "dict[str, float] | None":
-    """Group-exact attribution: aggregate executor metrics over the
-    stages of the jobs that ran under ``group`` (set by
-    :func:`begin_capture_group`) — immune to interleaved jobs from other
-    threads. Falls back to :func:`stage_metrics_since` when the store
-    reports no job for the group (e.g. thread pinning off, or
-    ``spark.ui.retainedJobs`` evicted them before the capture closed)."""
-    try:
-        ids = _group_stage_ids(spark, group)
-        if ids is None:
-            return stage_metrics_since(spark, after_stage_id)
-        return _aggregate(spark, lambda s: s.stageId() in ids)
-    except Exception:  # noqa: BLE001 — telemetry is best-effort
-        return stage_metrics_since(spark, after_stage_id)
-
-
-def metric_unit(suffix: str) -> str:
-    """The recording unit for a :func:`stage_metrics_since` key."""
-    for _, s, unit, _ in _STAGE_FIELDS:
-        if s == suffix:
-            return unit
-    return "count"

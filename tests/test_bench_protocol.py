@@ -1,8 +1,10 @@
-"""bench.py measurement-protocol invariants (no Spark session needed).
+"""bench.py measurement-protocol invariants.
 
 The code fingerprint identifies the code a bench artifact measured. It
 is SEMANTIC — AST minus docstrings — so a docstring-only commit keeps
-it, and these tests pin that contract plus the core-count resolution.
+it, and these tests pin that contract, the core-count resolution, and
+the schema of the per-key ``query_work`` record (the one test here that
+needs a Spark session).
 """
 
 from __future__ import annotations
@@ -109,3 +111,21 @@ def test_cpus_from_env_else_cpu_count(monkeypatch):
         assert bench._cpus() == (os.cpu_count() or 1), bad
     monkeypatch.setenv("SPARK_GRAFT_CPUS", " 6 ")
     assert bench._cpus() == 6
+
+
+def test_query_work_record_schema(spark, sf_dir):
+    """One timed query yields its wall seconds and a ``query_work``
+    record with exactly the documented fields, counting the Spark work
+    the query's own jobs ran."""
+    import __spark_entry__ as entrymod
+
+    fn = entrymod.queries()["q01_filter_project"]
+    wall, rec = bench._run_query(spark, "q01_filter_project", fn, sf_dir)
+    assert set(rec) == {
+        "build_s", "jobs", "stages", "tasks", "task_s",
+        "shuffle_read_mb", "shuffle_write_mb", "spill_mb",
+    }
+    assert rec["jobs"] >= 1 and rec["stages"] >= 1
+    assert rec["tasks"] >= rec["stages"]
+    assert 0 <= rec["build_s"] <= wall
+    assert rec["task_s"] >= 0 and rec["spill_mb"] >= 0

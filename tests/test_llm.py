@@ -462,7 +462,7 @@ def test_int8_quantization_roundtrip(spark):
     assert rows[2].unit is None
 
 
-def test_connected_components_transitive_chains(spark):
+def test_connected_components_transitive_chains(spark, monkeypatch):
     from sql_data_warehouse_analytics_project_spark.llm import clustering
 
     # two clusters: a 3-chain (1-2, 2-3) and a pair (10-11); 3 never
@@ -472,13 +472,12 @@ def test_connected_components_transitive_chains(spark):
     )
     cc = {r.node: r.comp for r in clustering.connected_components(pairs).collect()}
     assert cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    # the distributed label-propagation path (driver_max_edges=0 forces
+    # the distributed label-propagation path (DRIVER_MAX_EDGES=0 forces
     # it) must produce identical labels to the union-find fast path
+    monkeypatch.setattr(clustering, "DRIVER_MAX_EDGES", 0)
     cc_dist = {
         r.node: r.comp
-        for r in clustering.connected_components(
-            pairs, driver_max_edges=0
-        ).collect()
+        for r in clustering.connected_components(pairs).collect()
     }
     assert cc_dist == cc
 
@@ -605,7 +604,7 @@ def test_bpe_pair_counts_weighted_by_word_freq(spark):
     assert counts == {"aa": 2, "ab": 3}
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     from sql_data_warehouse_analytics_project_spark.llm import clustering
 
     # 7-node path graph — needs several propagation rounds beyond the
@@ -615,12 +614,8 @@ def test_connected_components_long_chain_converges(spark):
     )
     # force the distributed path: a path graph is the worst case for
     # label propagation (needs several rounds beyond the folded-in one)
-    comp = {
-        r.node: r.comp
-        for r in clustering.connected_components(
-            pairs, driver_max_edges=0
-        ).collect()
-    }
+    monkeypatch.setattr(clustering, "DRIVER_MAX_EDGES", 0)
+    comp = {r.node: r.comp for r in clustering.connected_components(pairs).collect()}
     assert comp == {i: 1 for i in range(1, 8)}
 
 
@@ -903,7 +898,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert len(con) == 1 and con[0].containment == 1.0
 
 
-def test_connected_components_null_ids_identical_on_both_paths(spark):
+def test_connected_components_null_ids_identical_on_both_paths(spark, monkeypatch):
     """Non-numeric ids survive ``cast('long')`` as NULLs; both the driver
     union-find fast path and the distributed propagation path must drop
     such edges identically (the fast path used to raise TypeError)."""
@@ -914,10 +909,8 @@ def test_connected_components_null_ids_identical_on_both_paths(spark):
         "id_a string, id_b string",
     )
     fast = {(r.node, r.comp) for r in clustering.connected_components(pairs).collect()}
-    dist = {
-        (r.node, r.comp)
-        for r in clustering.connected_components(pairs, driver_max_edges=0).collect()
-    }
+    monkeypatch.setattr(clustering, "DRIVER_MAX_EDGES", 0)
+    dist = {(r.node, r.comp) for r in clustering.connected_components(pairs).collect()}
     # the x–5 and 7–NULL edges are dropped whole: 5 and 7 have no valid edge
     assert fast == dist == {(1, 1), (2, 1), (3, 1)}
 

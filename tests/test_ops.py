@@ -445,6 +445,8 @@ def test_auto_capture_records_executor_metrics(spark):
         tt = rows["gold.orders_by_cust.task_time"]
         assert float(tt.metric_value) > 0 and tt.metric_unit == "seconds"
         assert float(rows["gold.orders_by_cust.n_stages"].metric_value) >= 2
+        assert float(rows["gold.orders_by_cust.jobs"].metric_value) >= 1
+        assert float(rows["gold.orders_by_cust.tasks"].metric_value) >= 1
         # spill metrics exist (zero at this scale — nothing spills)
         assert "gold.orders_by_cust.spill_disk_mb" in rows
         # all rows of this write share one capture tag with write_time
@@ -696,6 +698,44 @@ def test_interleaved_captures_do_not_cross_attribute(spark):
         assert float(rows["light_block.task_time"].metric_value) < float(
             rows["heavy_block.task_time"].metric_value
         ) or float(rows["heavy_block.task_time"].metric_value) > 0
+        ctx.close()
+    finally:
+        cat.drop_layers()
+
+
+def test_idle_capture_records_no_spark_work(spark, sf_dir):
+    """A measure() block that submits no job of its own records only its
+    timing rows, even while another thread runs a shuffle to completion
+    inside the block's wall-clock window: only jobs that carried the
+    block's own job group count."""
+    import threading
+
+    cat = Catalog(spark, prefix="idlecap_")
+    cat.create_layers()
+    try:
+        ctx = RunContext(cat, created_by="idletest")
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        errs: list[Exception] = []
+
+        def busy():
+            try:
+                orders.groupBy("o_custkey").count().count()  # real shuffle
+            except Exception as e:  # noqa: BLE001 — surfaced below
+                errs.append(e)
+
+        with ctx.measure("idle_block"):
+            t = threading.Thread(target=busy)
+            t.start()
+            t.join(timeout=120)
+        assert not t.is_alive() and not errs, errs
+
+        names = {
+            r.metric_name for r in ctx.table("performance_metrics").collect()
+        }
+        assert "idle_block.execution_time" in names
+        for key in ("shuffle_write_mb", "shuffle_read_mb", "task_time",
+                    "n_stages", "jobs", "tasks"):
+            assert f"idle_block.{key}" not in names, key
         ctx.close()
     finally:
         cat.drop_layers()

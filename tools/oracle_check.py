@@ -29,7 +29,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sql_data_warehouse_analytics_project_spark.session import get_spark  # noqa: E402
 from sql_data_warehouse_analytics_project_spark.sources.readers import TABLES  # noqa: E402
