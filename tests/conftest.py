@@ -1,9 +1,13 @@
 from __future__ import annotations
 
+import atexit
+import csv
+import datetime as dt
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -14,6 +18,110 @@ _REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO_ROOT))
 
 from sql_data_warehouse_analytics_project_spark.session import get_spark
+
+# ---------------------------------------------------------------------------
+# Reference dataset. The medallion tests and the CSV-replay query keys read
+# the reference's six source CSVs under ``$SPARK_GRAFT_REFERENCE_DIR``
+# (default ``/root/reference``; see queries_medallion). When the variable
+# is unset and the default root holds no dataset, the session writes a
+# seeded stand-in with the profiled defects (SURVEY.md §1.4) from
+# ``perfbench.gen.write_sources``, points the variable at it and removes it
+# at exit. This runs in pytest_configure, before any test module is
+# imported: queries_medallion reads the root when it is first imported.
+# Shard workers inherit the variable and write nothing.
+# ---------------------------------------------------------------------------
+
+_REFERENCE_ENV = "SPARK_GRAFT_REFERENCE_DIR"
+#: Set to the stand-in's root when this session wrote it; test modules
+#: derive their expectations from its CSVs instead of the real dataset's
+#: constants.
+_STANDIN_ENV = "_SPARK_GRAFT_TEST_STANDIN"
+
+
+def _csv_records(path: str) -> list[dict]:
+    with open(path, newline="", encoding="utf-8") as fh:
+        return list(csv.DictReader(fh))
+
+
+def _is_yyyymmdd(v: str) -> bool:
+    """An 8-digit calendar date in ``yyyymmdd`` form."""
+    if len(v) != 8 or not v.isdigit():
+        return False
+    try:
+        dt.datetime.strptime(v, "%Y%m%d")
+    except ValueError:
+        return False
+    return True
+
+
+def _missing_defects(root: str) -> list[str]:
+    """The profiled defects the cleansing assertions depend on that the
+    dataset under ``root`` lacks (each check passes vacuously without its
+    defect)."""
+    crm = os.path.join(root, "datasets", "source_crm")
+    erp = os.path.join(root, "datasets", "source_erp")
+    cust = _csv_records(f"{crm}/cust_info.csv")
+    prd = _csv_records(f"{crm}/prd_info.csv")
+    sales = _csv_records(f"{crm}/sales_details.csv")
+    erp_c = _csv_records(f"{erp}/CUST_AZ12.csv")
+    loc = _csv_records(f"{erp}/LOC_A101.csv")
+    ids = [r["cst_id"].strip() for r in cust]
+    named = [r[c] for r in cust for c in ("cst_firstname", "cst_lastname")]
+    today = dt.date.today().isoformat()
+
+    def bad_sales(r) -> bool:
+        if not r["sls_sales"].strip():
+            return True
+        if not r["sls_price"].strip():
+            return False
+        return int(r["sls_sales"]) != int(r["sls_quantity"]) * int(r["sls_price"])
+
+    present = {
+        "null cst_id": "" in ids,
+        "duplicated cst_id": len(set(ids) - {""}) < len([i for i in ids if i]),
+        "padded name": any(v != v.strip() for v in named),
+        "blank cst_gndr": any(not r["cst_gndr"].strip() for r in cust),
+        "prd_end_dt before prd_start_dt": any(
+            r["prd_end_dt"].strip() and r["prd_end_dt"] < r["prd_start_dt"]
+            for r in prd
+        ),
+        "sls_sales null or not quantity*price": any(map(bad_sales, sales)),
+        "invalid sls_order_dt": any(
+            not _is_yyyymmdd(r["sls_order_dt"].strip()) for r in sales
+        ),
+        "NAS-prefixed CID": any(r["CID"].strip().startswith("NAS") for r in erp_c),
+        "future BDATE": any(r["BDATE"].strip() > today for r in erp_c),
+        "'-' in LOC_A101 CID": any("-" in r["CID"] for r in loc),
+        "US/DE country code": any(r["CNTRY"].strip() in ("US", "DE") for r in loc),
+    }
+    return [name for name, ok in present.items() if not ok]
+
+
+def pytest_configure(config):
+    """Write the stand-in reference dataset when the real one is absent."""
+    if _REFERENCE_ENV in os.environ or Path("/root/reference/datasets").is_dir():
+        return
+    import numpy as np
+
+    from perfbench import gen
+
+    root = tempfile.mkdtemp(prefix="spark_graft_reference_")
+    atexit.register(shutil.rmtree, root, True)
+    # sizes follow the SURVEY.md §1.4 profile (60,398 sales, ~18.5k
+    # customers, 397 product rows, 37 order months)
+    gen.write_sources(
+        root, np.random.default_rng([1, 2]), gen.SourceState(),
+        n_customers=18400, n_products=200, n_sales=60398, months=37,
+    )
+    missing = _missing_defects(root)
+    if missing:
+        raise RuntimeError(
+            "stand-in reference dataset lacks the profiled defects: "
+            + ", ".join(missing)
+        )
+    os.environ[_REFERENCE_ENV] = root
+    os.environ[_STANDIN_ENV] = root
+
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
