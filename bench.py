@@ -25,7 +25,8 @@ Design notes for comparability across rounds:
   every per-query time measured so far. The stdout JSON line is printed
   once, last, after spark.stop().
 - ``cpus`` is ``$SPARK_GRAFT_CPUS`` when it holds a positive integer,
-  else ``os.cpu_count()``; the session runs on exactly that many cores.
+  else the cores in the process's CPU affinity mask
+  (``session.default_cpus``); the session runs on exactly that many cores.
 - Each run stands alone: nothing merges with a previous artifact, so
   every number comes from the code and box of this run.
 - Each timed query runs inside ``ops.spark_metrics.capture``, and
@@ -53,7 +54,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sql_data_warehouse_analytics_project_spark.ops.spark_metrics import capture  # noqa: E402
-from sql_data_warehouse_analytics_project_spark.session import get_spark  # noqa: E402
+from sql_data_warehouse_analytics_project_spark.session import (  # noqa: E402
+    default_cpus as _cpus,
+    get_spark,
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -209,17 +213,6 @@ def _code_fingerprint(root: str | None = None) -> str | None:
         return h.hexdigest()[:24]
     except Exception:  # noqa: BLE001
         return None
-
-
-def _cpus() -> int:
-    """Cores the bench session runs on: ``$SPARK_GRAFT_CPUS`` when it is
-    a positive integer, else ``os.cpu_count()`` (unset or malformed
-    values fall back rather than kill the run)."""
-    try:
-        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
-    except ValueError:
-        n = 0
-    return n if n > 0 else (os.cpu_count() or 1)
 
 
 def _cpu_calibration() -> float:

@@ -80,8 +80,13 @@ def with_medallion_metadata(
 ) -> DataFrame:
     """Append the eight managed-table metadata columns. ``row_hash`` covers
     the *data* columns only (sorted by name — order-normalized like the
-    reference's sorted row dict, ``medallion/bronze.py:255-268``)."""
-    data_cols = [c for c in df.columns if c not in MEDALLION_METADATA_COLUMNS]
+    reference's sorted row dict, ``medallion/bronze.py:255-268``); the
+    ``_``-prefixed infrastructure columns (batch provenance, derived
+    partition keys) are not data."""
+    data_cols = [
+        c for c in df.columns
+        if c not in MEDALLION_METADATA_COLUMNS and not c.startswith("_")
+    ]
     now = F.current_timestamp()
     return (
         df.withColumn("created_at", now)

@@ -409,9 +409,6 @@ def _write_pending(catalog, months) -> None:
     df = catalog.spark.createDataFrame(rows, _PENDING_SCHEMA).withColumn(
         "recorded_at", F.current_timestamp()
     )
-    catalog.create_table(
-        "logs", GOLD_PENDING_TABLE, df.schema, medallion_metadata=False
-    )
     catalog.overwrite(df, "logs", GOLD_PENDING_TABLE)
 
 
@@ -424,18 +421,25 @@ def _clear_pending(catalog) -> None:
     catalog.overwrite(empty, "logs", GOLD_PENDING_TABLE)
 
 
-def _write_gold(catalog, name: str, df, *, run_context=None) -> int:
+def _write_gold(
+    catalog, name: str, df, *, run_context=None, partial: bool = False
+) -> int:
+    """Write one gold table and its lineage edges. ``partial`` replaces
+    only the ``fact_sales`` month partitions present in ``df`` and
+    returns the rebuilt row count; otherwise the whole table is replaced
+    and its row count returned."""
     from sql_data_warehouse_analytics_project_spark.catalog import (
         with_medallion_metadata,
     )
 
     managed = with_medallion_metadata(df, created_by="gold", source_system="silver")
-    parts = ["order_month"] if name == "fact_sales" else []
-    catalog.create_table(
-        "gold", name, managed.schema, medallion_metadata=False, partition_by=parts
-    )
-    catalog.overwrite(managed, "gold", name, partition_by=parts)
-    n = catalog.spark.table(catalog.qualified("gold", name)).count()
+    if partial:
+        _overwrite_fact_partitions(catalog, managed)
+        n = managed.count()
+    else:
+        parts = ["order_month"] if name == "fact_sales" else []
+        catalog.overwrite(managed, "gold", name, partition_by=parts)
+        n = catalog.spark.table(catalog.qualified("gold", name)).count()
     if run_context is not None:
         for src_layer, src_table in GOLD_INPUTS[name]:
             run_context.log_lineage(
@@ -443,68 +447,19 @@ def _write_gold(catalog, name: str, df, *, run_context=None) -> int:
                 source_table=src_table,
                 target_schema=catalog.db("gold"),
                 target_table=name,
-                transformation_logic=f"build_{name}",
+                transformation_logic=f"build_{name}"
+                + ("[incremental]" if partial else ""),
                 record_count=n,
             )
     return n
 
 
 def run_gold(catalog, *, run_context=None) -> dict[str, int]:
-    """Silver → gold star schema + KPI report views as managed tables.
-
-    Each table is computed once and PERSISTED before anything downstream
-    consumes it: the fact is built from the written dims and the reports
-    from the written fact — so the silver→dims→fact pipeline executes
-    exactly once instead of re-running per consumer, and the declared
-    lineage edges (fact←dims, reports←fact) describe what physically
-    happened."""
-    read = lambda t: catalog.read("silver", t)  # noqa: E731
-    results: dict[str, int] = {}
-
-    results["dim_customers"] = _write_gold(
-        catalog,
-        "dim_customers",
-        build_dim_customers(
-            read("crm_customers"), read("erp_customers"), read("erp_locations")
-        ),
-        run_context=run_context,
-    )
-    results["dim_products"] = _write_gold(
-        catalog,
-        "dim_products",
-        build_dim_products(read("crm_products"), read("erp_product_categories")),
-        run_context=run_context,
-    )
-    dim_customers = catalog.read("gold", "dim_customers")
-    dim_products = catalog.read("gold", "dim_products")
-
-    # The persisted fact is directory-partitioned by order month: BI
-    # queries are overwhelmingly month-scoped, and partition pruning turns
-    # them into a scan of 1/N of a 100 TB fact. Rows with an unparseable
-    # order date land in the NULL partition (still queryable, still
-    # auditable). Dims and reports stay unpartitioned — they're small.
-    fact = build_fact_sales(read("crm_sales"), dim_products, dim_customers)
-    results["fact_sales"] = _write_gold(
-        catalog,
-        "fact_sales",
-        fact.withColumn("order_month", F.trunc("order_date", "month")),
-        run_context=run_context,
-    )
-    fact_sales = catalog.read("gold", "fact_sales")
-
-    results["report_customers"] = _write_gold(
-        catalog,
-        "report_customers",
-        build_customer_report(fact_sales, dim_customers),
-        run_context=run_context,
-    )
-    results["report_products"] = _write_gold(
-        catalog,
-        "report_products",
-        build_product_report(fact_sales, dim_products),
-        run_context=run_context,
-    )
-    return results
+    """Silver → gold star schema + KPI report views as managed tables: the
+    refresh of :func:`run_gold_incremental` with every silver sales batch
+    treated as new and every gold table replaced. Records the batches it
+    applied in ``logs.gold_batch_log``. Returns ``{gold_table: rows}``."""
+    return _refresh(catalog, full=True, run_context=run_context)["tables"]
 
 
 def _overwrite_fact_partitions(catalog, df) -> None:
@@ -534,8 +489,8 @@ def run_gold_incremental(catalog, *, run_context=None) -> dict:
     Extends the silver batch ledger through gold (the reference's
     incremental-load intent, ``sql/dml.py:340-391``, carried across the
     full medallion): ``logs.gold_batch_log`` records which silver sales
-    batches (``_ingestion_batch_id`` provenance from the append-mode
-    silver refresh) are already reflected in ``gold.fact_sales``, and a
+    batches (the ``_ingestion_batch_id`` provenance every silver sales
+    row carries) are already reflected in ``gold.fact_sales``, and a
     refresh rebuilds only the ``order_month`` partitions whose inputs
     changed — at a 100 TB fact a one-batch refresh re-scans and rewrites
     one month, not every month.
@@ -568,77 +523,135 @@ def run_gold_incremental(catalog, *, run_context=None) -> dict:
     worklist into its own — so even the window where the dims are
     already swapped (and the dim diff reads "unchanged") still rebuilds
     the fact months whose surrogate keys shifted, plus the reports.
-    The ledger itself is written LAST. Falls back to the full
-    :func:`run_gold` when gold does not exist yet or silver sales lacks
-    batch provenance (built by the full ``run_silver``), seeding the
-    ledger when provenance is available.
+    The ledger itself is written LAST. When gold does not exist yet the
+    refresh builds every table, as :func:`run_gold` does (mode ``full``).
     """
-    from sql_data_warehouse_analytics_project_spark.catalog import (
-        MEDALLION_METADATA_COLUMNS,
-        with_medallion_metadata,
-    )
+    return _refresh(catalog, full=False, run_context=run_context)
+
+
+def _refresh(catalog, *, full: bool, run_context=None) -> dict:
+    """The one gold write path. ``full`` replaces every table; otherwise
+    only what the new batches and the dim changes touched."""
     from sql_data_warehouse_analytics_project_spark.medallion.silver import (
         _ledger_diff,
         _record_batches,
     )
 
-    spark = catalog.spark
     read = lambda t: catalog.read("silver", t)  # noqa: E731
     sales = read("crm_sales")
-    have_gold = all(
+    full = full or not all(
         catalog.table_exists("gold", t)
         for t in ("dim_customers", "dim_products", "fact_sales")
     )
-    if have_gold and "order_month" not in spark.table(
-        catalog.qualified("gold", "fact_sales")
-    ).columns:
-        # legacy fact without the month partition column: a partition-
-        # scoped swap has nothing to scope on — rebuild once to adopt it
-        have_gold = False
-    has_provenance = "_ingestion_batch_id" in sales.columns
-    if not have_gold or not has_provenance:
-        tables = run_gold(catalog, run_context=run_context)
-        if has_provenance:
-            batches = [
-                r[0]
-                for r in sales.filter(F.col("_ingestion_batch_id").isNotNull())
-                .select("_ingestion_batch_id")
-                .distinct()
-                .collect()
-            ]
-            _record_batches(
-                catalog, "crm_sales", batches, table=GOLD_BATCH_LOG_TABLE
-            )
-        # a full rebuild supersedes any crashed incremental's worklist
-        _clear_pending(catalog)
-        return {
-            "mode": "full",
-            "batches": None,
-            "rebuilt_months": None,
-            "tables": tables,
-        }
-
-    # NULL provenance rows (schema-evolved history) were by construction
-    # present when the ledger was seeded by the full build — only rows
-    # with a batch id participate in the incremental diff.
     new_sales, new_batches = _ledger_diff(
-        catalog,
-        GOLD_BATCH_LOG_TABLE,
-        "crm_sales",
-        sales.filter(F.col("_ingestion_batch_id").isNotNull()),
+        catalog, GOLD_BATCH_LOG_TABLE, "crm_sales", sales
+    )
+    dim_c = build_dim_customers(
+        read("crm_customers"), read("erp_customers"), read("erp_locations")
+    )
+    dim_p = build_dim_products(read("crm_products"), read("erp_product_categories"))
+    if full:
+        c_changed = p_changed = True
+        months, in_flight = [], False
+    else:
+        # materialize once: the change probe, the mapping diff, and the
+        # possible rewrite all reuse the result
+        dim_c = dim_c.localCheckpoint(eager=False)
+        dim_p = dim_p.localCheckpoint(eager=False)
+        c_changed, p_changed, months, in_flight = _affected_months(
+            catalog, new_sales, new_batches, dim_c, dim_p
+        )
+        if months is None:
+            return {"mode": "noop", "batches": 0, "rebuilt_months": [], "tables": {}}
+        # persist the worklist BEFORE the first swap: a crash anywhere
+        # below leaves it on disk for the replay to pick up
+        _write_pending(catalog, months)
+
+    tables: dict[str, int] = {}
+    if c_changed:
+        tables["dim_customers"] = _write_gold(
+            catalog, "dim_customers", dim_c, run_context=run_context
+        )
+    if p_changed:
+        tables["dim_products"] = _write_gold(
+            catalog, "dim_products", dim_p, run_context=run_context
+        )
+    # Each table is built from the PERSISTED tables upstream of it (the
+    # fact from the written dims, the reports from the written fact), so
+    # the silver→dims→fact pipeline executes once and the declared
+    # lineage edges describe what physically happened.
+    dim_customers = catalog.read("gold", "dim_customers")
+    dim_products = catalog.read("gold", "dim_products")
+    if full or months:
+        # The persisted fact is directory-partitioned by order month: BI
+        # queries are overwhelmingly month-scoped, and partition pruning
+        # turns them into a scan of 1/N of a 100 TB fact. Rows with an
+        # unparseable order date land in the NULL partition. A refresh
+        # reads its months through silver's own ``_order_month``
+        # partitions — every silver row of those months (all batches),
+        # so each rebuilt partition is complete.
+        scoped = sales
+        if not full:
+            month = F.col("_order_month")
+            vals = [m for m in months if m is not None]
+            cond = month.isin(vals) if vals else F.lit(False)
+            if None in months:
+                cond = cond | month.isNull()
+            scoped = sales.filter(cond)
+        tables["fact_sales"] = _write_gold(
+            catalog,
+            "fact_sales",
+            build_fact_sales(scoped, dim_products, dim_customers).withColumn(
+                "order_month", F.trunc("order_date", "month")
+            ),
+            run_context=run_context,
+            partial=not full,
+        )
+    if months or c_changed or p_changed or in_flight:
+        fact_sales = catalog.read("gold", "fact_sales")
+        tables["report_customers"] = _write_gold(
+            catalog,
+            "report_customers",
+            build_customer_report(fact_sales, dim_customers),
+            run_context=run_context,
+        )
+        tables["report_products"] = _write_gold(
+            catalog,
+            "report_products",
+            build_product_report(fact_sales, dim_products),
+            run_context=run_context,
+        )
+
+    _record_batches(catalog, "crm_sales", new_batches, table=GOLD_BATCH_LOG_TABLE)
+    # done: drop the worklist (a full build writes none, and it also
+    # supersedes one that a crashed refresh left; rerun a crashed full
+    # build as a full build)
+    _clear_pending(catalog)
+    if full:
+        return {"mode": "full", "batches": None, "rebuilt_months": None,
+                "tables": tables}
+    return {
+        "mode": "incremental",
+        "batches": len(new_batches),
+        "rebuilt_months": sorted(
+            m.isoformat() if m is not None else "NULL" for m in months
+        ),
+        "replayed_pending": in_flight,
+        "tables": tables,
+    }
+
+
+def _affected_months(catalog, new_sales, new_batches, new_dim_c, new_dim_p):
+    """``(customers changed, products changed, fact months to rebuild,
+    replaying a crashed refresh)`` for an incremental refresh; the months
+    are ``None`` when nothing gold reads changed."""
+    from sql_data_warehouse_analytics_project_spark.catalog import (
+        MEDALLION_METADATA_COLUMNS,
     )
 
+    spark = catalog.spark
     # durable worklist of a refresh that crashed mid-swap (see docstring)
     carry_months, in_flight = _read_pending(catalog)
-
-    # Rebuild the dims (small) and materialize once: the change probe,
-    # the mapping diff, and the possible rewrite all reuse the result.
-    new_dim_c = build_dim_customers(
-        read("crm_customers"), read("erp_customers"), read("erp_locations")
-    ).localCheckpoint(eager=False)  # pinned by the dim_state probe below
-    new_dim_p = build_dim_products(
-        read("crm_products"), read("erp_product_categories")
-    ).localCheckpoint(eager=False)
 
     def dim_state(name, new_df, natural, skey):
         """Hash-bucketed dim diff: one narrow join instead of five
@@ -703,7 +716,7 @@ def run_gold_incremental(catalog, *, run_context=None) -> dict:
     )
 
     if not new_batches and not c_changed and not p_changed and not in_flight:
-        return {"mode": "noop", "batches": 0, "rebuilt_months": [], "tables": {}}
+        return c_changed, p_changed, None, in_flight
 
     # Affected months — each probe is a column-pruned scan of the fact's
     # (order_month, key) columns only, and runs only when a dim changed.
@@ -739,84 +752,4 @@ def run_gold_incremental(catalog, *, run_context=None) -> dict:
     months = list(
         {r[0] for r in months_df.distinct().collect()} | set(carry_months)
     )
-
-    results: dict = {
-        "mode": "incremental",
-        "batches": len(new_batches),
-        "rebuilt_months": sorted(
-            m.isoformat() if m is not None else "NULL" for m in months
-        ),
-        "replayed_pending": in_flight,
-        "tables": {},
-    }
-    # persist the worklist BEFORE the first swap: a crash anywhere below
-    # leaves it on disk for the replay to pick up
-    _write_pending(catalog, months)
-    if c_changed:
-        results["tables"]["dim_customers"] = _write_gold(
-            catalog, "dim_customers", new_dim_c, run_context=run_context
-        )
-    if p_changed:
-        results["tables"]["dim_products"] = _write_gold(
-            catalog, "dim_products", new_dim_p, run_context=run_context
-        )
-
-    if months:
-        dim_customers = catalog.read("gold", "dim_customers")
-        dim_products = catalog.read("gold", "dim_products")
-        month_vals = [m for m in months if m is not None]
-        # when silver sales is month-partitioned (SILVER_PARTITIONING),
-        # filter on the partition column itself → partition PRUNING: the
-        # rebuild lists only the affected months' directories; otherwise
-        # the derived-month predicate still pushes down to row-group
-        # stats. Either way every silver row of those months (all
-        # batches) is read, so each rebuilt partition is complete.
-        month_expr = (
-            F.col("_order_month")
-            if "_order_month" in sales.columns
-            else F.trunc("sls_order_dt", "month")
-        )
-        cond = month_expr.isin(month_vals) if month_vals else F.lit(False)
-        if any(m is None for m in months):
-            cond = cond | month_expr.isNull()
-        scoped = sales.filter(cond)
-        fact_new = build_fact_sales(
-            scoped, dim_products, dim_customers
-        ).withColumn("order_month", F.trunc("order_date", "month"))
-        managed = with_medallion_metadata(
-            fact_new, created_by="gold", source_system="silver"
-        )
-        _overwrite_fact_partitions(catalog, managed)
-        n = managed.count()
-        results["tables"]["fact_sales"] = n
-        if run_context is not None:
-            for src_layer, src_table in GOLD_INPUTS["fact_sales"]:
-                run_context.log_lineage(
-                    source_schema=catalog.db(src_layer),
-                    source_table=src_table,
-                    target_schema=catalog.db("gold"),
-                    target_table="fact_sales",
-                    transformation_logic="build_fact_sales[incremental]",
-                    record_count=n,
-                )
-
-    if months or c_changed or p_changed or in_flight:
-        fact_sales = catalog.read("gold", "fact_sales")
-        dim_customers = catalog.read("gold", "dim_customers")
-        dim_products = catalog.read("gold", "dim_products")
-        results["tables"]["report_customers"] = _write_gold(
-            catalog,
-            "report_customers",
-            build_customer_report(fact_sales, dim_customers),
-            run_context=run_context,
-        )
-        results["tables"]["report_products"] = _write_gold(
-            catalog,
-            "report_products",
-            build_product_report(fact_sales, dim_products),
-            run_context=run_context,
-        )
-
-    _record_batches(catalog, "crm_sales", new_batches, table=GOLD_BATCH_LOG_TABLE)
-    _clear_pending(catalog)
-    return results
+    return c_changed, p_changed, months, in_flight

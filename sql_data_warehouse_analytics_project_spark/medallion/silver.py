@@ -79,7 +79,8 @@ def clean_crm_products(df: DataFrame) -> DataFrame:
 def clean_crm_sales(df: DataFrame) -> DataFrame:
     """sales_details defects: int yyyymmdd dates with 0/garbage → NULL;
     ``sls_sales`` null or ≠ quantity×price → recompute; null/≤0 price →
-    derive from sales/quantity."""
+    derive from sales/quantity. Row-local, so ``_``-prefixed columns
+    (bronze provenance such as ``_ingestion_batch_id``) pass through."""
     sales_raw = F.col("sls_sales").cast("double")
     qty = F.col("sls_quantity").cast("int")
     price_raw = F.col("sls_price").cast("double")
@@ -100,6 +101,7 @@ def clean_crm_sales(df: DataFrame) -> DataFrame:
         sales_fixed.alias("sls_sales"),
         qty.alias("sls_quantity"),
         price_fixed.alias("sls_price"),
+        *[c for c in df.columns if c.startswith("_")],
     )
 
 
@@ -226,69 +228,38 @@ BATCH_LOG_TABLE = "silver_batch_log"
 # so month-scoped consumers — the incremental gold rebuild above all —
 # prune to 1/N of the table instead of scanning 100 TB of silver. The
 # column is derived at write time (underscore-prefixed: infrastructure,
-# not data; excluded from row hashes by being added after metadata).
-# Dimension-sized tables stay unpartitioned. A table first created by an
-# older unpartitioned build keeps appending unpartitioned (partitioning is
-# a create-time property); rebuild to adopt it.
+# not data, so row hashes leave it out). Dimension-sized tables stay
+# unpartitioned.
 SILVER_PARTITIONING = {
     "crm_sales": ("_order_month", lambda: F.trunc("sls_order_dt", "month")),
 }
 
 
 def run_silver(catalog, *, run_context=None) -> dict[str, int]:
-    """Bronze → silver for every registered transform. Reads only current
-    bronze rows (``_is_current``), drops the ``_`` metadata columns, applies
-    the cleansing, writes managed silver tables."""
-    from sql_data_warehouse_analytics_project_spark.catalog import (
-        with_medallion_metadata,
-    )
-    from sql_data_warehouse_analytics_project_spark.medallion.bronze import (
-        BRONZE_METADATA_COLUMNS,
-    )
-
-    results: dict[str, int] = {}
-    for raw_table, (silver_table, fn) in SILVER_TRANSFORMS.items():
-        if not catalog.table_exists("bronze", raw_table):
-            continue
-        src = catalog.spark.table(catalog.qualified("bronze", raw_table))
-        if "_is_current" in src.columns:
-            src = src.filter(F.col("_is_current"))
-        src = src.drop(*[c for c in BRONZE_METADATA_COLUMNS if c in src.columns])
-        cleaned = with_medallion_metadata(
-            fn(src), source_system=raw_table.split("_")[0], created_by="silver"
-        )
-        parts: list = []
-        if silver_table in SILVER_PARTITIONING:
-            part_name, part_expr = SILVER_PARTITIONING[silver_table]
-            cleaned = cleaned.withColumn(part_name, part_expr())
-            parts = [part_name]
-        catalog.create_table("silver", silver_table, cleaned.schema,
-                             medallion_metadata=False, partition_by=parts)
-        catalog.overwrite(cleaned, "silver", silver_table, partition_by=parts)
-        n = catalog.spark.table(catalog.qualified("silver", silver_table)).count()
-        results[silver_table] = n
-        if run_context is not None:
-            run_context.log_lineage(
-                source_schema=catalog.db("bronze"),
-                source_table=raw_table,
-                target_schema=catalog.db("silver"),
-                target_table=silver_table,
-                transformation_logic=fn.__name__,
-                record_count=n,
-            )
-    return results
+    """Bronze → silver for every registered transform: the refresh of
+    :func:`run_silver_incremental` with every current bronze batch treated
+    as new and every silver table replaced. Records the batches it applied
+    in ``logs.silver_batch_log``, so a later incremental refresh picks up
+    exactly where it stopped. Returns ``{silver_table: rows}``."""
+    return {
+        t: r["rows"]
+        for t, r in _refresh(catalog, full=True, run_context=run_context).items()
+    }
 
 
 def _record_batches(
     catalog, raw_table: str, batch_ids, *, table: str = BATCH_LOG_TABLE
 ) -> None:
-    rows = [(raw_table, b) for b in batch_ids]
+    _record_ledger(catalog, [(raw_table, b) for b in batch_ids], table=table)
+
+
+def _record_ledger(catalog, rows, *, table: str = BATCH_LOG_TABLE) -> None:
+    """One append of ``(table_name, _ingestion_batch_id)`` rows."""
     if not rows:
         return
     df = catalog.spark.createDataFrame(
         rows, "table_name string, _ingestion_batch_id string"
     ).withColumn("processed_at", F.current_timestamp())
-    catalog.create_table("logs", table, df.schema, medallion_metadata=False)
     catalog.append(df, "logs", table)
 
 
@@ -308,6 +279,29 @@ def _ledger_diff(catalog, ledger_table: str, source_name: str, df):
     return new, batches
 
 
+def _clean(bronze_rows, raw_table: str, silver_table: str, fn):
+    """Bronze rows → silver rows: the cleaner over the data columns (the
+    row-local ones carry ``_ingestion_batch_id`` through), the managed
+    metadata, and the derived partition column."""
+    from sql_data_warehouse_analytics_project_spark.catalog import (
+        with_medallion_metadata,
+    )
+    from sql_data_warehouse_analytics_project_spark.medallion.bronze import (
+        BRONZE_METADATA_COLUMNS,
+    )
+
+    data = bronze_rows.drop(
+        *[c for c in BRONZE_METADATA_COLUMNS if c != "_ingestion_batch_id"]
+    )
+    out = with_medallion_metadata(
+        fn(data), source_system=raw_table.split("_")[0], created_by="silver"
+    )
+    if silver_table in SILVER_PARTITIONING:
+        part_name, part_expr = SILVER_PARTITIONING[silver_table]
+        out = out.withColumn(part_name, part_expr())
+    return out
+
+
 def run_silver_incremental(
     catalog, *, run_context=None, tables=None
 ) -> dict[str, dict]:
@@ -321,9 +315,9 @@ def run_silver_incremental(
 
     - ``append`` (row-local fact transforms): the new batches' current
       rows are cleaned and appended — work and writes are both
-      new-data-sized, the shape that holds at a 100 TB fact. Appended
-      silver rows carry their bronze ``_ingestion_batch_id`` (attached
-      AFTER the row hash, so data hashes stay comparable to a full
+      new-data-sized, the shape that holds at a 100 TB fact. The cleaner
+      carries each row's bronze ``_ingestion_batch_id`` into silver (row
+      hashes leave ``_`` columns out, so they stay comparable to a full
       rebuild): the append first skips any batch already present in
       silver, which makes the append→ledger sequence crash-idempotent —
       a retry after a crash between the two writes re-records the ledger
@@ -342,23 +336,24 @@ def run_silver_incremental(
       mode. A replayed keyed batch recomputes to the identical state, so
       the crash window before the ledger write is harmless here too.
 
-    A first run (no silver table yet) falls back to the full per-table
-    rebuild (keyed tables) or the per-batch append path (append tables).
+    A silver table that does not exist yet is built from all current
+    bronze rows, as :func:`run_silver` builds it (mode ``full``). The
+    ledger is appended once, after every data write of the call.
     ``tables`` (bronze raw-table names) scopes the refresh — the
     streaming bronze sink passes its own table so a micro-batch never
     probes the other five ledgers. Returns
     ``{silver_table: {mode, batches, rows}}``; a table with no new
     batches reports ``batches: 0`` and is untouched.
     """
-    from sql_data_warehouse_analytics_project_spark.catalog import (
-        with_medallion_metadata,
-    )
-    from sql_data_warehouse_analytics_project_spark.medallion.bronze import (
-        BRONZE_METADATA_COLUMNS,
-    )
+    return _refresh(catalog, full=False, run_context=run_context, tables=tables)
 
+
+def _refresh(catalog, *, full: bool, run_context=None, tables=None) -> dict:
+    """The one silver write path. ``full`` replaces every table from all
+    current bronze; otherwise each table applies only its new batches."""
     spark = catalog.spark
     results: dict[str, dict] = {}
+    ledger: list = []
     for raw_table, (silver_table, fn) in SILVER_TRANSFORMS.items():
         if tables is not None and raw_table not in tables:
             continue
@@ -370,91 +365,44 @@ def run_silver_incremental(
         new, new_batches = _ledger_diff(
             catalog, BATCH_LOG_TABLE, raw_table, bronze_all
         )
-        if not new_batches:
+        replace = full or not catalog.table_exists("silver", silver_table)
+        if not replace and not new_batches:
             results[silver_table] = {"mode": "noop", "batches": 0, "rows": 0}
             continue
 
         spec = SILVER_INCREMENTAL[raw_table]
-        strip = lambda d: d.drop(  # noqa: E731
-            *[c for c in BRONZE_METADATA_COLUMNS if c in d.columns]
-        )
-        meta = dict(source_system=raw_table.split("_")[0], created_by="silver")
-        first_run = not catalog.table_exists("silver", silver_table)
+        qsilver = catalog.qualified("silver", silver_table)
 
-        if spec["mode"] == "append":
+        if replace:
+            part = SILVER_PARTITIONING.get(silver_table)
+            catalog.overwrite(
+                _clean(bronze_all, raw_table, silver_table, fn),
+                "silver", silver_table,
+                partition_by=[part[0]] if part else [],
+            )
+            mode, n = "full", spark.table(qsilver).count()
+        elif spec["mode"] == "append":
             # which of the new batches already landed in silver? (crash
             # between append and ledger write — skip, don't double-apply)
-            applied: set = set()
-            tcols: list = []
-            if not first_run:
-                tcols = spark.table(
-                    catalog.qualified("silver", silver_table)
-                ).columns
-                if "_ingestion_batch_id" not in tcols:
-                    # silver built by a full run_silver (no provenance yet)
-                    # — evolve the schema; existing rows read as NULL
-                    catalog.add_column(
-                        "silver", silver_table, "_ingestion_batch_id", "string"
-                    )
-                else:
-                    # probe ONLY the new batches' ids, not the whole fact:
-                    # the isin filter rides parquet row-group stats and
-                    # dictionary filters, so untouched files are skipped
-                    # and the probe stays new-batch-sized at a 100 TB fact
-                    applied = {
-                        r[0]
-                        for r in spark.table(
-                            catalog.qualified("silver", silver_table)
-                        )
-                        .select("_ingestion_batch_id")
-                        .filter(F.col("_ingestion_batch_id").isin(new_batches))
-                        .distinct()
-                        .collect()
-                    }
-            part_name = part_expr = None
-            if silver_table in SILVER_PARTITIONING and (
-                first_run or SILVER_PARTITIONING[silver_table][0] in tcols
-            ):
-                # partitioning is a create-time property: first runs adopt
-                # it; a legacy unpartitioned table keeps its shape
-                part_name, part_expr = SILVER_PARTITIONING[silver_table]
-            todo = [b for b in new_batches if b not in applied]
-
-            # per-batch clean so each silver row carries its provenance
-            # batch id (the row-local cleaners project fixed columns, so
-            # the id is re-attached per batch; the batch-id filter pushes
-            # down to the bronze scan — each batch reads only its own
-            # row groups, total work stays new-data-sized)
-            def _clean_batch(b):
-                out = with_medallion_metadata(
-                    fn(strip(new.filter(F.col("_ingestion_batch_id") == b))),
-                    **meta,
-                ).withColumn("_ingestion_batch_id", F.lit(b))
-                if part_name is not None:
-                    out = out.withColumn(part_name, part_expr())
-                return out
-
-            parts = [_clean_batch(b) for b in todo]
+            # Probe ONLY the new batches' ids, not the whole fact: the
+            # isin filter rides parquet row-group stats and dictionary
+            # filters, so untouched files are skipped and the probe stays
+            # new-batch-sized at a 100 TB fact.
+            applied = [
+                r[0]
+                for r in spark.table(qsilver)
+                .select("_ingestion_batch_id")
+                .filter(F.col("_ingestion_batch_id").isin(new_batches))
+                .distinct()
+                .collect()
+            ]
             n = 0
-            if parts:
-                cleaned = parts[0]
-                for p in parts[1:]:
-                    cleaned = cleaned.unionByName(p)
-                catalog.create_table(
-                    "silver", silver_table, cleaned.schema,
-                    medallion_metadata=False,
-                    partition_by=[part_name] if part_name else [],
-                )
+            if len(applied) < len(new_batches):
+                todo = new.filter(~F.col("_ingestion_batch_id").isin(applied))
+                cleaned = _clean(todo, raw_table, silver_table, fn)
                 catalog.append(cleaned, "silver", silver_table)
                 n = cleaned.count()
             mode = "append"
-        elif first_run:
-            cleaned = with_medallion_metadata(fn(strip(bronze_all)), **meta)
-            catalog.create_table(
-                "silver", silver_table, cleaned.schema, medallion_metadata=False
-            )
-            catalog.overwrite(cleaned, "silver", silver_table)
-            mode, n = "full", cleaned.count()
         else:
             skeys = spec["silver_keys"]
             key_exprs = spec["key_exprs"]
@@ -491,8 +439,8 @@ def run_silver_incremental(
                 )
                 .drop(*sk)
             )
-            recleaned = with_medallion_metadata(fn(strip(scope)), **meta)
-            target = spark.table(catalog.qualified("silver", silver_table))
+            recleaned = _clean(scope, raw_table, silver_table, fn)
+            target = spark.table(qsilver)
             # delete scope = the DIRTY key set (not recleaned's keys): the
             # two coincide while bronze is append-only, but dirty also
             # covers a key whose rows were all retired via _is_current
@@ -507,7 +455,7 @@ def run_silver_incremental(
             )
             mode, n = "keyed", recleaned.count()
 
-        _record_batches(catalog, raw_table, new_batches)
+        ledger += [(raw_table, b) for b in new_batches]
         results[silver_table] = {
             "mode": mode, "batches": len(new_batches), "rows": n,
         }
@@ -520,4 +468,8 @@ def run_silver_incremental(
                 transformation_logic=f"{fn.__name__}[{mode}]",
                 record_count=n,
             )
+    # one ledger append per stage, after every data write: a crash before
+    # it re-offers the batches, which the applied-batch probe (append) and
+    # the deterministic recompute (keyed, full) make harmless
+    _record_ledger(catalog, ledger)
     return results

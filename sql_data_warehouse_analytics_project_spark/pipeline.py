@@ -20,7 +20,10 @@ from sql_data_warehouse_analytics_project_spark.ops.context import RunContext
 
 class Warehouse:
     """setup → bronze → silver → gold, stop-on-first-failure per stage
-    (``setup_orchestrator.py:585-598``)."""
+    (``setup_orchestrator.py:585-598``). Full and incremental stages share
+    one write path per layer: a full build records the batch ledgers, so
+    ``run_all`` followed by ``run_bronze`` + the incremental stages applies
+    each batch exactly once."""
 
     def __init__(self, spark: SparkSession, prefix: str = ""):
         self.catalog = Catalog(spark, prefix=prefix)

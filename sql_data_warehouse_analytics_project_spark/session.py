@@ -19,7 +19,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> int:
+    """Cores the session uses by default: ``SPARK_GRAFT_CPUS`` when it is
+    a positive integer, else the cores this process may run on (its CPU
+    affinity mask). Unset or malformed values fall back rather than fail."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        n = 0
+    return n if n > 0 else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -35,7 +44,8 @@ def get_spark(
     genuinely small dims (region/nation/part at test SF) broadcast
     automatically while anything fact-sized still shuffles.
     """
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = default_cpus()
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
     )
@@ -51,7 +61,7 @@ def get_spark(
     builder = (
         builder
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -87,7 +87,8 @@ def stream_bronze_ingest(
     its noop detection make a replayed refresh converge — and it too runs
     on the replay-skip path, closing the crash window between the silver
     refresh and the gold refresh. The warehouse must already hold all six
-    silver tables (the full-rebuild fallback reads every gold input)."""
+    silver tables: a refresh that finds no gold yet builds every gold
+    table, and that reads every gold input."""
     sink = bronze_batch_sink(
         catalog, table, run_context,
         refresh_silver=refresh_silver, refresh_gold=refresh_gold,

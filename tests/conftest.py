@@ -298,13 +298,15 @@ def _run_sharded(session, n: int) -> bool:
 
     out_dir = Path(f"/tmp/spark_graft_test_shards_{os.getpid()}")
     out_dir.mkdir(parents=True, exist_ok=True)
+    wh_dirs = [f"/tmp/spark_graft_test_wh_{os.getpid()}_{i}"
+               for i in range(len(shards))]
     procs = []
     for i, ids in enumerate(shards):
         env = dict(
             os.environ,
             **{
                 _SHARD_ENV: str(i),
-                _WAREHOUSE_ENV: f"/tmp/spark_graft_test_wh_{os.getpid()}_{i}",
+                _WAREHOUSE_ENV: wh_dirs[i],
                 _RESULTS_ENV: str(out_dir / f"shard_{i}.results"),
                 "SPARK_GRAFT_CPUS": per_worker_cpus,
                 "SPARK_DRIVER_MEMORY": os.environ.get(
@@ -335,88 +337,96 @@ def _run_sharded(session, n: int) -> bool:
             )
         )
 
-    outputs: dict[int, str] = {}
-    rcs: dict[int, int] = {}
-    failed_early = False
-    pending = {i: (p, log) for i, p, log in procs}
-    while pending:
-        for i, (p, log) in list(pending.items()):
-            rc = p.poll()
-            if rc is None:
-                continue
-            log.flush()
-            log.seek(0)
-            outputs[i] = log.read()
-            log.close()
-            rcs[i] = rc
-            del pending[i]
-            sys.stderr.write(f"[shard {i}] done rc={rc} "
-                             f"({time.time() - t0:.0f}s)\n")
-            if rc not in (0, 1) or (rc != 0 and exitfirst):
-                failed_early = True
-        if failed_early and pending:
-            for p, _log in pending.values():
-                p.terminate()
-            for i, (p, log) in pending.items():
-                try:
-                    p.wait(timeout=30)
-                except subprocess.TimeoutExpired:
-                    p.kill()
-                    p.wait(timeout=30)
+    try:
+        outputs: dict[int, str] = {}
+        rcs: dict[int, int] = {}
+        failed_early = False
+        pending = {i: (p, log) for i, p, log in procs}
+        while pending:
+            for i, (p, log) in list(pending.items()):
+                rc = p.poll()
+                if rc is None:
+                    continue
                 log.flush()
                 log.seek(0)
                 outputs[i] = log.read()
                 log.close()
-                rcs[i] = p.returncode if p.returncode is not None else -1
-            pending.clear()
-        time.sleep(0.5)
+                rcs[i] = rc
+                del pending[i]
+                sys.stderr.write(f"[shard {i}] done rc={rc} "
+                                 f"({time.time() - t0:.0f}s)\n")
+                if rc not in (0, 1) or (rc != 0 and exitfirst):
+                    failed_early = True
+            if failed_early and pending:
+                for p, _log in pending.values():
+                    p.terminate()
+                for i, (p, log) in pending.items():
+                    try:
+                        p.wait(timeout=30)
+                    except subprocess.TimeoutExpired:
+                        p.kill()
+                        p.wait(timeout=30)
+                    log.flush()
+                    log.seek(0)
+                    outputs[i] = log.read()
+                    log.close()
+                    rcs[i] = p.returncode if p.returncode is not None else -1
+                pending.clear()
+            time.sleep(0.5)
 
-    # Replay each worker's per-test outcomes as real TestReports: the
-    # standard terminal reporter then prints the true combined summary
-    # ("N passed, M skipped in ...s") as the final line, Session counts
-    # testsfailed itself, and the exit status falls out exactly as in a
-    # sequential run.
-    from _pytest.reports import TestReport
+        # Replay each worker's per-test outcomes as real TestReports: the
+        # standard terminal reporter then prints the true combined summary
+        # ("N passed, M skipped in ...s") as the final line, Session counts
+        # testsfailed itself, and the exit status falls out exactly as in a
+        # sequential run.
+        from _pytest.reports import TestReport
 
-    tw = session.config.get_terminal_writer()
-    seen = 0
-    for i in sorted(outputs):
-        res_path = out_dir / f"shard_{i}.results"
-        lines = []
-        if res_path.exists():
-            lines = res_path.read_text(encoding="utf-8").splitlines()
-        for line in lines:
-            outcome, when, nodeid = line.split("\t", 2)
-            seen += 1
-            longrepr = None
-            if outcome == "skipped":
-                longrepr = (nodeid.split("::")[0], 0, "skipped (in shard)")
-            elif outcome == "failed":
-                longrepr = f"failed in shard {i} — full output above"
-            rep = TestReport(
-                nodeid=nodeid,
-                location=(nodeid.split("::")[0], None, nodeid),
-                keywords={},
-                outcome=outcome,
-                longrepr=longrepr,
-                when=when,
-                sections=[],
-                duration=0.0,
-                start=0.0,
-                stop=0.0,
+        tw = session.config.get_terminal_writer()
+        seen = 0
+        for i in sorted(outputs):
+            res_path = out_dir / f"shard_{i}.results"
+            lines = []
+            if res_path.exists():
+                lines = res_path.read_text(encoding="utf-8").splitlines()
+            for line in lines:
+                outcome, when, nodeid = line.split("\t", 2)
+                seen += 1
+                longrepr = None
+                if outcome == "skipped":
+                    longrepr = (nodeid.split("::")[0], 0, "skipped (in shard)")
+                elif outcome == "failed":
+                    longrepr = f"failed in shard {i} — full output above"
+                rep = TestReport(
+                    nodeid=nodeid,
+                    location=(nodeid.split("::")[0], None, nodeid),
+                    keywords={},
+                    outcome=outcome,
+                    longrepr=longrepr,
+                    when=when,
+                    sections=[],
+                    duration=0.0,
+                    start=0.0,
+                    stop=0.0,
+                )
+                session.ihook.pytest_runtest_logreport(report=rep)
+            if rcs[i] != 0:
+                tw.line(f"\n===== shard {i} output (rc={rcs[i]}) =====")
+                tw.write(outputs[i])
+        # a worker that died without reporting all its tests (crash, rc>1)
+        # must fail the run even if every written outcome passed
+        bad_rc = any(rc not in (0, 1) for rc in rcs.values())
+        if (seen < len(items) and not exitfirst) or bad_rc:
+            session.testsfailed += 1
+            tw.line(
+                f"\n[shards] INCOMPLETE: {seen}/{len(items)} outcomes "
+                f"reported, worker rcs={rcs}"
             )
-            session.ihook.pytest_runtest_logreport(report=rep)
-        if rcs[i] != 0:
-            tw.line(f"\n===== shard {i} output (rc={rcs[i]}) =====")
-            tw.write(outputs[i])
-    # a worker that died without reporting all its tests (crash, rc>1)
-    # must fail the run even if every written outcome passed
-    bad_rc = any(rc not in (0, 1) for rc in rcs.values())
-    if (seen < len(items) and not exitfirst) or bad_rc:
-        session.testsfailed += 1
-        tw.line(
-            f"\n[shards] INCOMPLETE: {seen}/{len(items)} outcomes "
-            f"reported, worker rcs={rcs}"
-        )
-    tw.line(f"\n[shards: {len(shards)}] wall {time.time() - t0:.1f}s")
-    return True
+        tw.line(f"\n[shards: {len(shards)}] wall {time.time() - t0:.1f}s")
+        return True
+    finally:
+        # workers write only under these dirs; remove them once every
+        # worker has exited (a live one may still be writing)
+        if all(p.poll() is not None for _i, p, _log in procs):
+            shutil.rmtree(out_dir, ignore_errors=True)
+            for d in wh_dirs:
+                shutil.rmtree(d, ignore_errors=True)

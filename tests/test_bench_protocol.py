@@ -100,15 +100,17 @@ def test_code_fingerprint_stable_and_docstring_insensitive(tmp_path):
 
 def test_cpus_from_env_else_cpu_count(monkeypatch):
     """``SPARK_GRAFT_CPUS`` sets the core count only when it is a
-    positive integer; unset or malformed values fall back to the box's
-    ``os.cpu_count()`` instead of a hard-coded guess or a crash."""
+    positive integer; unset or malformed values fall back to the cores
+    the process may run on (its affinity mask) instead of a hard-coded
+    guess or a crash."""
     import os
 
+    cores = len(os.sched_getaffinity(0))
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert bench._cpus() == (os.cpu_count() or 1)
+    assert bench._cpus() == cores
     for bad in ("", "four", "2.5", "0", "-3"):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
-        assert bench._cpus() == (os.cpu_count() or 1), bad
+        assert bench._cpus() == cores, bad
     monkeypatch.setenv("SPARK_GRAFT_CPUS", " 6 ")
     assert bench._cpus() == 6
 

@@ -129,6 +129,35 @@ def test_catalog_roundtrip_upsert_table(spark):
         cat.drop_layers()
 
 
+def test_catalog_add_column_visible_through_view(spark):
+    """``Catalog.add_column`` (S7 ADD COLUMN) alters the physical
+    generation and republishes the view: the column reads through the
+    published table, existing rows read NULL, and appends can fill it."""
+    cat = Catalog(spark, prefix="addcol_")
+    cat.drop_layers()
+    cat.create_layers()
+    try:
+        cat.overwrite(
+            spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+            "silver", "kv",
+        )
+        cat.add_column("silver", "kv", "note", "string")
+        q = cat.qualified("silver", "kv")
+        assert spark.table(q).columns == ["k", "v", "note"]
+        assert sorted(tuple(r) for r in spark.table(q).collect()) == [
+            (1, "a", None), (2, "b", None),
+        ]
+        cat.append(
+            spark.createDataFrame([(3, "c", "x")], "k int, v string, note string"),
+            "silver", "kv",
+        )
+        assert {r.k: r.note for r in spark.table(q).collect()} == {
+            1: None, 2: None, 3: "x",
+        }
+    finally:
+        cat.drop_layers()
+
+
 def test_incremental_batch_cuts_on_value_boundary(spark):
     """batch_size must never split rows sharing the boundary value of the
     incremental column — advancing the watermark past a split value

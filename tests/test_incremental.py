@@ -58,8 +58,8 @@ def _bronze(spark, rows, schema, batch):
 
 def _data_rows(cat, table, layer="silver"):
     # data columns + row_hash (which covers exactly the data columns);
-    # timestamps/audit metadata and the _ingestion_batch_id provenance
-    # column (append-mode incremental only) are excluded by design
+    # timestamps/audit metadata and the _-prefixed infrastructure columns
+    # (batch provenance, partition keys) are excluded by design
     df = cat.spark.table(cat.qualified(layer, table))
     cols = sorted(
         c for c in df.columns
@@ -92,7 +92,7 @@ def test_incremental_silver_matches_full_rebuild(spark, cats):
     for raw, (schema, b1, _) in batches.items():
         inc.append(_bronze(spark, b1, schema, "b1"), "bronze", raw)
     r1 = silver.run_silver_incremental(inc)
-    assert r1["crm_customers"]["mode"] == "full"  # first run = full fallback
+    assert r1["crm_customers"]["mode"] == "full"  # no silver yet: built whole
     for raw, (schema, _, b2) in batches.items():
         inc.append(_bronze(spark, b2, schema, "b2"), "bronze", raw)
     r2 = silver.run_silver_incremental(inc)
@@ -204,16 +204,14 @@ def test_incremental_append_replay_is_noop(spark, cats):
     assert r2["crm_sales"]["mode"] == "noop"
 
 
-def test_incremental_append_after_full_rebuild_evolves_schema(spark, cats):
-    """A silver table first built by the FULL run_silver (no provenance
-    column) accepts incremental appends afterwards: the schema is evolved
-    and pre-existing rows read as NULL provenance."""
+def test_incremental_append_after_full_build_uses_its_ledger(spark, cats):
+    """The full run_silver records the batches it applied: a following
+    incremental refresh appends only the new batch, with no hand-seeded
+    ledger, and every silver row carries its bronze batch id."""
     inc, _ = cats
     inc.append(_bronze(spark, SALES_B1, SALES_SCHEMA, "b1"),
                "bronze", "crm_sales_raw")
-    silver.run_silver(inc)  # full build — no _ingestion_batch_id column
-    # full build bypasses the ledger: seed it so b1 is not re-appended
-    silver._record_batches(inc, "crm_sales_raw", ["b1"])
+    assert silver.run_silver(inc) == {"crm_sales": 1}
     inc.append(_bronze(spark, SALES_B2, SALES_SCHEMA, "b2"),
                "bronze", "crm_sales_raw")
     r = silver.run_silver_incremental(inc, tables=["crm_sales_raw"])
@@ -222,7 +220,7 @@ def test_incremental_append_after_full_rebuild_evolves_schema(spark, cats):
         r.sls_ord_num: r["_ingestion_batch_id"]
         for r in spark.table(inc.qualified("silver", "crm_sales")).collect()
     }
-    assert rows == {"O1": None, "O2": "b2"}
+    assert rows == {"O1": "b1", "O2": "b2"}
 
 
 # ---------------------------------------------------------------------------
@@ -441,3 +439,50 @@ def test_incremental_gold_crash_between_dim_and_fact_swap_replays(
 
     # a further replay with nothing new is a clean noop
     assert gold.run_gold_incremental(inc)["mode"] == "noop"
+
+
+def test_cli_full_build_then_incremental_refresh_matches_full_build(
+    spark, tmp_path, capsys
+):
+    """``--all`` over batch 1, then ``--bronze --silver-incremental
+    --gold-incremental`` over a delta, leaves every silver and gold table
+    equal to a full build over both batches: the full build records the
+    batch ledgers, so the refresh never applies batch 1 a second time."""
+    import os
+
+    import numpy as np
+
+    from perfbench import gen
+    from sql_data_warehouse_analytics_project_spark.__main__ import main
+
+    rng, state = np.random.default_rng([9, 1]), gen.SourceState()
+    b1, delta = str(tmp_path / "b1"), str(tmp_path / "delta")
+    gen.write_sources(b1, rng, state, n_customers=40, n_products=12,
+                      n_sales=200, months=3)
+    gen.write_sources(delta, rng, state, n_customers=5, n_products=2,
+                      n_sales=40, months=1, updates=3, new_versions=2)
+
+    def run(root, *flags, prefix):
+        rc = main([*flags, "--prefix", prefix,
+                   "--crm-dir", os.path.join(root, "datasets", "source_crm"),
+                   "--erp-dir", os.path.join(root, "datasets", "source_erp")])
+        assert rc == 0, capsys.readouterr().err
+
+    inc, full = Catalog(spark, prefix="cliinc_"), Catalog(spark, prefix="clifull_")
+    for c in (inc, full):
+        c.drop_layers()
+    try:
+        run(b1, "--all", prefix="cliinc_")
+        run(delta, "--bronze", "--silver-incremental", "--gold-incremental",
+            prefix="cliinc_")
+        run(b1, "--bronze", prefix="clifull_")
+        run(delta, "--bronze", "--silver", "--gold", prefix="clifull_")
+        for table, _ in silver.SILVER_TRANSFORMS.values():
+            assert _data_rows(inc, table) == _data_rows(full, table), table
+        for table in GOLD_TABLES:
+            assert _data_rows(inc, table, layer="gold") == _data_rows(
+                full, table, layer="gold"
+            ), table
+    finally:
+        for c in (inc, full):
+            c.drop_layers()

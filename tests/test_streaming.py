@@ -184,35 +184,42 @@ def test_stateful_user_counters_across_batches(spark, dropzone):
         f.write("user_id,value\n1,2.5\n3,1.0\n")
 
     ckpt = tempfile.mkdtemp(prefix="ckpt_state_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 1)  # force ≥2 micro-batches
-        .csv(dropzone)
-    )
-    out = stateful_user_counters(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("state_counters")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    q = None
+    try:
+        stream = (
+            spark.readStream.schema(schema)
+            .option("header", True)
+            .option("maxFilesPerTrigger", 1)  # force ≥2 micro-batches
+            .csv(dropzone)
+        )
+        out = stateful_user_counters(stream)
+        q = (
+            out.writeStream.format("memory")
+            .queryName("state_counters")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
 
-    rows = spark.sql(
-        "SELECT user_id, max(n_events) n, max(total_value) t"
-        " FROM state_counters GROUP BY user_id"
-    ).collect()
-    got = {r.user_id: (r.n, r.t) for r in rows}
-    batch = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in batch_user_counters(
-            spark.read.schema(schema).option("header", True).csv(dropzone)
+        rows = spark.sql(
+            "SELECT user_id, max(n_events) n, max(total_value) t"
+            " FROM state_counters GROUP BY user_id"
         ).collect()
-    }
-    assert got == batch == {1: (3, 17.5), 2: (1, 7.0), 3: (1, 1.0)}
+        got = {r.user_id: (r.n, r.t) for r in rows}
+        batch = {
+            r.user_id: (r.n_events, r.total_value)
+            for r in batch_user_counters(
+                spark.read.schema(schema).option("header", True).csv(dropzone)
+            ).collect()
+        }
+        assert got == batch == {1: (3, 17.5), 2: (1, 7.0), 3: (1, 1.0)}
+    finally:
+        # the query may outlive the wait; stop it before its state goes
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_bronze_sink_replay_is_idempotent(spark):
@@ -575,9 +582,9 @@ def test_stream_bronze_to_silver_refresh(spark, dropzone):
 
 
 def _seed_medallion_bronze(cat, spark, *, include_sales: bool = True) -> None:
-    """Minimal six-table bronze seed (one consistent star): the gold
-    refresh's full-rebuild fallback reads every gold input, so the
-    streaming-to-gold test needs a complete warehouse to stream into.
+    """Minimal six-table bronze seed (one consistent star): a gold
+    refresh that finds no gold builds every table from every gold input,
+    so the streaming-to-gold test needs a complete warehouse to stream into.
     Seeds through the SAME ``enrich_bronze`` metadata path the stream
     sink uses, so the streamed appends land in a matching schema."""
     from datetime import date
