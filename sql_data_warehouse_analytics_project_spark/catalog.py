@@ -30,9 +30,18 @@ The view definition is the only record of which generation is
 published: writers read it back from the view text
 (:meth:`Catalog.resolve_table`), so no second pointer can go stale.
 The previous generation is retained for one publish cycle (in-flight
-scans drain), older ones are pruned; a crash anywhere leaves the old
-view intact plus at most an orphan generation for
-:meth:`Catalog.vacuum_generations`.
+scans drain), older ones are dropped.
+
+This is the only table format the catalog knows, and this module is the
+only code that writes a layer table (``tests/test_catalog_crash.py``
+pins both). A name that holds a plain table, or a view over anything but
+one of its own generations, was written by older code: ``resolve_table``,
+``append`` and ``overwrite`` raise for it before writing, and the fix is
+to drop it and rerun the stage that builds it. A crash at any statement
+of a catalog write leaves the view on the state before or after the
+write (or absent, for a first write or a drop), plus at most orphan
+generations for :meth:`Catalog.vacuum_generations`; rerunning the write
+converges, so there is no recovery step.
 """
 
 from __future__ import annotations
@@ -136,47 +145,65 @@ class Catalog:
     def _gen_name(self, table: str, seq: int) -> str:
         return f"{table}__g{seq:06d}"
 
-    def _is_view(self, qualified: str) -> bool:
-        try:
-            return self.spark.catalog.getTable(qualified).tableType == "VIEW"
-        except Exception:  # noqa: BLE001 — missing table
-            return False
+    def _published(self, layer: str, table: str) -> str | None:
+        """The qualified generation the view ``table`` selects from, read
+        from the view's own definition (``View Text``); None when no table
+        has the name. Anything else under the name — a plain table, or a
+        view over something other than one of its generations — was
+        written by code older than this format and raises, so no caller
+        writes anything next to it."""
+        q = self.qualified(layer, table)
+        if not self.spark.catalog.tableExists(q):
+            return None
+        detail, in_detail = {}, False
+        for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {q}").collect():
+            # column rows come first, and a data column may be named "Type"
+            in_detail = in_detail or r["col_name"] == "# Detailed Table Information"
+            if in_detail:
+                detail[r["col_name"]] = r["data_type"] or ""
+        prefix = f"{self.db(layer)}."
+        m = _VIEW_TEXT_RE.match(detail.get("View Text", ""))
+        gen = m.group("gen") if m else ""
+        g = GEN_RE.match(gen[len(prefix):]) if gen.startswith(prefix) else None
+        if detail.get("Type") == "VIEW" and g and g.group("base") == table:
+            return gen
+        kind = "VIEW" if detail.get("Type") == "VIEW" else "TABLE"
+        raise RuntimeError(
+            f"{q} is not a view over one of its generation tables; it was "
+            f"written by older code: DROP {kind} {q} and rerun the stage"
+        )
 
     def resolve_table(self, layer: str, table: str) -> str:
-        """The qualified PHYSICAL table behind a published view, read from
-        the view's own definition (``View Text``) — the view's own name
-        for a legacy plain table. Physical-only operations (append,
-        ANALYZE, DESCRIBE location, insertInto) go through this; plain
-        reads never need it (``spark.table`` resolves the view)."""
-        q = self.qualified(layer, table)
-        if not self._is_view(q):
-            return q
-        for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {q}").collect():
-            if r["col_name"] == "View Text":
-                m = _VIEW_TEXT_RE.match(r["data_type"] or "")
-                if m:
-                    return m.group("gen")
-        raise RuntimeError(f"view {q} does not select from a generation table")
+        """The qualified PHYSICAL generation behind the published view.
+        Physical-only operations (append, ANALYZE, DESCRIBE location,
+        partition overwrite) go through this; plain reads never need it
+        (``spark.table`` resolves the view)."""
+        gen = self._published(layer, table)
+        if gen is None:
+            raise RuntimeError(f"table {self.qualified(layer, table)} does not exist")
+        return gen
 
-    def _generations(self, layer: str, table: str) -> list[str]:
-        """Existing generation table NAMES for ``table``, seq-ascending
-        (includes orphans a crash may have left)."""
-        db = self.db(layer)
-        out = []
-        for t in self.spark.catalog.listTables(db):
-            if t.database != db or t.isTemporary:
-                continue
-            m = GEN_RE.match(t.name)
-            if m and m.group("base") == table:
-                out.append((int(m.group("seq")), t.name))
-        return [name for _, name in sorted(out)]
+    def _generations(self, layer: str) -> dict[str, list[str]]:
+        """Generation table NAMES of the layer per base table,
+        seq-ascending (orphans a crash left included). ``SHOW TABLES``
+        reads names only, where ``catalog.listTables`` also fetches every
+        table's metadata and launches Spark jobs to do it. Session temp
+        views are skipped."""
+        gens: dict[str, list[tuple[int, str]]] = {}
+        for r in self.spark.sql(f"SHOW TABLES IN {self.db(layer)}").collect():
+            m = GEN_RE.match(r["tableName"])
+            if m and not r["isTemporary"]:
+                gens.setdefault(m.group("base"), []).append(
+                    (int(m.group("seq")), r["tableName"])
+                )
+        return {b: [n for _, n in sorted(p)] for b, p in gens.items()}
 
-    def _publish(self, layer: str, table: str, gen_q: str,
-                 comment: str | None = None) -> None:
+    def _publish(self, layer: str, table: str, gen_q: str, *,
+                 create: bool = False, comment: str | None = None) -> None:
         """Point the table view at ``gen_q`` without the view EVER being
         absent.
 
-        For an existing view the repoint is ``ALTER VIEW … AS`` — ONE
+        The repoint of an existing view is ``ALTER VIEW … AS`` — ONE
         ``catalog.alterTable`` call, so a concurrent reader resolves the
         old or the new definition, never a missing view. ``CREATE OR
         REPLACE VIEW`` is NOT that: Spark's ``CreateViewCommand``
@@ -186,31 +213,38 @@ class Catalog:
         hit under a loaded box (round 12). The repoint is the whole
         publish: :meth:`resolve_table` reads the generation back from the
         view text, so there is no second statement for a crash to split
-        from it. Only the FIRST publish of a table creates the view (with
-        ``comment``) — no reader can hold its name before it ever
-        exists."""
+        from it. Only the FIRST publish of a table (``create``) creates
+        the view, with ``comment`` — no reader can hold its name before
+        it ever exists."""
         q = self.qualified(layer, table)
-        if self._is_view(q):
+        if not create:
             self.spark.sql(f"ALTER VIEW {q} AS SELECT * FROM {gen_q}")
             return
-        stmt = f"CREATE OR REPLACE VIEW {q} "
+        stmt = f"CREATE VIEW {q} "
         if comment:
             escaped = comment.replace("\\", "\\\\").replace("'", "\\'")
             stmt += f"COMMENT '{escaped}' "
         self.spark.sql(stmt + f"AS SELECT * FROM {gen_q}")
 
     #: previous generations retained per table after a publish (in-flight
-    #: readers' grace window); older ones are pruned by overwrite itself
+    #: readers' grace window); older ones are dropped by overwrite itself
     generation_retention = 1
 
-    def _prune_generations(self, layer: str, table: str, keep: set[str]) -> None:
-        gens = self._generations(layer, table)
-        keep_tail = set(gens[-(self.generation_retention + 1):])
-        for name in gens:
-            q = f"{self.db(layer)}.{name}"
-            if q in keep or name in keep_tail:
-                continue
-            self.spark.sql(f"DROP TABLE IF EXISTS {q}")
+    def _drop_unretained(
+        self, layer: str, names: list[str], published: str | None
+    ) -> list[str]:
+        """The one retention rule: of one table's generation ``names``
+        (seq-ascending), drop every one that is neither the ``published``
+        generation nor among the newest ``generation_retention + 1``. A
+        table with no view (``published`` None: a crashed first write, or
+        a crashed :meth:`drop_table`) keeps none. Returns the dropped
+        names."""
+        tail = set(names[-(self.generation_retention + 1):]) if published else set()
+        db = self.db(layer)
+        dropped = [n for n in names if n not in tail and f"{db}.{n}" != published]
+        for name in dropped:
+            self.spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
+        return dropped
 
     def create_table(
         self,
@@ -235,37 +269,41 @@ class Catalog:
             fields += [f for f in MEDALLION_METADATA_FIELDS if f.name not in present]
         empty = self.spark.createDataFrame([], T.StructType(fields))
         gen_q = f"{self.db(layer)}.{self._gen_name(table, 1)}"
+        # a crashed first write may have left generation 1 without a view
         self.spark.sql(f"DROP TABLE IF EXISTS {gen_q}")
         writer = empty.write.format("parquet")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.saveAsTable(gen_q)
-        self._publish(layer, table, gen_q, comment=comment)
+        self._publish(layer, table, gen_q, create=True, comment=comment)
 
     def table_exists(self, layer: str, table: str) -> bool:
         """S5 probe (maps ``BronzeManager.table_exists`` ``bronze.py:303-331``)."""
         return self.spark.catalog.tableExists(self.qualified(layer, table))
 
     def drop_table(self, layer: str, table: str) -> None:
-        q = self.qualified(layer, table)
-        if self._is_view(q):
-            self.spark.sql(f"DROP VIEW IF EXISTS {q}")
-        else:
-            self.spark.sql(f"DROP TABLE IF EXISTS {q}")
-        for name in self._generations(layer, table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.db(layer)}.{name}")
+        """Drop the view first, then its generations: a crash in between
+        leaves the table absent and orphan generations for
+        :meth:`vacuum_generations` (or a rerun) to drop."""
+        self.spark.sql(f"DROP VIEW IF EXISTS {self.qualified(layer, table)}")
+        self._drop_unretained(layer, self._generations(layer).get(table, []), None)
 
     def add_column(self, layer: str, table: str, name: str, dtype: str) -> None:
         """Maps ``alter_table_add_column`` (``sql/ddl.py:347-385``). Alters
         the physical generation, then republishes the view (a view's star
         expansion is frozen at creation — without the republish the new
-        column would stay invisible)."""
+        column would stay invisible). A column on the generation but not
+        on the view is what a crash between the two statements leaves; a
+        rerun then only republishes."""
         phys = self.resolve_table(layer, table)
-        self.spark.sql(f"ALTER TABLE {phys} ADD COLUMNS ({name} {dtype})")
-        q = self.qualified(layer, table)
-        if self._is_view(q):
+
+        def cols(t: str) -> set[str]:
+            return {c.lower() for c in self.spark.table(t).columns}
+
+        if name.lower() not in cols(phys) - cols(self.qualified(layer, table)):
+            self.spark.sql(f"ALTER TABLE {phys} ADD COLUMNS ({name} {dtype})")
             self.spark.catalog.refreshTable(phys)
-            self._publish(layer, table, phys)
+        self._publish(layer, table, phys)
 
     # -- I/O ----------------------------------------------------------------
 
@@ -285,9 +323,7 @@ class Catalog:
         if not self.spark.catalog.tableExists(q):
             return
         self.spark.catalog.refreshTable(q)
-        phys = self.resolve_table(layer, table)
-        if phys != q:
-            self.spark.catalog.refreshTable(phys)
+        self.spark.catalog.refreshTable(self.resolve_table(layer, table))
 
     def append(self, df: DataFrame, layer: str, table: str) -> None:
         """S3/S4 sink — bulk columnar append (replaces the reference's
@@ -295,29 +331,26 @@ class Catalog:
         physical generation behind the view. Appends into a partitioned
         table restate its partition columns (saveAsTable refuses a writer
         whose partitioning differs from the table's)."""
-        q = self.qualified(layer, table)
+        published = self._published(layer, table)
         finish = None
         if self.observer is not None:
             df, finish = self.observer.begin_write(df, layer, table, mode="append")
-        publish_gen = None
-        if self.spark.catalog.tableExists(q):
-            target = self.resolve_table(layer, table)
-        else:
+        writer = df.write.mode("append").format("parquet")
+        if published is None:
             # first write creates generation 1 + the published view, so
             # every table is pointer-committed from birth
             target = f"{self.db(layer)}.{self._gen_name(table, 1)}"
             self.spark.sql(f"DROP TABLE IF EXISTS {target}")
-            publish_gen = target
-        writer = df.write.mode("append").format("parquet")
-        if self.spark.catalog.tableExists(target):
+        else:
+            target = published
             pcols = [
                 c.name for c in self.spark.catalog.listColumns(target) if c.isPartition
             ]
             if pcols:
                 writer = writer.partitionBy(*pcols)
         writer.saveAsTable(target)
-        if publish_gen is not None:
-            self._publish(layer, table, publish_gen)
+        if published is None:
+            self._publish(layer, table, target, create=True)
         if finish is not None:
             finish()
 
@@ -347,26 +380,21 @@ class Catalog:
 
         The previous generation is retained for ``generation_retention``
         further publishes (grace for scans already resolved to it), then
-        pruned. Writing the new generation also materializes the plan,
+        dropped. Writing the new generation also materializes the plan,
         which typically READS the current generation (upsert/soft-delete
         reconcile) — Spark cannot overwrite files it is still scanning,
-        and here it never has to.
-
-        A LEGACY plain table (created outside this catalog) is adopted:
-        its state is republished as a generation + view, with a one-time
-        DROP TABLE + CREATE VIEW window — every subsequent overwrite is
-        atomic."""
-        target = self.qualified(layer, table)
+        and here it never has to."""
+        published = self._published(layer, table)
         finish = None
         if self.observer is not None:
             # instrument BEFORE the generation write (the row count rides
             # that job); finish fires only after the publish, so lineage/
             # metrics describe the published TARGET, never a half-done write
             df, finish = self.observer.begin_write(df, layer, table, mode="overwrite")
-        gens = self._generations(layer, table)
+        gens = self._generations(layer).get(table, [])
         seq = int(GEN_RE.match(gens[-1]).group("seq")) + 1 if gens else 1
-        gen_q = f"{self.db(layer)}.{self._gen_name(table, seq)}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {gen_q}")
+        name = self._gen_name(table, seq)
+        gen_q = f"{self.db(layer)}.{name}"
         writer = df.write.mode("overwrite").format("parquet")
         if partition_by:
             # directory partitioning lives on the generation table, so the
@@ -374,100 +402,49 @@ class Catalog:
             # month-scoped fact scans)
             writer = writer.partitionBy(*partition_by)
         writer.saveAsTable(gen_q)
-        exists = self.spark.catalog.tableExists(target)
-        if exists and not self._is_view(target):
-            # one-time adoption of a legacy plain table (docstring)
-            self.spark.sql(f"DROP TABLE {target}")
-        self._publish(layer, table, gen_q)
-        self._prune_generations(layer, table, keep={gen_q})
+        self._publish(layer, table, gen_q, create=published is None)
+        self._drop_unretained(layer, gens + [name], gen_q)
         if finish is not None:
             finish()
 
-    def vacuum_staging(self, layer: str) -> list[str]:
-        """Reclaim generation tables a crash or retention left behind:
-        drop every ``__gNNNNNN`` generation that is neither the published
-        pointer of its view nor within the retention tail, plus legacy
-        ``__staging`` leftovers whose target exists. A generation (or
-        staging table) whose TARGET VIEW is missing is the interrupted-
-        adoption state and is deliberately left for
-        :meth:`recover_staging` to promote. Returns the dropped names.
-
-        Safe against concurrent readers of the PUBLISHED state (nothing
-        referenced is touched); run it while no :meth:`overwrite` is in
-        flight on the layer, or an overwrite's freshly-written-but-not-
-        yet-published generation could be vacuumed out from under it
-        (that overwrite would fail and retry — the published data is
-        never at risk, unlike the old staged-rename protocol). Temporary
-        views are skipped — only this layer's persisted tables are
-        candidates."""
-        dropped: list[str] = []
-        db = self.db(layer)
-        published: dict[str, str] = {}
-        gens: dict[str, list[tuple[int, str]]] = {}
-        for t in self.spark.catalog.listTables(db):
-            # listTables also returns session temp views (database=None)
-            if t.database != db or t.isTemporary:
-                continue
-            m = GEN_RE.match(t.name)
-            if m:
-                gens.setdefault(m.group("base"), []).append(
-                    (int(m.group("seq")), t.name)
-                )
-                continue
-            if t.name.endswith("__staging"):
-                target = t.name[: -len("__staging")]
-                if self.spark.catalog.tableExists(f"{db}.{target}"):
-                    self.spark.sql(f"DROP TABLE {db}.{t.name}")
-                    dropped.append(t.name)
-        for base, pairs in gens.items():
-            q = f"{db}.{base}"
-            if not self.spark.catalog.tableExists(q):
-                continue  # interrupted adoption: leave for recover_staging
-            if self._is_view(q):
-                published[base] = self.resolve_table(layer, base)
-            names = [name for _, name in sorted(pairs)]
-            keep_tail = set(names[-(self.generation_retention + 1):])
-            for name in names:
-                full = f"{db}.{name}"
-                if full == published.get(base) or name in keep_tail:
-                    continue
-                self.spark.sql(f"DROP TABLE IF EXISTS {full}")
-                dropped.append(name)
-        return dropped
-
-    def recover_staging(self, layer: str, table: str) -> bool:
-        """Finish an interrupted one-time ADOPTION (legacy plain table →
-        view) or a legacy staged overwrite: if the target is gone but a
-        fully-written generation (or legacy staging table) exists,
-        publish the newest one. Returns True if a recovery happened.
-        Uninterrupted generation overwrites never need this — a crash
-        before the publish leaves the old view live."""
-        target = self.qualified(layer, table)
-        if self.spark.catalog.tableExists(target):
-            return False
-        gens = self._generations(layer, table)
-        if gens:
-            self._publish(layer, table, f"{self.db(layer)}.{gens[-1]}")
-            return True
-        staging = f"{target}__staging"
-        if not self.spark.catalog.tableExists(staging):
-            return False
-        # legacy staged overwrite: promote the staging table into the
-        # generation protocol (rename to g1, publish the view)
-        gen_q = f"{self.db(layer)}.{self._gen_name(table, 1)}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {gen_q}")
-        self.spark.sql(f"ALTER TABLE {staging} RENAME TO {gen_q}")
-        if any(c.isPartition for c in self.spark.catalog.listColumns(gen_q)):
-            # partitioned staging: per-partition locations still reference
-            # the pre-rename path
-            self.spark.sql(f"MSCK REPAIR TABLE {gen_q}")
-        self._publish(layer, table, gen_q)
-        return True
+    def overwrite_partitions(self, df: DataFrame, layer: str, table: str) -> None:
+        """Dynamic partition overwrite of a partitioned table: only the
+        partitions present in ``df`` are replaced in the published
+        generation; every other partition's files are untouched. Commit is
+        per-job via the parquet committer — a crash mid-write leaves the
+        old partition files visible (on Delta this would be a single
+        atomic commit)."""
+        # insertInto writes files: it targets the PHYSICAL generation behind
+        # the published view (views are not insertable)
+        target = self.resolve_table(layer, table)
+        tcols = self.spark.table(target).columns
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = self.spark.conf.get(key, "static")
+        self.spark.conf.set(key, "dynamic")
+        try:
+            # insertInto is position-based: order columns to the table schema
+            df.select(*tcols).write.mode("overwrite").insertInto(target)
+        finally:
+            self.spark.conf.set(key, prev)
 
     def vacuum_generations(self, layer: str) -> list[str]:
-        """Alias of :meth:`vacuum_staging` under its round-9 name — the
-        generation protocol made staging tables a legacy concept."""
-        return self.vacuum_staging(layer)
+        """Reclaim generation tables a crash or retention left behind, by
+        the retention rule of :meth:`_drop_unretained`: every generation
+        that is neither its view's published one nor within the retention
+        tail is dropped — all of them for a table with no view. A table
+        written by older code raises, as in :meth:`resolve_table`. Returns
+        the dropped names.
+
+        Safe against concurrent readers of the PUBLISHED state (nothing
+        referenced is touched); run it while no write is in flight on the
+        layer, or a freshly-written-but-not-yet-published generation could
+        be vacuumed out from under it (that write would fail and retry —
+        the published data is never at risk). Temporary views are skipped
+        — only this layer's persisted tables are candidates."""
+        dropped: list[str] = []
+        for base, names in self._generations(layer).items():
+            dropped += self._drop_unretained(layer, names, self._published(layer, base))
+        return dropped
 
     # -- declared constraints (S7, maps sql/ddl.py:300-344) -----------------
 
@@ -573,15 +550,13 @@ class Catalog:
     # -- catalog introspection (maps S8, sql/query_builder.py:390-567) ------
 
     def list_tables(self, layer: str):
-        """Logical tables of a layer — internal generation/staging
-        physicals are implementation detail and filtered out."""
+        """Logical tables of a layer — the generation tables behind them
+        are implementation detail and filtered out."""
         db = self.db(layer)
         return [
             t.name
             for t in self.spark.catalog.listTables(db)
-            if t.database == db
-            and not GEN_RE.match(t.name)
-            and not t.name.endswith("__staging")
+            if t.database == db and not GEN_RE.match(t.name)
         ]
 
     def table_stats(self, layer: str, table: str) -> dict:
@@ -652,13 +627,10 @@ class Catalog:
         q = self.qualified(layer, table)
         t = self.spark.catalog.getTable(q)
         phys = self.resolve_table(layer, table)
-        ttype = t.tableType
-        if ttype == "VIEW":
-            ttype = self.spark.catalog.getTable(phys).tableType
         return {
             "name": t.name,
             "database": self.db(layer),
-            "table_type": ttype,
+            "table_type": self.spark.catalog.getTable(phys).tableType,
             "is_temporary": t.isTemporary,
             "description": t.description,
             "storage": phys,

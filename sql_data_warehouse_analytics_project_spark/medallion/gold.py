@@ -434,7 +434,7 @@ def _write_gold(
 
     managed = with_medallion_metadata(df, created_by="gold", source_system="silver")
     if partial:
-        _overwrite_fact_partitions(catalog, managed)
+        catalog.overwrite_partitions(managed, "gold", "fact_sales")
         n = managed.count()
     else:
         parts = ["order_month"] if name == "fact_sales" else []
@@ -460,27 +460,6 @@ def run_gold(catalog, *, run_context=None) -> dict[str, int]:
     treated as new and every gold table replaced. Records the batches it
     applied in ``logs.gold_batch_log``. Returns ``{gold_table: rows}``."""
     return _refresh(catalog, full=True, run_context=run_context)["tables"]
-
-
-def _overwrite_fact_partitions(catalog, df) -> None:
-    """Dynamic partition overwrite of ``gold.fact_sales``: only the
-    ``order_month`` partitions present in ``df`` are replaced; every
-    other partition's files are untouched (the property the incremental
-    test asserts on the filesystem). Commit is per-job via the parquet
-    committer — a crash mid-write leaves the old partition files visible
-    (on Delta this would be a single atomic commit)."""
-    spark = catalog.spark
-    # insertInto writes files: it targets the PHYSICAL generation behind
-    # the published view (views are not insertable)
-    target = catalog.resolve_table("gold", "fact_sales")
-    tcols = spark.table(target).columns
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # insertInto is position-based: order columns to the table schema
-        df.select(*tcols).write.mode("overwrite").insertInto(target)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def run_gold_incremental(catalog, *, run_context=None) -> dict:

@@ -61,7 +61,10 @@ def _counter_kernel(
 def stateful_user_counters(events: DataFrame) -> DataFrame:
     """Per-user lifetime running counters over a stream: state persists
     across micro-batches (checkpointed), idle users time out after 1h.
-    Output mode must be ``update``. Input needs (user_id, value)."""
+    Output mode must be ``update``. Input needs (user_id, value). The
+    processing-time timeout makes Spark schedule no-data batches, so a
+    ``trigger(availableNow=True)`` query ends only with
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` set to false."""
     return events.groupBy("user_id").applyInPandasWithState(
         _counter_kernel,
         outputStructType=COUNTER_SCHEMA,

@@ -177,9 +177,8 @@ def test_overwrite_publish_is_atomic_and_crash_safe(spark, monkeypatch):
     """Round-9 generation protocol: an overwrite writes a NEW generation
     table and publishes it with ONE atomic ALTER VIEW AS repoint. Kill it right
     before the publish: the published state (and every reader) is
-    untouched, the fully-written generation stays durable, and a retry —
-    or recover_staging after an interrupted legacy ADOPTION — completes
-    cleanly. Legacy plain tables are adopted on first overwrite."""
+    untouched, the fully-written generation stays durable, and a plain
+    retry completes cleanly."""
     from sql_data_warehouse_analytics_project_spark.catalog import Catalog
 
     cat = Catalog(spark, prefix="atomic_")
@@ -187,13 +186,10 @@ def test_overwrite_publish_is_atomic_and_crash_safe(spark, monkeypatch):
     cat.create_layers()
     try:
         target = cat.qualified("silver", "t")
-        # legacy plain table (created outside the catalog)
-        spark.createDataFrame([(1,), (2,)], "k int").write.saveAsTable(target)
-
-        # first overwrite ADOPTS: view + generation, data replaced
+        # first overwrite creates the generation and the view over it
         cat.overwrite(spark.createDataFrame([(3,)], "k int"), "silver", "t")
         assert [r.k for r in spark.table(target).collect()] == [3]
-        assert cat._is_view(target)
+        assert spark.catalog.getTable(target).tableType == "VIEW"
         g_live = cat.resolve_table("silver", "t")
 
         # crash BEFORE the publish: view still serves the old generation
@@ -212,14 +208,6 @@ def test_overwrite_publish_is_atomic_and_crash_safe(spark, monkeypatch):
         # no recovery needed: a plain retry publishes the next generation
         cat.overwrite(spark.createDataFrame([(5,)], "k int"), "silver", "t")
         assert [r.k for r in spark.table(target).collect()] == [5]
-
-        # interrupted ADOPTION (crash between DROP TABLE and the view
-        # publish): the target is missing but the new generation is
-        # durable — recover_staging promotes it
-        real_sql(f"DROP VIEW IF EXISTS {target}")
-        assert cat.recover_staging("silver", "t") is True
-        assert [r.k for r in spark.table(target).collect()] == [5]
-        assert cat.recover_staging("silver", "t") is False  # idempotent
 
         # and a clean, uninterrupted overwrite still round-trips
         cat.overwrite(spark.createDataFrame([(9,)], "k int"), "silver", "t")
@@ -286,11 +274,10 @@ def test_overwrite_concurrent_reader_never_sees_missing_table(spark):
         cat.drop_layers()
 
 
-def test_partitioned_overwrite_and_recovery_repair_partitions(spark):
-    """Partitioned staged overwrite: the metastore's per-partition
-    locations reference the pre-rename staging path after the swap, so
-    both overwrite and recover_staging must repair them — a silent
-    zero-row table otherwise."""
+def test_partitioned_overwrite_keeps_partition_pruning(spark):
+    """A partitioned overwrite keeps directory partitioning on the
+    generation table, so every row reads back through the view and a
+    partition-scoped read prunes at the scan."""
     from pyspark.sql import functions as F
 
     from sql_data_warehouse_analytics_project_spark.catalog import Catalog
@@ -312,18 +299,45 @@ def test_partitioned_overwrite_and_recovery_repair_partitions(spark):
             ._jdf.queryExecution().executedPlan().treeString()
         )
         assert "PartitionFilters: [" in plan
+    finally:
+        cat.drop_layers()
 
-        # legacy crash-window recovery of a PARTITIONED staging table
-        # (pre-round-9 layout): promoted into the generation protocol,
-        # partition locations repaired
-        legacy = cat.qualified("silver", "t_legacy")
-        df2 = spark.createDataFrame([(9, "c")], "k int, p string")
-        df2.write.mode("overwrite").format("parquet").partitionBy(
-            "p"
-        ).saveAsTable(f"{legacy}__staging")
-        assert cat.recover_staging("silver", "t_legacy") is True
-        assert [tuple(r) for r in spark.table(legacy).collect()] == [(9, "c")]
-        assert cat._is_view(legacy)
+
+def test_tables_from_older_code_raise_before_any_write(spark):
+    """The generation format is the only one the catalog knows. A name
+    holding a plain table, or a view over anything but one of its own
+    generations, was written by older code: resolve_table, append and
+    overwrite raise one RuntimeError naming it, before writing anything.
+    A missing table gets a clear error from resolve_table."""
+    import re
+
+    cat = Catalog(spark, prefix="older_")
+    cat.drop_layers()
+    cat.create_layers()
+    try:
+        plain = cat.qualified("silver", "plain")
+        spark.createDataFrame([(1,)], "k int").write.saveAsTable(plain)
+        spark.sql(f"CREATE VIEW {cat.qualified('silver', 'foreign')} "
+                  f"AS SELECT * FROM {plain}")
+        df = spark.createDataFrame([(2,)], "k int")
+        for name, kind in (("plain", "TABLE"), ("foreign", "VIEW")):
+            advice = re.escape(f"DROP {kind} {cat.qualified('silver', name)}")
+            with pytest.raises(RuntimeError, match=advice):
+                cat.resolve_table("silver", name)
+            with pytest.raises(RuntimeError, match=advice):
+                cat.append(df, "silver", name)
+            with pytest.raises(RuntimeError, match=advice):
+                cat.overwrite(df, "silver", name)
+            q = cat.qualified("silver", name)
+            assert [r.k for r in spark.table(q).collect()] == [1]
+        # no generation table was written next to them
+        names = {
+            t.name for t in spark.catalog.listTables(cat.db("silver"))
+            if not t.isTemporary
+        }
+        assert names == {"plain", "foreign"}
+        with pytest.raises(RuntimeError, match="does not exist"):
+            cat.resolve_table("silver", "missing")
     finally:
         cat.drop_layers()
 

@@ -410,10 +410,10 @@ def test_incremental_gold_crash_between_dim_and_fact_swap_replays(
     silver.run_silver_incremental(inc)
 
     # crash exactly at the fact partition swap (dims already rewritten)
-    def boom(catalog, df):
+    def boom(df, layer, table):
         raise RuntimeError("simulated crash before fact swap")
 
-    monkeypatch.setattr(gold, "_overwrite_fact_partitions", boom)
+    monkeypatch.setattr(inc, "overwrite_partitions", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         gold.run_gold_incremental(inc)
     monkeypatch.undo()

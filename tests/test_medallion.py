@@ -449,42 +449,52 @@ def test_curate_cli_writes_split_partitioned_corpus(spark, sf_dir, tmp_path, cap
     assert back.count() == f["curated"]
 
 
-def test_vacuum_staging_drops_only_abandoned(cat, spark):
+def test_vacuum_generations_drops_only_unretained(cat, spark):
+    """One retention rule: a generation that is neither its view's
+    published one nor in the retention tail is dropped, and so is every
+    generation of a table with no view (a crashed first write or drop)."""
     from pyspark.sql import types as T
 
     sch = T.StructType([T.StructField("v", T.LongType())])
+
+    def gen(name, v):
+        spark.createDataFrame([(v,)], sch).write.format("parquet").saveAsTable(
+            cat.qualified("bronze", name)
+        )
+
     cat.create_table("bronze", "vac_t", sch, medallion_metadata=False)
-    # abandoned staging WITH target → vacuum drops it
-    spark.createDataFrame([(1,)], sch).write.mode("overwrite").saveAsTable(
-        cat.qualified("bronze", "vac_t__staging")
-    )
-    # staging WITHOUT target → crash-between-swap state, must be kept
-    spark.createDataFrame([(2,)], sch).write.mode("overwrite").saveAsTable(
-        cat.qualified("bronze", "vac_orphan__staging")
-    )
-    dropped = cat.vacuum_staging("bronze")
-    assert dropped == ["vac_t__staging"]
-    assert not cat.table_exists("bronze", "vac_t__staging")
-    assert cat.table_exists("bronze", "vac_orphan__staging")
-    # and recover_staging can still promote the kept one
-    assert cat.recover_staging("bronze", "vac_orphan")
-    assert cat.table_exists("bronze", "vac_orphan")
+    cat.overwrite(spark.createDataFrame([(2,)], sch), "bronze", "vac_t")
+    cat.overwrite(spark.createDataFrame([(3,)], sch), "bronze", "vac_t")
+    assert cat.resolve_table("bronze", "vac_t").endswith("vac_t__g000003")
+    gen("vac_t__g000001", 1)  # older than published, outside the tail
+    gen("vac_t__g000004", 4)  # two overwrites that crashed before their
+    gen("vac_t__g000005", 5)  # publish: newer than published, the tail
+    gen("vac_gone__g000001", 9)  # its table has no view
+    dropped = [n for n in cat.vacuum_generations("bronze") if n.startswith("vac_")]
+    assert sorted(dropped) == [
+        "vac_gone__g000001", "vac_t__g000001", "vac_t__g000002",
+    ]
+    left = {t.name for t in spark.catalog.listTables(cat.db("bronze"))}
+    assert {"vac_t__g000003", "vac_t__g000004", "vac_t__g000005"} <= left
+    assert not {"vac_gone__g000001", "vac_t__g000001", "vac_t__g000002"} & left
+    assert [r.v for r in cat.read("bronze", "vac_t").collect()] == [3]
+    assert cat.vacuum_generations("bronze") == []
 
 
-def test_vacuum_staging_skips_temp_views(cat, spark):
+def test_vacuum_generations_skips_temp_views(cat, spark):
     from pyspark.sql import types as T
 
     sch = T.StructType([T.StructField("v", T.LongType())])
     cat.create_table("bronze", "tvtarget", sch, medallion_metadata=False)
-    # a session temp view named like a staging table must NOT be dropped
+    # a session temp view named like a generation must NOT be dropped
     # (and must not error the vacuum with DROP TABLE-on-view)
-    spark.createDataFrame([(9,)], sch).createOrReplaceTempView("tvtarget__staging")
+    spark.createDataFrame([(9,)], sch).createOrReplaceTempView("tvtarget__g000009")
     try:
-        dropped = cat.vacuum_staging("bronze")
-        assert "tvtarget__staging" not in dropped
-        assert spark.catalog.tableExists("tvtarget__staging")  # view intact
+        dropped = cat.vacuum_generations("bronze")
+        assert "tvtarget__g000009" not in dropped
+        assert spark.catalog.tableExists("tvtarget__g000009")  # view intact
     finally:
-        spark.catalog.dropTempView("tvtarget__staging")
+        spark.catalog.dropTempView("tvtarget__g000009")
 
 
 def test_fact_build_skew_strategies_bit_match(spark):

@@ -185,6 +185,8 @@ def test_stateful_user_counters_across_batches(spark, dropzone):
 
     ckpt = tempfile.mkdtemp(prefix="ckpt_state_")
     q = None
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev_no_data = spark.conf.get(no_data, None)
     try:
         stream = (
             spark.readStream.schema(schema)
@@ -193,6 +195,9 @@ def test_stateful_user_counters_across_batches(spark, dropzone):
             .csv(dropzone)
         )
         out = stateful_user_counters(stream)
+        # the processing-time state timeout keeps scheduling no-data
+        # batches, which would keep an availableNow query from ending
+        spark.conf.set(no_data, "false")
         q = (
             out.writeStream.format("memory")
             .queryName("state_counters")
@@ -201,7 +206,7 @@ def test_stateful_user_counters_across_batches(spark, dropzone):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120) is True
 
         rows = spark.sql(
             "SELECT user_id, max(n_events) n, max(total_value) t"
@@ -219,6 +224,10 @@ def test_stateful_user_counters_across_batches(spark, dropzone):
         # the query may outlive the wait; stop it before its state goes
         if q is not None:
             q.stop()
+        if prev_no_data is None:
+            spark.conf.unset(no_data)
+        else:
+            spark.conf.set(no_data, prev_no_data)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
