@@ -87,14 +87,17 @@ def main(argv: list[str] | None = None) -> int:
 def _run_curate(docs_path: str, out_dir: str) -> int:
     """Curation pipeline CLI: documents parquet in, curated corpus out.
 
-    Writes ``<out>/curated`` (split-partitioned parquet — each of
-    train/val/test is its own pruning-friendly directory) and
+    Writes the datasets ``<out>/curated`` (split-partitioned parquet —
+    each of train/val/test is its own pruning-friendly directory) and
     ``<out>/decisions`` (per-doc keep/drop + reasons, the audit trail),
-    and prints the stage funnel as JSON."""
+    and prints the stage funnel as JSON, with the current generation
+    directory of each dataset under ``datasets`` for readers outside the
+    engine (a dataset root holds only its manifest and generations)."""
     import os
 
     from sql_data_warehouse_analytics_project_spark.llm import curate
     from sql_data_warehouse_analytics_project_spark.session import get_spark
+    from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
         write_dataset,
     )
@@ -103,11 +106,11 @@ def _run_curate(docs_path: str, out_dir: str) -> int:
     try:
         docs = spark.read.parquet(docs_path)
         stages = curate.curate_corpus(docs)
-        write_dataset(
-            stages["curated"], os.path.join(out_dir, "curated"),
-            partition_by=["split"],
-        )
-        write_dataset(stages["decisions"], os.path.join(out_dir, "decisions"))
+        roots = {
+            name: os.path.join(out_dir, name) for name in ("curated", "decisions")
+        }
+        write_dataset(stages["curated"], roots["curated"], partition_by=["split"])
+        write_dataset(stages["decisions"], roots["decisions"])
         funnel = {
             r["stage"]: r["n_docs"]
             for r in curate.curation_report(stages).collect()
@@ -115,7 +118,10 @@ def _run_curate(docs_path: str, out_dir: str) -> int:
     except Exception as e:  # noqa: BLE001 — CLI boundary: report + exit code
         print(json.dumps({"status": "FAILED", "error": str(e)}), file=sys.stderr)
         return 1
-    print(json.dumps({"status": "SUCCESS", "funnel": funnel}, default=str))
+    datasets = {name: manifest.resolve(root) for name, root in roots.items()}
+    print(json.dumps(
+        {"status": "SUCCESS", "funnel": funnel, "datasets": datasets}, default=str
+    ))
     return 0
 
 

@@ -46,6 +46,7 @@ converges, so there is no recovery step.
 
 from __future__ import annotations
 
+import itertools
 import re
 from collections.abc import Sequence
 
@@ -173,6 +174,19 @@ class Catalog:
             f"written by older code: DROP {kind} {q} and rerun the stage"
         )
 
+    def _partition_columns(self, gen_q: str) -> list[str]:
+        """Partition columns of a generation table, read with one
+        ``DESCRIBE TABLE`` (no Spark job; ``catalog.listColumns`` runs
+        two). A generation's partition spec never changes after it is
+        created."""
+        rows = self.spark.sql(f"DESCRIBE TABLE {gen_q}").collect()
+        names = [r["col_name"] for r in rows]
+        if "# Partition Information" not in names:
+            return []
+        # the section is a "# col_name" header, then one row per column
+        rest = names[names.index("# Partition Information") + 2:]
+        return list(itertools.takewhile(lambda n: n and not n.startswith("#"), rest))
+
     def resolve_table(self, layer: str, table: str) -> str:
         """The qualified PHYSICAL generation behind the published view.
         Physical-only operations (append, ANALYZE, DESCRIBE location,
@@ -231,17 +245,24 @@ class Catalog:
     generation_retention = 1
 
     def _drop_unretained(
-        self, layer: str, names: list[str], published: str | None
+        self,
+        layer: str,
+        names: list[str],
+        published: str | None,
+        previous: str | None,
     ) -> list[str]:
-        """The one retention rule: of one table's generation ``names``
-        (seq-ascending), drop every one that is neither the ``published``
-        generation nor among the newest ``generation_retention + 1``. A
-        table with no view (``published`` None: a crashed first write, or
-        a crashed :meth:`drop_table`) keeps none. Returns the dropped
-        names."""
-        tail = set(names[-(self.generation_retention + 1):]) if published else set()
+        """The one retention rule, over one table's generation ``names``
+        (unqualified, seq-ascending): keep the ``published`` generation
+        and the newest ``generation_retention`` generations up to and
+        including ``previous``, the one published before it, so a
+        generation a crash left unpublished never takes a slot of the
+        tail. Every other generation is dropped — all of them for a table
+        with no view (``published`` None: a crashed first write, or a
+        crashed :meth:`drop_table`). Returns the dropped names."""
+        tail = [n for n in names if previous is not None and n <= previous]
+        keep = {published, *tail[len(tail) - self.generation_retention:]}
         db = self.db(layer)
-        dropped = [n for n in names if n not in tail and f"{db}.{n}" != published]
+        dropped = [n for n in names if n not in keep]
         for name in dropped:
             self.spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
         return dropped
@@ -286,7 +307,9 @@ class Catalog:
         leaves the table absent and orphan generations for
         :meth:`vacuum_generations` (or a rerun) to drop."""
         self.spark.sql(f"DROP VIEW IF EXISTS {self.qualified(layer, table)}")
-        self._drop_unretained(layer, self._generations(layer).get(table, []), None)
+        self._drop_unretained(
+            layer, self._generations(layer).get(table, []), None, None
+        )
 
     def add_column(self, layer: str, table: str, name: str, dtype: str) -> None:
         """Maps ``alter_table_add_column`` (``sql/ddl.py:347-385``). Alters
@@ -343,9 +366,7 @@ class Catalog:
             self.spark.sql(f"DROP TABLE IF EXISTS {target}")
         else:
             target = published
-            pcols = [
-                c.name for c in self.spark.catalog.listColumns(target) if c.isPartition
-            ]
+            pcols = self._partition_columns(target)
             if pcols:
                 writer = writer.partitionBy(*pcols)
         writer.saveAsTable(target)
@@ -403,7 +424,9 @@ class Catalog:
             writer = writer.partitionBy(*partition_by)
         writer.saveAsTable(gen_q)
         self._publish(layer, table, gen_q, create=published is None)
-        self._drop_unretained(layer, gens + [name], gen_q)
+        self._drop_unretained(
+            layer, gens + [name], name, published and published.split(".")[-1]
+        )
         if finish is not None:
             finish()
 
@@ -429,11 +452,11 @@ class Catalog:
 
     def vacuum_generations(self, layer: str) -> list[str]:
         """Reclaim generation tables a crash or retention left behind, by
-        the retention rule of :meth:`_drop_unretained`: every generation
-        that is neither its view's published one nor within the retention
-        tail is dropped — all of them for a table with no view. A table
-        written by older code raises, as in :meth:`resolve_table`. Returns
-        the dropped names.
+        the retention rule of :meth:`_drop_unretained`, taking the
+        generation just before the published one as published before it:
+        every other generation outside the retention tail is dropped — all
+        of them for a table with no view. A table written by older code
+        raises, as in :meth:`resolve_table`. Returns the dropped names.
 
         Safe against concurrent readers of the PUBLISHED state (nothing
         referenced is touched); run it while no write is in flight on the
@@ -443,7 +466,12 @@ class Catalog:
         — only this layer's persisted tables are candidates."""
         dropped: list[str] = []
         for base, names in self._generations(layer).items():
-            dropped += self._drop_unretained(layer, names, self._published(layer, base))
+            published = self._published(layer, base)
+            published = published and published.split(".")[-1]
+            older = [n for n in names if published is not None and n < published]
+            dropped += self._drop_unretained(
+                layer, names, published, older[-1] if older else None
+            )
         return dropped
 
     # -- declared constraints (S7, maps sql/ddl.py:300-344) -----------------

@@ -99,6 +99,7 @@ def curate_corpus(
     spark = docs.sparkSession
 
     def _persist(df: DataFrame, stage: str) -> DataFrame:
+        from sql_data_warehouse_analytics_project_spark.sources import manifest
         from sql_data_warehouse_analytics_project_spark.sources.writers import (
             write_dataset,
         )
@@ -107,7 +108,7 @@ def curate_corpus(
         write_dataset(df, path)
         # explicit schema: an all-rows-filtered stage can legally write
         # zero part files, where schema inference would fail
-        return spark.read.schema(df.schema).parquet(path)
+        return spark.read.schema(df.schema).parquet(manifest.resolve(path))
 
     # Stage pins stay EAGER: every boundary feeds multiple consumers
     # (the next stage AND the report/audit legs), and a lazy pin turns

@@ -286,28 +286,28 @@ def write_bm25_index(
     byte-untouched in their old generations, referenced by the new
     manifest. Readers (:func:`read_bm25_index`) resolve the manifest
     once and see a complete index before or after any update — never a
-    mixture and never a maintenance window; space from superseded
-    generations is reclaimed by ``sources.manifest.vacuum`` (the only
-    call with a readers-drained contract). Re-running
+    mixture and never a maintenance window; the next publish deletes
+    the generations neither it nor the previous manifest references
+    (``sources/manifest``'s retention rule). Re-running
     ``write_bm25_index`` over a read-back index is the consolidation
     path when updates have scattered buckets across generations."""
     import os
 
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
     gid, gdir = manifest.new_generation(root)
     bucket = F.pmod(F.xxhash64(F.col("doc")), F.lit(doc_buckets))
-    write_dataset(
+    _write_layout(
         index["postings"].withColumn("_bucket", bucket),
         f"{gdir}/postings",
         partition_by=["_bucket"],
         sort_by=["term"],
     )
-    write_dataset(index["term_stats"], f"{gdir}/term_stats", sort_by=["term"])
+    _write_layout(index["term_stats"], f"{gdir}/term_stats", sort_by=["term"])
     present = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(f"{gdir}/postings")
@@ -387,15 +387,15 @@ def update_bm25_index_on_disk(
     Concurrent readers are always safe: an index resolved before the
     publish is a complete pinned snapshot, one resolved after sees the
     whole update. A crash anywhere before the publish leaves the old
-    manifest fully live and at worst an unreferenced generation dir for
-    ``sources.manifest.vacuum`` — there is no partial state to restore
+    manifest fully live and at worst an unpublished generation dir that
+    the next publish deletes — there is no partial state to restore
     and no recovery step. Returns the updated index dict (lazy reads of
     the new layout)."""
     import os
 
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
@@ -466,9 +466,9 @@ def update_bm25_index_on_disk(
     )
 
     gid, gdir = manifest.new_generation(root)
-    write_dataset(out, f"{gdir}/postings", partition_by=["_bucket"],
+    _write_layout(out, f"{gdir}/postings", partition_by=["_bucket"],
                   sort_by=["term"])
-    write_dataset(term_stats, f"{gdir}/term_stats", sort_by=["term"])
+    _write_layout(term_stats, f"{gdir}/term_stats", sort_by=["term"])
     written = {
         int(d.split("=", 1)[1])
         for d in os.listdir(f"{gdir}/postings")
@@ -508,7 +508,7 @@ def refold_bm25_meta(spark, path: str) -> dict:
     Returns the refolded meta scalars."""
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
@@ -525,7 +525,7 @@ def refold_bm25_meta(spark, path: str) -> dict:
     )
     term_stats = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     gid, gdir = manifest.new_generation(root)
-    write_dataset(term_stats, f"{gdir}/term_stats", sort_by=["term"])
+    _write_layout(term_stats, f"{gdir}/term_stats", sort_by=["term"])
     extra["n_docs"] = int(row["n"] or 0)
     extra["total_dl"] = int(row["t"] or 0)
     extra["term_stats"] = gid

@@ -1001,20 +1001,21 @@ def write_ivfpq_index(index: dict, path: str) -> None:
     the cells a batch lands in while unaffected cell directories stay
     byte-untouched in their generations. Publish is one atomic rename;
     rebuilds write a new generation and republish; readers resolving the
-    manifest never see a partial index; superseded generations vacuum
-    later. A full (re)build starts the tombstone list empty — it holds
-    the update batches' replaced-id markers, and re-writing the index
-    whole is the compaction that folds them away."""
+    manifest never see a partial index; superseded generations go at
+    the next publish but one (``sources/manifest``'s retention rule). A
+    full (re)build starts the tombstone list empty — it holds the update
+    batches' replaced-id markers, and re-writing the index whole is the
+    compaction that folds them away."""
     import os
 
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
     gid, gdir = manifest.new_generation(root)
-    write_dataset(
+    _write_layout(
         index["assignments"],
         f"{gdir}/assignments",
         partition_by=["centroid_id"],
@@ -1185,7 +1186,7 @@ def update_ivfpq_index(
 
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
@@ -1222,7 +1223,7 @@ def update_ivfpq_index(
         kept = _read_assignments(spark, root, m, only_cells=cells_new).join(
             F.broadcast(batch_ids), "neighbor_id", "anti"
         )
-        write_dataset(
+        _write_layout(
             kept.unionByName(new_rows),
             f"{gdir}/assignments",
             partition_by=["centroid_id"],
@@ -1233,7 +1234,7 @@ def update_ivfpq_index(
             for d in os.listdir(f"{gdir}/assignments")
             if d.startswith("centroid_id=")
         }
-    write_dataset(
+    _write_layout(
         batch_ids.withColumn("since_seq", F.lit(seq)), f"{gdir}/tombstones"
     )
     # both checkpointed frames are fully consumed by the writes above —

@@ -316,26 +316,27 @@ def write_tokenizer(model: dict, path: str) -> None:
 
     Publish is one atomic manifest replace: re-training republishes a
     NEW generation, readers that resolved earlier keep their pinned
-    snapshot (generation dirs are immutable until ``manifest.vacuum``),
+    snapshot (a generation stays on disk until the publish after the
+    one that superseded it),
     and a crash before publish leaves the old artifact fully live.
     Round-trip is bit-exact — encode through the read-back artifact
     equals encode through the in-memory model (tested)."""
     from sql_data_warehouse_analytics_project_spark.sources import manifest
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
+        _write_layout,
     )
 
     root = path.rstrip("/")
     if "word_pieces" in model:
         gid, gdir = manifest.new_generation(root)
-        write_dataset(model["merges"], f"{gdir}/merges", sort_by=["rank"])
-        write_dataset(
+        _write_layout(model["merges"], f"{gdir}/merges", sort_by=["rank"])
+        _write_layout(
             model["word_pieces"], f"{gdir}/word_pieces", sort_by=["w"]
         )
         extra = {"kind": "bpe", "n_merges": int(model["n_merges"])}
     elif "pieces" in model:
         gid, gdir = manifest.new_generation(root)
-        write_dataset(model["pieces"], f"{gdir}/pieces", sort_by=["piece"])
+        _write_layout(model["pieces"], f"{gdir}/pieces", sort_by=["piece"])
         extra = {
             "kind": "unigram",
             "n_single": int(model["n_single"]),

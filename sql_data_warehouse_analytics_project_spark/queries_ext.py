@@ -1008,22 +1008,28 @@ def q52_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q54_partitioned_dataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout-aware dataset sink through the driver gate: orders written
     with ``write_dataset`` (partitioned by year, sorted by order key
-    within files, records-per-file capped), read back from the partition
-    directories, aggregated — the oracle reads the ORIGINAL table, so any
-    row lost/duplicated/mangled by the partitioned write (incl. the
-    partition column's round trip through directory names) breaks the
-    hash compare."""
+    within files, records-per-file capped), read back through the
+    manifest with ``read_dataset``, aggregated — the oracle reads the
+    ORIGINAL table, so any row lost/duplicated/mangled by the partitioned
+    write (incl. the partition column's round trip through directory
+    names) breaks the hash compare. Each run publishes a new generation
+    of one fixed dataset per scale; the publish deletes all but the two
+    newest, so repeated runs do not grow the disk."""
     import os
 
     from sql_data_warehouse_analytics_project_spark.sources.writers import (
+        read_dataset,
         write_dataset,
     )
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
+    # a managed write refuses a root holding unmanaged files, so this is
+    # not the directory name older code wrote plain datasets under
     path = os.path.join(
-        "/tmp", "spark_graft_roundtrip_ds", os.path.basename(os.path.normpath(sf_dir))
+        "/tmp", "spark_graft_dataset_roundtrip",
+        os.path.basename(os.path.normpath(sf_dir)),
     )
     write_dataset(
         orders,
@@ -1032,7 +1038,7 @@ def q54_partitioned_dataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
         sort_by=["o_orderkey"],
         max_records_per_file=50_000,
     )
-    back = spark.read.parquet(path)
+    back = read_dataset(spark, path)
     return back.groupBy(F.col("order_year").cast("int"), "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(money("o_totalprice")).cast("double").alias("revenue"),

@@ -2084,8 +2084,8 @@ def qd50_bm25_sink_compact_lifecycle(spark: SparkSession, sf_dir: str) -> DataFr
     op — a month of 30s triggers is 86k files without it), and the folded
     index answers the same top-10 queries as qd45. The oracle is the
     one-shot full-corpus build twin — value-level proof that
-    sink → compact → fold ≡ build, bit-exactly (partition columns survive
-    compaction as data columns; all df/n/dl folding is integer). At
+    sink → compact → fold ≡ build, bit-exactly (compaction keeps the
+    cp/batch_id partition directories; all df/n/dl folding is integer). At
     100 TB this is the gate on the maintenance story: the stream never
     rewrites history, compaction restores scan health, and neither step
     may move a score by an ulp."""

@@ -6,36 +6,45 @@ filesystem/object-store warehouse the equivalent is a manifest pointer,
 the core idea of Delta/Iceberg table formats, rebuilt here dependency-
 free).
 
-Layout of a MANAGED dataset rooted at ``root``::
+Every path dataset has this one layout from its first write::
 
     root/_MANIFEST.json            <- the ONE mutable file (atomic replace)
     root/_generations/g000001/     <- immutable-once-published data dirs
     root/_generations/g000002/
 
-Both names start with ``_`` so Hadoop/Spark path filters ignore them: a
-legacy ``spark.read.parquet(root)`` of a freshly migrated dataset still
-sees the (stale but complete) pre-migration files at the root instead of
-a mixed tree.
+Both names start with ``_``, which Hadoop/Spark path filters skip, so a
+dataset is read only through :func:`resolve` (``writers.read_dataset``
+and every engine loader do). A root that holds data but no manifest was
+written by older code: :func:`resolve` and :func:`new_generation` raise
+for it, and the fix is to delete it and rerun the write.
 
 Protocol invariants:
 
-- **Writers never mutate published data.** A rewrite (compaction, index
+- **Published data is never rewritten.** A rewrite (compaction, index
   update, overwrite) lands completely under a NEW generation directory,
   then :func:`publish` atomically replaces ``_MANIFEST.json``
   (``os.replace`` — readers of the pointer see the old or the new
   manifest, never a torn one).
-- **Publish deletes nothing.** A reader that resolved the manifest
-  before a publish keeps reading its complete, untouched generation.
-  Space is reclaimed by the explicit :func:`vacuum` maintenance call,
-  whose only contract is a grace period: readers must not hold a
-  resolved generation across a vacuum (the same contract as Delta's
-  ``VACUUM``). This is the ONLY remaining caveat — concurrent
-  readers during publish are always safe.
-- **Crash safety for free.** A crash mid-write leaves a garbage
-  generation directory and the old manifest fully live; re-run the
-  operation (it writes a fresh generation) and vacuum eventually
-  removes the orphan. No restore/refold step exists because no partial
-  state is ever reachable through the pointer.
+- **One retention rule.** After the replace, :func:`publish` deletes
+  every generation that neither the new manifest nor the previous one
+  references: a reader that resolved the manifest before a publish
+  keeps its generation for one more publish (the catalog's rule: the
+  published generation plus a tail of one). A generation a crash left
+  unpublished is dropped by the next publish.
+- **No recovery step.** A crash before the replace leaves the old
+  manifest fully live and at worst an unpublished generation directory;
+  rerunning the operation writes a fresh generation at the same seq and
+  converges (``tests/test_dataset_crash.py`` enumerates the steps).
+- **Quiesce contract.** A slice write (``writers.write_partitioned_slice``,
+  the streaming sinks' per-(checkpoint, batch) ``k=v`` directories) is
+  the one write that adds files to the CURRENT generation. So a rewrite
+  of a dataset that takes slices — compaction, retire-compaction, an
+  overwrite — runs while no slice write is in flight, with the stream's
+  checkpoint past the rewritten batches: a slice written into the old
+  generation after the rewrite read it is lost, and a replay of a
+  rewritten batch overwrites its slice again (harmless once the rewrite
+  keeps the slice layout). A manifest has a single writer per dataset;
+  two writers allocating the same ``seq`` are outside the protocol.
 
 A manifest may reference SEVERAL generations at once (``referenced``):
 the doc-bucketed BM25 index points each bucket partition at the
@@ -63,27 +72,37 @@ def generation_dir(root: str, gid: str) -> str:
 
 
 def read_manifest(root: str) -> "dict | None":
-    """The current manifest, or None for an unmanaged path."""
+    """The current manifest, or None when the dataset was never
+    published."""
     try:
         with open(manifest_path(root)) as fh:
             return json.load(fh)
-    except FileNotFoundError:
+    except (FileNotFoundError, NotADirectoryError):
         return None
 
 
-def is_managed(root: str) -> bool:
-    return os.path.isfile(manifest_path(root))
-
-
 def resolve(root: str) -> str:
-    """The directory readers should scan: the current generation of a
-    managed dataset, the path itself otherwise. Reading THROUGH this
-    function is what makes publishes invisible to readers — resolve
-    once per logical read, then the snapshot is pinned."""
+    """The directory readers should scan: the current generation.
+    Reading THROUGH this function is what makes publishes invisible to
+    readers — resolve once per logical read, then the snapshot is pinned.
+
+    A root that was never published resolves to itself when it is absent
+    or holds only ``_``-prefixed entries (a crashed first write), so the
+    read fails the way a read of a missing dataset does. A root holding
+    data but no manifest raises."""
     m = read_manifest(root)
-    if m is None:
-        return root.rstrip("/")
-    return generation_dir(root, m["current"])
+    if m is not None:
+        return generation_dir(root, m["current"])
+    root = root.rstrip("/")
+    if os.path.isfile(root) or (
+        os.path.isdir(root)
+        and any(not n.startswith(("_", ".")) for n in os.listdir(root))
+    ):
+        raise RuntimeError(
+            f"{root} holds data but no {MANIFEST_NAME}: it was written by "
+            "older code; delete it and rerun the write"
+        )
+    return root
 
 
 def new_generation(root: str) -> "tuple[str, str]":
@@ -91,7 +110,9 @@ def new_generation(root: str) -> "tuple[str, str]":
     is seq-monotonic per dataset; nothing becomes visible until
     :func:`publish`."""
     m = read_manifest(root)
-    seq = (int(m.get("seq", 0)) if m else 0) + 1
+    if m is None:
+        resolve(root)  # refuse to write beside data older code left
+    seq = (int(m["seq"]) if m else 0) + 1
     gid = f"g{seq:06d}"
     gdir = generation_dir(root, gid)
     # a crashed earlier attempt may have left a partial dir at this seq
@@ -107,16 +128,17 @@ def publish(
     extra: "dict | None" = None,
     referenced: "list[str] | None" = None,
 ) -> dict:
-    """Atomically point the dataset at generation ``gid``.
+    """Atomically point the dataset at generation ``gid``, then apply
+    the retention rule (module docstring).
 
     ``extra`` carries dataset-specific metadata (the BM25 scalars and
     bucket map live here). ``referenced`` lists EVERY generation the new
-    manifest still reads from (defaults to ``[gid]``) — :func:`vacuum`
-    keeps exactly these. Returns the manifest written."""
-    seq = int(gid.lstrip("g"))
+    manifest still reads from (defaults to ``[gid]``). Returns the
+    manifest written."""
+    prev = read_manifest(root)
     m = {
         "current": gid,
-        "seq": seq,
+        "seq": int(gid.lstrip("g")),
         "referenced": sorted(set(referenced or [gid])),
         "extra": extra or {},
     }
@@ -124,37 +146,9 @@ def publish(
     with open(tmp, "w") as fh:
         json.dump(m, fh)
     os.replace(tmp, manifest_path(root))
-    return m
-
-
-def vacuum(root: str, *, prune_root: bool = True) -> "list[str]":
-    """Reclaim space: delete generation directories the current manifest
-    does not reference and (``prune_root``) stale pre-migration data
-    files left at the root by :func:`migrate`-style adoptions. Returns
-    the paths removed.
-
-    MAINTENANCE CALL with a grace-period contract: a reader that
-    resolved a generation before the latest publish and is still
-    scanning it would lose its files — run vacuum only after in-flight
-    readers have drained (publish itself never needs this; it deletes
-    nothing)."""
-    m = read_manifest(root)
-    if m is None:
-        return []
-    root = root.rstrip("/")
-    keep = set(m.get("referenced") or [m["current"]])
-    removed: list[str] = []
-    gen_root = os.path.join(root, GENERATIONS_DIR)
-    for name in sorted(os.listdir(gen_root)) if os.path.isdir(gen_root) else []:
+    keep = {*m["referenced"], *(prev["referenced"] if prev else [])}
+    gen_root = os.path.join(root.rstrip("/"), GENERATIONS_DIR)
+    for name in os.listdir(gen_root):
         if name not in keep:
-            p = os.path.join(gen_root, name)
-            shutil.rmtree(p, ignore_errors=True)
-            removed.append(p)
-    if prune_root:
-        for name in sorted(os.listdir(root)):
-            if name in (MANIFEST_NAME, GENERATIONS_DIR):
-                continue
-            p = os.path.join(root, name)
-            (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
-            removed.append(p)
-    return removed
+            shutil.rmtree(os.path.join(gen_root, name), ignore_errors=True)
+    return m

@@ -10,6 +10,7 @@ write in parallel; nothing funnels through the driver.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -58,44 +59,22 @@ def split_partition_suffix(path: str) -> "tuple[str, str]":
     current generation."""
     parts = path.rstrip("/").split("/")
     for i, comp in enumerate(parts):
-        if "=" in comp and comp not in ("", "."):
+        if "=" in comp:
             return "/".join(parts[:i]), "/".join(parts[i:])
     return path.rstrip("/"), ""
 
 
-def write_partitioned_slice(df: DataFrame, path: str) -> None:
-    """Overwrite ONE partition directory of a larger dataset (the
-    streaming sinks' per-(checkpoint, batch) layout contract — replays
-    rewrite their own slice byte-for-byte instead of double-appending).
-    Routed through the path observer so sink maintenance emits the same
-    auto-captured lineage edges and write metrics as any other dataset
-    write; the recorded dataset name strips the ``k=v`` partition
-    segments, so every slice of one sink dataset aggregates under one
-    lineage node (``postings``, not ``batch_id=7``). When the dataset
-    has been adopted under a generation manifest (a
-    :func:`compact_dataset` ran), the slice resolves into the CURRENT
-    generation directory."""
-    root, suffix = split_partition_suffix(path)
-    if suffix and manifest.is_managed(root):
-        path = f"{manifest.resolve(root)}/{suffix}"
-    out, finish = _observe_path_write(df, path, "overwrite")
-    out.write.mode("overwrite").parquet(path)
-    if finish is not None:
-        finish()
-
-
-def write_dataset(
+def _write_layout(
     df: DataFrame,
     path: str,
     *,
-    fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
     sort_by: Sequence[str] | None = None,
     max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-    compression: str | None = None,
 ) -> None:
-    """Write a pruning- and skipping-friendly dataset.
+    """The layout half of every dataset write: overwrite ``path`` — a
+    directory INSIDE a generation (``manifest.new_generation``), never a
+    dataset root — with ``df`` laid out for later reads.
 
     - ``partition_by``: hash-repartition on the partition columns first so
       each partition value is written by one task — without this, every
@@ -110,47 +89,73 @@ def write_dataset(
     When a path observer is active (``RunContext.enable_auto_capture``),
     the write emits auto-captured ``data_lineage`` edges to
     ``(external, <dataset>)`` and write metrics — the same zero-caller
-    contract catalog writes have.
-
-    When ``path`` is a generation-managed dataset (``sources/manifest``),
-    an ``overwrite`` lands in a NEW generation and publishes atomically
-    (concurrent readers resolving the manifest never observe a partial
-    or mixed dataset), and an ``append`` resolves into the current
-    generation directory.
-    """
-    publish_gid = None
-    if manifest.is_managed(path):
-        if mode == "overwrite":
-            publish_gid, gdir = manifest.new_generation(path)
-            root, path = path, gdir
-        else:
-            path = manifest.resolve(path)
-    out, finish = _observe_path_write(df, path, mode)
+    contract catalog writes have."""
+    out, finish = _observe_path_write(df, path, "overwrite")
     if partition_by:
         out = out.repartition(*[F.col(c) for c in partition_by])
     if sort_by:
         out = out.sortWithinPartitions(*sort_by)
-    writer = out.write.mode(mode).format(fmt)
+    writer = out.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if compression is not None:
-        writer = writer.option("compression", compression)
     writer.save(path)
-    if publish_gid is not None:
-        manifest.publish(root, publish_gid)
     if finish is not None:
         finish()
 
 
-def read_dataset(spark, path: str, *, fmt: str = "parquet") -> DataFrame:
-    """Read a path dataset THROUGH its generation manifest when it has
-    one (``sources/manifest.resolve``) — the reader half of the atomic-
-    publish protocol — and as a plain path otherwise. Partition-directory
-    discovery, pushdown, and pruning behave exactly as a direct read of
-    the resolved directory."""
-    return spark.read.format(fmt).load(manifest.resolve(path))
+def write_partitioned_slice(df: DataFrame, path: str) -> None:
+    """Overwrite ONE partition directory of a larger dataset (the
+    streaming sinks' per-(checkpoint, batch) layout contract — replays
+    rewrite their own slice byte-for-byte instead of double-appending).
+    ``path`` is ``<dataset root>/k=v/...``; the slice lands in the
+    CURRENT generation (the quiesce contract in ``sources/manifest``),
+    and a dataset's first slice publishes its first generation. Observed
+    like any dataset write; the recorded
+    dataset name strips the ``k=v`` partition segments, so every slice of
+    one sink dataset aggregates under one lineage node (``postings``, not
+    ``batch_id=7``)."""
+    root, suffix = split_partition_suffix(path)
+    if not suffix:
+        raise ValueError(f"{path} names no k=v partition slice")
+    m = manifest.read_manifest(root)
+    if m is None:
+        gid, gdir = manifest.new_generation(root)
+    else:
+        gid, gdir = None, manifest.generation_dir(root, m["current"])
+    _write_layout(df, f"{gdir}/{suffix}")
+    if gid is not None:
+        manifest.publish(root, gid)
+
+
+def write_dataset(
+    df: DataFrame,
+    path: str,
+    *,
+    partition_by: Sequence[str] | None = None,
+    sort_by: Sequence[str] | None = None,
+    max_records_per_file: int | None = None,
+) -> None:
+    """Write ``df`` as the whole dataset rooted at ``path``, laid out by
+    :func:`_write_layout`: the rows land in a NEW generation, then one
+    atomic manifest replace publishes it (``sources/manifest``), so
+    readers never see a partial dataset and a crash leaves the previous
+    state live. Read it back with :func:`read_dataset`."""
+    gid, gdir = manifest.new_generation(path)
+    _write_layout(
+        df, gdir, partition_by=partition_by, sort_by=sort_by,
+        max_records_per_file=max_records_per_file,
+    )
+    manifest.publish(path, gid)
+
+
+def read_dataset(spark, path: str) -> DataFrame:
+    """Read a path dataset THROUGH its generation manifest
+    (``sources/manifest.resolve``) — the reader half of the atomic-
+    publish protocol. Partition-directory discovery, pushdown, and
+    pruning behave exactly as a direct read of the current generation."""
+    return spark.read.parquet(manifest.resolve(path))
 
 
 def write_jsonl(
@@ -163,7 +168,9 @@ def write_jsonl(
 ) -> None:
     """JSON-Lines sink (corpus interchange). ``num_files`` coalesces small
     exports; leave unset for large data so every executor writes.
-    Observed like :func:`write_dataset`."""
+    Observed like :func:`write_dataset`. An interchange export for
+    readers outside the engine, so it stays a plain directory, not a
+    manifest-managed dataset."""
     out, finish = _observe_path_write(df, path, mode)
     if num_files:
         out = out.coalesce(num_files)
@@ -225,10 +232,8 @@ def dataset_file_stats(path: str) -> dict:
     overhead and its driver memory on file listings, not on data.
 
     A plain filesystem walk, O(files) with no executors: cheap enough to
-    run before every maintenance window. Managed datasets
-    (``sources/manifest``) stat their CURRENT generation only."""
-    import os
-
+    run before every maintenance window. Stats the CURRENT generation
+    (``sources/manifest``)."""
     n_files = total = small = 0
     for dirpath, _dirs, files in os.walk(manifest.resolve(path)):
         for f in files:
@@ -247,59 +252,54 @@ def dataset_file_stats(path: str) -> dict:
     }
 
 
+def _partition_columns(gdir: str) -> "list[str]":
+    """The partition columns of a written dataset, outermost first, read
+    off its first chain of ``k=v`` directories (empty for a flat one)."""
+    cols, d = [], gdir
+    while subs := sorted(
+        n for n in os.listdir(d) if "=" in n and os.path.isdir(f"{d}/{n}")
+    ):
+        cols.append(subs[0].split("=", 1)[0])
+        d = f"{d}/{subs[0]}"
+    return cols
+
+
 def compact_dataset(
     spark,
     path: str,
     *,
     target_bytes_per_file: int = 128 * 1024 * 1024,
-    partition_by: Sequence[str] | None = None,
     sort_by: Sequence[str] | None = None,
 ) -> dict:
-    """Small-file compaction: rewrite a parquet dataset into
-    ceil(total/target)-sized files, preserving (or re-establishing)
-    partition directories and in-file sort order. The 100 TB hygiene op a
-    streaming sink needs periodically — micro-batches emit files per
-    trigger, and a month of 30-second triggers is 86k tiny files per
-    partition.
+    """Small-file compaction: rewrite a parquet dataset into fewer,
+    larger files — ceil(total/target) for a flat dataset, one per
+    partition directory otherwise — in the partition layout its current
+    generation already has (its ``k=v`` directories), with an optional
+    in-file sort. The 100 TB hygiene op a streaming sink needs
+    periodically — micro-batches emit files per trigger, and a month of
+    30-second triggers is 86k tiny files per partition. A sink's
+    ``cp=<id>/batch_id=N`` slices keep their directories, so a later
+    slice lands beside them and a replay overwrites its own.
 
-    Generation-manifest commit (``sources/manifest``): the compacted
-    copy lands completely in a NEW generation directory under the
-    dataset root, then ONE atomic manifest replace publishes it —
-    concurrent readers resolving through the manifest (every engine
-    reader does: ``read_dataset``, the streaming-sink loaders,
-    ``read_bm25_index``) see the old or the new generation, never a
-    mixture, with no maintenance window. The first compaction ADOPTS a
-    plain directory into the managed layout; its pre-migration files
-    stay at the root (complete and untouched — a legacy direct
-    ``spark.read.parquet(root)`` still works until vacuum) and later
-    slice appends resolve into the current generation. A crash mid-write
-    leaves the live generation untouched plus an unreferenced directory
-    for :func:`sources.manifest.vacuum` — which is the only destructive
-    operation and the only one with a readers-drained contract. Returns
-    before/after file stats. On Delta this is OPTIMIZE; here it is the
-    parquet-native equivalent."""
+    The rewrite is :func:`write_dataset` on the root, so concurrent
+    readers see the old or the new generation, never a mixture; on a
+    dataset that takes slices it runs under the quiesce contract of
+    ``sources/manifest``. Returns before/after file stats. On Delta this
+    is OPTIMIZE; here it is the parquet-native equivalent."""
     import math
 
     before = dataset_file_stats(path)
-    df = spark.read.parquet(manifest.resolve(path))
+    gdir = manifest.resolve(path)
+    df = spark.read.parquet(gdir)
     n_out = max(1, math.ceil(before["total_bytes"] / target_bytes_per_file))
-    gid, gdir = manifest.new_generation(path)
-    out = df
-    if partition_by:
-        out = out.repartition(*[F.col(c) for c in partition_by])
-    else:
-        out = out.repartition(n_out)
-    if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
-    writer = out.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(gdir)
-    manifest.publish(path, gid)
-    after = dataset_file_stats(path)
+    cols = _partition_columns(gdir)
+    write_dataset(
+        df if cols else df.repartition(n_out), path,
+        partition_by=cols, sort_by=sort_by,
+    )
     return {
         "before": before,
-        "after": after,
+        "after": dataset_file_stats(path),
         "target_files": n_out,
-        "generation": gid,
+        "generation": manifest.read_manifest(path)["current"],
     }

@@ -436,8 +436,8 @@ def corpus_dedup_sink(
     batch × ledger-probe sized; the ledger read prunes to fingerprint
     columns and the anti-join ships only hashes. As the per-batch ledger
     partitions accumulate, fold them with
-    ``sources.writers.compact_dataset`` (the partition columns survive
-    as data columns, so the self-exclusion filter keeps working).
+    ``sources.writers.compact_dataset`` (it keeps the slice directories;
+    quiesce contract in ``sources/manifest``).
 
     ``foreachBatch`` batch ids restart at 0 when the checkpoint is wiped
     (which also replays the source): pass ``checkpoint_id`` (the
@@ -460,9 +460,7 @@ def corpus_dedup_sink(
             resolved["id"] = _checkpoint_identity(spark, checkpoint_id)
         cp = resolved.get("id") or "default"
         try:
-            # resolve through the generation manifest once the ledger has
-            # been compacted into the managed layout (plain dir before)
-            ledger = spark.read.parquet(sources_manifest.resolve(ledger_dir))
+            ledger = writers.read_dataset(spark, ledger_dir)
             prior = ledger.filter(
                 ~((F.col("cp") == cp) & (F.col("batch_id") == batch_id))
             ).select("fingerprint")
@@ -529,9 +527,8 @@ def bm25_index_sink(
     retired slice is overwritten per (cp, batch) like every other.
 
     As batch partitions accumulate, fold them with
-    ``sources.writers.compact_dataset`` (the partition columns survive
-    as data columns, so load-time folding — including the tombstone
-    anti-join — keeps working)."""
+    ``sources.writers.compact_dataset`` (it keeps the slice directories;
+    quiesce contract in ``sources/manifest``)."""
     from sql_data_warehouse_analytics_project_spark.llm.retrieval import _tokenize
 
     resolved: dict = {}
@@ -569,11 +566,12 @@ def bm25_index_sink(
             F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
         ).collect()[0]
         id_type = dict(batch_df.dtypes)[id_col]
-        spark.createDataFrame(
-            [(int(row["n_docs"] or 0), int(row["total_dl"] or 0), id_type)],
-            "n_docs long, total_dl long, id_type string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{sources_manifest.resolve(f'{index_dir}/stats')}/{part}"
+        writers.write_partitioned_slice(
+            spark.createDataFrame(
+                [(int(row["n_docs"] or 0), int(row["total_dl"] or 0), id_type)],
+                "n_docs long, total_dl long, id_type string",
+            ).coalesce(1),
+            f"{index_dir}/stats/{part}",
         )
 
     return sink
@@ -598,9 +596,8 @@ def token_count_sink(
     Replay-idempotent by the sink layout contract (partition overwrite
     per (cp, batch); ``checkpoint_id`` keys lineages by the stream's
     stable query uuid, exactly :func:`corpus_dedup_sink`). As slices
-    accumulate, ``sources.writers.compact_dataset`` folds them (the
-    partition columns survive as data columns; the fold is a plain
-    sum)."""
+    accumulate, ``sources.writers.compact_dataset`` folds them (quiesce
+    contract in ``sources/manifest``; the fold is a plain sum)."""
     from sql_data_warehouse_analytics_project_spark.llm.text import tokens
 
     resolved: dict = {}
@@ -645,7 +642,7 @@ def token_drift_from_sink(
     )
 
     ca = (
-        spark.read.parquet(sources_manifest.resolve(ledger_dir))
+        writers.read_dataset(spark, ledger_dir)
         .groupBy("token")
         .agg(F.sum("cnt").cast("long").alias("ca"))
     )
@@ -667,38 +664,29 @@ def retire_compact_bm25_sink(spark, index_dir: str) -> dict:
     months ago).
 
     Both rewrites commit through the generation manifest
-    (``sources/manifest``): the live postings land as a new generation
-    partitioned by ``(cp, batch_id)`` — the SAME directory shape the
-    sink writes, so later micro-batches keep appending slices into the
-    current generation — and the ledger's new generation holds a single
-    0-row marker slice (``cp=__compacted__/batch_id=-1``) that keeps
-    the dataset readable and the fold on the CDC branch. Publishes are
-    atomic; concurrent READERS are always safe; superseded generations
-    are reclaimed by ``sources.manifest.vacuum`` later.
+    (``sources/manifest``): the live postings are ``write_dataset`` of
+    the postings root partitioned by ``(cp, batch_id)`` — the SAME
+    directory shape the sink writes, so later micro-batches keep writing
+    slices into the current generation — and the ledger's new generation
+    holds a single 0-row marker slice (``cp=__compacted__/batch_id=-1``)
+    that keeps the dataset readable and the fold on the CDC branch.
+    Publishes are atomic; concurrent READERS are always safe; the stream
+    itself is quiesced by the contract of ``sources/manifest``.
 
     Correctness after compaction is unchanged: surviving postings keep
     their original ``(cp, batch_id)``, so a FUTURE retire of doc ``d``
     at batch ``B`` still shadows d's older rows (``batch_id < B``), and
     a replace in batch ``B`` keeps its own rows (``batch_id >= B``).
-    The one contract (same as any sink compaction): run it only when
-    the stream's checkpoint is PAST the compacted batches — a replay of
-    an already-compacted batch would re-write its slice alongside the
-    compacted copy and double-count. Returns row counts dropped/kept."""
+    Returns row counts dropped/kept."""
     from pyspark.sql.utils import AnalysisException
-
-    from sql_data_warehouse_analytics_project_spark.sources.writers import (
-        write_dataset,
-    )
 
     root = index_dir.rstrip("/")
     try:
-        retired = spark.read.parquet(
-            sources_manifest.resolve(f"{root}/retired")
-        )
+        retired = writers.read_dataset(spark, f"{root}/retired")
     except AnalysisException:
         return {"postings_kept": None, "postings_dropped": 0,
                 "retired_folded": 0}
-    postings = spark.read.parquet(sources_manifest.resolve(f"{root}/postings"))
+    postings = writers.read_dataset(spark, f"{root}/postings")
     n_retired = retired.count()
     last = retired.groupBy("cp", "doc").agg(
         F.max("batch_id").alias("_last_retire")
@@ -714,21 +702,19 @@ def retire_compact_bm25_sink(spark, index_dir: str) -> dict:
     )
     n_before = postings.count()
 
-    gid, gdir = sources_manifest.new_generation(f"{root}/postings")
-    write_dataset(live, gdir, partition_by=["cp", "batch_id"],
-                  sort_by=["term"])
-    sources_manifest.publish(f"{root}/postings", gid)
-    n_after = spark.read.parquet(
-        sources_manifest.resolve(f"{root}/postings")
-    ).count()
+    writers.write_dataset(
+        live, f"{root}/postings", partition_by=["cp", "batch_id"], sort_by=["term"]
+    )
+    n_after = writers.read_dataset(spark, f"{root}/postings").count()
 
     # truncate the ledger: one 0-row marker slice keeps the dataset
     # readable (an empty dir can't be) and the fold on the CDC branch
     doc_type = dict(retired.dtypes)["doc"]
     rgid, rgdir = sources_manifest.new_generation(f"{root}/retired")
-    spark.createDataFrame([], f"doc {doc_type}").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{rgdir}/cp=__compacted__/batch_id=-1")
+    writers._write_layout(
+        spark.createDataFrame([], f"doc {doc_type}").coalesce(1),
+        f"{rgdir}/cp=__compacted__/batch_id=-1",
+    )
     sources_manifest.publish(f"{root}/retired", rgid)
     return {
         "postings_kept": n_after,
@@ -756,16 +742,12 @@ def load_bm25_index_from_sink(spark, index_dir: str) -> dict:
     postings-METADATA pass at load time (ids and lengths; the text was
     never stored), the price of delete support without rewriting
     history. Folding stays correct after ``compact_dataset`` on any of
-    the per-batch datasets: the cp/batch_id partition columns survive
-    compaction as data columns."""
+    the per-batch datasets: compaction keeps the cp/batch_id partition
+    directories."""
     from pyspark.sql.utils import AnalysisException
 
     def _read(sub: str):
-        # each sink sub-dataset resolves independently through its
-        # generation manifest once compacted (plain dir before)
-        return spark.read.parquet(
-            sources_manifest.resolve(f"{index_dir}/{sub}")
-        )
+        return writers.read_dataset(spark, f"{index_dir}/{sub}")
 
     stats = _read("stats")
     id_type = stats.select("id_type").limit(1).collect()[0][0]
@@ -855,8 +837,8 @@ def ivfpq_index_sink(
     :func:`load_ivfpq_index_from_sink` folds the ledger into a
     search-ready pinned snapshot proven equal to applying
     ``update_ivfpq_index`` batch-by-batch; folding the slices INTO the
-    manifest layout (compaction) is ``write_ivfpq_index`` over the
-    loaded snapshot, after which fresh batches keep appending slices."""
+    manifest layout (compaction; quiesce contract in ``sources/manifest``)
+    is ``write_ivfpq_index`` over the loaded snapshot."""
     from sql_data_warehouse_analytics_project_spark.llm import similarity
 
     resolved: dict = {}
@@ -887,11 +869,12 @@ def ivfpq_index_sink(
         )
         n_rows = batch_df.count()
         bq = similarity._mean_qerr(batch_df, ex["codebooks"], id_col, vec_col)
-        spark.createDataFrame(
-            [(int(n_rows), float(bq) if bq is not None else None)],
-            "n_rows long, batch_qerr double",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{sources_manifest.resolve(f'{index_dir}/qstats')}/{part}"
+        writers.write_partitioned_slice(
+            spark.createDataFrame(
+                [(int(n_rows), float(bq) if bq is not None else None)],
+                "n_rows long, batch_qerr double",
+            ).coalesce(1),
+            f"{index_dir}/qstats/{part}",
         )
 
     return sink
@@ -920,19 +903,15 @@ def load_ivfpq_index_from_sink(
     ``similarity.retrain_ivfpq_if_needed`` consumes stream drift too.
     With no ledger on disk this is exactly ``read_ivfpq_index``.
     Folding stays correct after ``compact_dataset`` on the ledger
-    datasets (cp/batch_id survive as data columns)."""
+    datasets (compaction keeps the cp/batch_id directories)."""
     from pyspark.sql.utils import AnalysisException
 
     from sql_data_warehouse_analytics_project_spark.llm import similarity
 
     base = similarity.read_ivfpq_index(spark, index_dir)
     try:
-        codes = spark.read.parquet(
-            sources_manifest.resolve(f"{index_dir}/codes")
-        )
-        retired = spark.read.parquet(
-            sources_manifest.resolve(f"{index_dir}/retired")
-        )
+        codes = writers.read_dataset(spark, f"{index_dir}/codes")
+        retired = writers.read_dataset(spark, f"{index_dir}/retired")
     except AnalysisException:  # no stream slices yet
         return base
     last = retired.groupBy("cp", "neighbor_id").agg(
@@ -952,9 +931,7 @@ def load_ivfpq_index_from_sink(
     out = dict(base)
     out["assignments"] = base_live.unionByName(ledger_live)
     try:
-        q = spark.read.parquet(
-            sources_manifest.resolve(f"{index_dir}/qstats")
-        )
+        q = writers.read_dataset(spark, f"{index_dir}/qstats")
         mx = q.agg(F.max("batch_qerr")).collect()[0][0]
         bq = base.get("qerr")
         if (
@@ -990,7 +967,8 @@ def sketch_sink(
     concatenated batches (gate key qd80). Replay-idempotent by the
     sink layout contract (partition overwrite per (cp, batch), the
     :func:`token_count_sink` protocol); slices compact with
-    ``sources.writers.compact_dataset`` without changing the fold."""
+    ``sources.writers.compact_dataset`` (quiesce contract in
+    ``sources/manifest``) without changing the fold."""
     from sql_data_warehouse_analytics_project_spark.llm.sketches import (
         hll_registers,
     )
@@ -1029,12 +1007,12 @@ def sketches_from_sink(spark, ledger_dir: str) -> dict:
     ``hll_estimate``, merges with other corpora) is oblivious to the
     streaming provenance."""
     cms = (
-        spark.read.parquet(sources_manifest.resolve(f"{ledger_dir}/cms"))
+        writers.read_dataset(spark, f"{ledger_dir}/cms")
         .groupBy("depth", "bucket")
         .agg(F.sum("cell_count").cast("long").alias("cell_count"))
     )
     hll = (
-        spark.read.parquet(sources_manifest.resolve(f"{ledger_dir}/hll"))
+        writers.read_dataset(spark, f"{ledger_dir}/hll")
         .groupBy("register")
         .agg(F.max("rho").alias("rho"))
     )

@@ -9,7 +9,7 @@ crash raised in place of its k-th call, and the test asserts that
   table, where the operation is a first write or a drop);
 - rerunning the operation converges to the uninterrupted run's state;
 - ``vacuum_generations`` then leaves only the published generation and
-  the retention tail.
+  the retention tail before it.
 
 The guard at the end pins what makes a single table format enough: no
 module but ``catalog.py`` writes a metastore table.
@@ -163,8 +163,31 @@ def test_crash_at_every_catalog_call_converges(spark, case):
                 assert gens == [], (k, calls[k - 1], gens)
             else:
                 published = cat.resolve_table(LAYER, t).split(".")[-1]
-                tail = gens[-(cat.generation_retention + 1):]
+                older = [g for g in gens if g < published]
+                tail = older[len(older) - cat.generation_retention:]
                 assert set(gens) <= {published, *tail}, (k, calls[k - 1], gens)
+    finally:
+        cat.drop_layers()
+
+
+def test_overwrite_retains_the_generation_it_replaced(spark):
+    """An overwrite keeps the generation that was published until its own
+    publish (readers resolved to it finish their scans), not the newest
+    generation name: a generation an earlier overwrite left unpublished
+    is dropped instead."""
+    cat = Catalog(spark, prefix="crash_retain_")
+    cat.drop_layers()
+    cat.create_layers()
+    try:
+        cat.overwrite(_df(cat, [(1, "a")]), LAYER, "t")
+        cat.overwrite(_df(cat, [(2, "b")]), LAYER, "t")
+        # an overwrite that crashed before its publish
+        _df(cat, [(3, "c")]).write.format("parquet").saveAsTable(
+            f"{cat.db(LAYER)}.t__g000003"
+        )
+        cat.overwrite(_df(cat, [(4, "d")]), LAYER, "t")
+        assert _generations(cat, "t") == ["t__g000002", "t__g000004"]
+        assert _state(cat, "t") == (("k", "p"), [(4, "d")])
     finally:
         cat.drop_layers()
 

@@ -27,7 +27,8 @@ def outdir():
 
 def test_cli_curate_smoke(spark, outdir, capsys):
     """--curate on a tiny corpus: exit 0, SUCCESS JSON with the stage
-    funnel, split-partitioned curated parquet + decisions audit trail."""
+    funnel, split-partitioned curated parquet + decisions audit trail,
+    found through the generation directories the JSON names."""
     base = (
         "the quick brown fox jumps over the lazy dog and then runs far "
         "away to the hills where it meets other animals living freely"
@@ -54,13 +55,19 @@ def test_cli_curate_smoke(spark, outdir, capsys):
     assert funnel["quality_filter"] <= funnel["near_dedup"]
     assert funnel["curated"] == funnel["quality_filter"]
 
-    # split-partitioned curated output + decisions audit trail on disk
-    curated_dir = os.path.join(outdir, "curated")
+    # split-partitioned curated output + decisions audit trail on disk,
+    # each the current generation of its dataset under --out
+    datasets = report["datasets"]
+    curated_dir = datasets["curated"]
+    assert curated_dir.startswith(os.path.join(outdir, "curated", "_generations"))
     assert any(p.startswith("split=") for p in os.listdir(curated_dir))
     curated = spark.read.parquet(curated_dir)
     assert curated.count() == funnel["curated"]
     assert "split" in curated.columns
-    decisions = spark.read.parquet(os.path.join(outdir, "decisions"))
+    assert datasets["decisions"].startswith(
+        os.path.join(outdir, "decisions", "_generations")
+    )
+    decisions = spark.read.parquet(datasets["decisions"])
     assert decisions.count() > 0
 
 

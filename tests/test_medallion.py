@@ -442,17 +442,19 @@ def test_curate_cli_writes_split_partitioned_corpus(spark, sf_dir, tmp_path, cap
     assert payload["status"] == "SUCCESS"
     f = payload["funnel"]
     assert f["exact_dedup"] >= f["near_dedup"] >= f["quality_filter"] == f["curated"]
-    splits = {d for d in os.listdir(os.path.join(out, "curated"))
-              if d.startswith("split=")}
+    curated = payload["datasets"]["curated"]
+    splits = {d for d in os.listdir(curated) if d.startswith("split=")}
     assert splits == {"split=train", "split=val", "split=test"}
-    back = spark.read.parquet(os.path.join(out, "curated"))
+    back = spark.read.parquet(curated)
     assert back.count() == f["curated"]
 
 
 def test_vacuum_generations_drops_only_unretained(cat, spark):
     """One retention rule: a generation that is neither its view's
-    published one nor in the retention tail is dropped, and so is every
-    generation of a table with no view (a crashed first write or drop)."""
+    published one nor in the retention tail BEFORE it is dropped, so are
+    generations newer than the published one (overwrites that crashed
+    before their publish), and so is every generation of a table with no
+    view (a crashed first write or drop)."""
     from pyspark.sql import types as T
 
     sch = T.StructType([T.StructField("v", T.LongType())])
@@ -468,15 +470,17 @@ def test_vacuum_generations_drops_only_unretained(cat, spark):
     assert cat.resolve_table("bronze", "vac_t").endswith("vac_t__g000003")
     gen("vac_t__g000001", 1)  # older than published, outside the tail
     gen("vac_t__g000004", 4)  # two overwrites that crashed before their
-    gen("vac_t__g000005", 5)  # publish: newer than published, the tail
+    gen("vac_t__g000005", 5)  # publish: newer than published, unpublished
     gen("vac_gone__g000001", 9)  # its table has no view
     dropped = [n for n in cat.vacuum_generations("bronze") if n.startswith("vac_")]
     assert sorted(dropped) == [
-        "vac_gone__g000001", "vac_t__g000001", "vac_t__g000002",
+        "vac_gone__g000001", "vac_t__g000001", "vac_t__g000004", "vac_t__g000005",
     ]
     left = {t.name for t in spark.catalog.listTables(cat.db("bronze"))}
-    assert {"vac_t__g000003", "vac_t__g000004", "vac_t__g000005"} <= left
-    assert not {"vac_gone__g000001", "vac_t__g000001", "vac_t__g000002"} & left
+    assert {"vac_t__g000002", "vac_t__g000003"} <= left
+    assert not {
+        "vac_gone__g000001", "vac_t__g000001", "vac_t__g000004", "vac_t__g000005",
+    } & left
     assert [r.v for r in cat.read("bronze", "vac_t").collect()] == [3]
     assert cat.vacuum_generations("bronze") == []
 

@@ -759,6 +759,9 @@ def test_corpus_dedup_sink_lifetime_dedup_and_replay(spark, tmp_path):
     bounded), and a replayed batch rewrites its own partitions instead of
     double-appending or (the subtle failure) seeing its own fingerprints
     and emitting an empty partition."""
+    from sql_data_warehouse_analytics_project_spark.sources.writers import (
+        read_dataset,
+    )
     from sql_data_warehouse_analytics_project_spark.streaming.ingest import (
         corpus_dedup_sink,
     )
@@ -778,12 +781,12 @@ def test_corpus_dedup_sink_lifetime_dedup_and_replay(spark, tmp_path):
     )
     sink(b1, 1)
 
-    out = spark.read.parquet(corpus)
+    out = read_dataset(spark, corpus)
     assert {r.doc_id for r in out.select("doc_id").collect()} == {1, 3, 11}
 
     # crash replay of batch 1: same survivors, no double-append, no wipe
     sink(b1, 1)
-    out2 = spark.read.parquet(corpus)
+    out2 = read_dataset(spark, corpus)
     assert {r.doc_id for r in out2.select("doc_id").collect()} == {1, 3, 11}
     assert out2.count() == 3
 
@@ -792,8 +795,38 @@ def test_corpus_dedup_sink_lifetime_dedup_and_replay(spark, tmp_path):
         [(20, "GAMMA doc"), (21, "delta doc")], "doc_id long, text string"
     )
     sink(b2, 2)
-    final = spark.read.parquet(corpus)
+    final = read_dataset(spark, corpus)
     assert {r.doc_id for r in final.select("doc_id").collect()} == {1, 3, 11, 21}
+
+
+def test_corpus_dedup_sink_after_compaction_admits_nothing_seen(spark, tmp_path):
+    """Compacting the corpus and its fingerprint ledger keeps their
+    ``cp=``/``batch_id=`` slices, so after a replay of a compacted batch
+    and a new batch, no content seen before the compaction is admitted
+    again and every admitted document is read exactly once."""
+    from sql_data_warehouse_analytics_project_spark.sources.writers import (
+        compact_dataset,
+        read_dataset,
+    )
+    from sql_data_warehouse_analytics_project_spark.streaming.ingest import (
+        corpus_dedup_sink,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    ledger = str(tmp_path / "ledger")
+    sink = corpus_dedup_sink(corpus, ledger)
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    sink(docs([(1, "alpha doc"), (2, "beta doc")]), 0)
+    sink(docs([(3, "gamma doc")]), 1)
+    compact_dataset(spark, corpus)
+    compact_dataset(spark, ledger)
+    sink(docs([(3, "gamma doc")]), 1)  # replay of a compacted batch
+    sink(docs([(10, "ALPHA doc"), (11, "gamma  doc"), (12, "delta doc")]), 2)
+    got = sorted(r.doc_id for r in read_dataset(spark, corpus).collect())
+    assert got == [1, 2, 3, 12]
 
 
 def test_bm25_index_sink_incremental_equals_build_and_replays(spark, tmp_path):
@@ -918,7 +951,7 @@ def test_bm25_index_sink_cdc_replace_and_delete(spark, tmp_path):
     assert not any(r[1] == 3 for r in got)  # the deleted doc never surfaces
 
     # long-running-stream hygiene: compacting the per-batch partitions
-    # must not change the folded index (cp/batch_id survive as data cols)
+    # must not change the folded index (compaction keeps cp/batch_id)
     for sub in ("postings", "deltas", "retired"):
         compact_dataset(spark, f"{idx_dir}/{sub}")
     loaded_c = load_bm25_index_from_sink(spark, idx_dir)
