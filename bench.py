@@ -319,10 +319,7 @@ def main() -> None:
             cat.drop_layers()
             cat.create_layers()
             t0 = time.time()
-            res = {
-                **bronze.load_source_system(cat, crm, bronze.CRM_FILES),
-                **bronze.load_source_system(cat, erp, bronze.ERP_FILES),
-            }
+            res = bronze.load_sources(cat, crm, erp)
             rows = sum(r.get("rows_loaded", 0) for r in res.values())
             out["bronze_rows_per_second"] = round(
                 rows / max(time.time() - t0, 1e-9), 1

@@ -48,7 +48,7 @@ from __future__ import annotations
 
 import itertools
 import re
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +108,31 @@ def with_medallion_metadata(
         .withColumn("is_deleted", F.lit(False))
         .withColumn("row_hash", row_hash(*data_cols))
     )
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with a row counter that the job writing it fills, and the
+    getter to call once that write is done: the count of what was written
+    without a second scan of the data or the table."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    return counted, lambda: int(obs.get["rows"])
+
+
+def _generation_writer(df: DataFrame, mode: str, partition_by: Sequence[str] = ()):
+    """Parquet writer for a generation table. The dynamic
+    ``partitionOverwriteMode`` is stored on the table it creates, so
+    :meth:`Catalog.overwrite_partitions` replaces only the partitions it
+    writes whatever the session conf says (a per-write option on
+    ``insertInto`` is ignored, and flipping the session conf would race
+    with other threads' writes)."""
+    writer = (
+        df.write.mode(mode).format("parquet")
+        .option("partitionOverwriteMode", "dynamic")
+    )
+    return writer.partitionBy(*partition_by) if partition_by else writer
 
 
 class Catalog:
@@ -292,10 +317,7 @@ class Catalog:
         gen_q = f"{self.db(layer)}.{self._gen_name(table, 1)}"
         # a crashed first write may have left generation 1 without a view
         self.spark.sql(f"DROP TABLE IF EXISTS {gen_q}")
-        writer = empty.write.format("parquet")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(gen_q)
+        _generation_writer(empty, "errorifexists", partition_by).saveAsTable(gen_q)
         self._publish(layer, table, gen_q, create=True, comment=comment)
 
     def table_exists(self, layer: str, table: str) -> bool:
@@ -358,7 +380,7 @@ class Catalog:
         finish = None
         if self.observer is not None:
             df, finish = self.observer.begin_write(df, layer, table, mode="append")
-        writer = df.write.mode("append").format("parquet")
+        pcols: list[str] = []
         if published is None:
             # first write creates generation 1 + the published view, so
             # every table is pointer-committed from birth
@@ -367,9 +389,7 @@ class Catalog:
         else:
             target = published
             pcols = self._partition_columns(target)
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-        writer.saveAsTable(target)
+        _generation_writer(df, "append", pcols).saveAsTable(target)
         if published is None:
             self._publish(layer, table, target, create=True)
         if finish is not None:
@@ -416,13 +436,10 @@ class Catalog:
         seq = int(GEN_RE.match(gens[-1]).group("seq")) + 1 if gens else 1
         name = self._gen_name(table, seq)
         gen_q = f"{self.db(layer)}.{name}"
-        writer = df.write.mode("overwrite").format("parquet")
-        if partition_by:
-            # directory partitioning lives on the generation table, so the
-            # published view keeps partition pruning (the scale lever for
-            # month-scoped fact scans)
-            writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(gen_q)
+        # directory partitioning lives on the generation table, so the
+        # published view keeps partition pruning (the scale lever for
+        # month-scoped fact scans)
+        _generation_writer(df, "overwrite", partition_by).saveAsTable(gen_q)
         self._publish(layer, table, gen_q, create=published is None)
         self._drop_unretained(
             layer, gens + [name], name, published and published.split(".")[-1]
@@ -436,19 +453,25 @@ class Catalog:
         generation; every other partition's files are untouched. Commit is
         per-job via the parquet committer — a crash mid-write leaves the
         old partition files visible (on Delta this would be a single
-        atomic commit)."""
+        atomic commit). The dynamic mode is the generation table's own
+        option (:func:`_generation_writer`); the session conf is never
+        touched, so concurrent writers cannot turn this into a static
+        overwrite that drops every other partition."""
         # insertInto writes files: it targets the PHYSICAL generation behind
         # the published view (views are not insertable)
         target = self.resolve_table(layer, table)
+        props = {
+            r["col_name"]: r["data_type"]
+            for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {target}").collect()
+        }
+        if "partitionOverwriteMode=dynamic" not in props.get("Storage Properties", ""):
+            raise RuntimeError(
+                f"{target} lacks the dynamic partitionOverwriteMode option; it "
+                "was written by older code: rerun the stage as a full build"
+            )
         tcols = self.spark.table(target).columns
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, "static")
-        self.spark.conf.set(key, "dynamic")
-        try:
-            # insertInto is position-based: order columns to the table schema
-            df.select(*tcols).write.mode("overwrite").insertInto(target)
-        finally:
-            self.spark.conf.set(key, prev)
+        # insertInto is position-based: order columns to the table schema
+        df.select(*tcols).write.mode("overwrite").insertInto(target)
 
     def vacuum_generations(self, layer: str) -> list[str]:
         """Reclaim generation tables a crash or retention left behind, by

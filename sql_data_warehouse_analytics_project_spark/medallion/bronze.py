@@ -22,14 +22,15 @@ Partitioning the window by ``_source_file`` keeps it parallel across files.
 from __future__ import annotations
 
 import uuid
-from collections.abc import Sequence
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sql_data_warehouse_analytics_project_spark.catalog import Catalog
+from sql_data_warehouse_analytics_project_spark.catalog import Catalog, observe_rows
 from sql_data_warehouse_analytics_project_spark.functions.scalars import row_hash
+from sql_data_warehouse_analytics_project_spark.session import fan_out
 from sql_data_warehouse_analytics_project_spark.sources.readers import read_csv
 
 #: Bronze ingestion metadata columns (reference ``bronze.py:106-114``).
@@ -89,14 +90,12 @@ def load_csv_to_bronze(
     """
     batch_id = batch_id or new_batch_id()
     df = read_csv(catalog.spark, csv_path, **csv_options)
-    enriched = enrich_bronze(df, batch_id)
+    enriched, count = observe_rows(enrich_bronze(df, batch_id))
     # no explicit create_table: append-mode saveAsTable creates an absent
     # table from the data's schema (schema-on-read), and the empty-table
     # write was pure metastore overhead (~2.5s/file measured)
     catalog.append(enriched, "bronze", table)
-    n = catalog.spark.table(catalog.qualified("bronze", table)).filter(
-        F.col("_ingestion_batch_id") == batch_id
-    ).count()
+    n = count()
     if run_context is not None:
         run_context.log_lineage(
             source_schema="source",
@@ -127,34 +126,30 @@ ERP_FILES = {
 }
 
 
-def load_source_system(
-    catalog: Catalog,
-    base_dir: str,
-    manifest: dict[str, str],
-    *,
-    run_context=None,
-    max_parallel: int = 4,
+def load_sources(
+    catalog: Catalog, crm_dir: str, erp_dir: str, *, run_context=None
 ) -> dict[str, dict]:
-    """Load a whole source system; per-file errors don't halt the batch
+    """Load both source systems' files (:data:`CRM_FILES` under
+    ``crm_dir``, :data:`ERP_FILES` under ``erp_dir``) into their bronze
+    tables; returns ``{table: result}``. A file that fails is recorded as
+    FAILED (and in the error log) without halting the others
     (``bronze.py:626-628``).
 
-    Files load CONCURRENTLY (each file is an independent Spark job; the
-    scheduler interleaves their stages across executors) — the reference
-    loads serially because each load holds a DB connection, a constraint
-    Spark doesn't have. Driver-side lifecycle writes (lineage) stay inside
-    each task and append to distinct log tables, which is thread-safe."""
-    from concurrent.futures import ThreadPoolExecutor
+    The files load side by side (:func:`session.fan_out`): each is an
+    independent read and append. The reference loads them one after
+    another because each load holds a PostgreSQL connection; Spark has no
+    such limit."""
+    files = [(f"{crm_dir}/{f}", t) for f, t in CRM_FILES.items()] + [
+        (f"{erp_dir}/{f}", t) for f, t in ERP_FILES.items()
+    ]
 
-    def one(item: tuple[str, str]) -> tuple[str, dict]:
-        fname, table = item
+    def one(path: str, table: str) -> dict:
         try:
-            return table, load_csv_to_bronze(
-                catalog, f"{base_dir}/{fname}", table, run_context=run_context
-            )
+            return load_csv_to_bronze(catalog, path, table, run_context=run_context)
         except Exception as e:  # noqa: BLE001 — batch continues, error recorded
             if run_context is not None:
                 run_context.log_error(e, table_name=table)
-            return table, {"table": table, "status": "FAILED", "error": str(e)}
+            return {"table": table, "status": "FAILED", "error": str(e)}
 
-    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-        return dict(pool.map(one, manifest.items()))
+    results = fan_out(catalog.spark, [partial(one, p, t) for p, t in files])
+    return {t: r for (_, t), r in zip(files, results)}

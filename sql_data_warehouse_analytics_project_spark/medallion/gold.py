@@ -15,12 +15,20 @@ natural key join, never a global sequence (SURVEY.md §7.2 risk 3).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_analytics_project_spark.catalog import (
+    MEDALLION_METADATA_COLUMNS,
+    observe_rows,
+    with_medallion_metadata,
+)
 from sql_data_warehouse_analytics_project_spark.operators.windows import (
     contiguous_rank,
 )
+from sql_data_warehouse_analytics_project_spark.session import fan_out
 
 
 def build_dim_customers(
@@ -428,18 +436,15 @@ def _write_gold(
     only the ``fact_sales`` month partitions present in ``df`` and
     returns the rebuilt row count; otherwise the whole table is replaced
     and its row count returned."""
-    from sql_data_warehouse_analytics_project_spark.catalog import (
-        with_medallion_metadata,
+    managed, count = observe_rows(
+        with_medallion_metadata(df, created_by="gold", source_system="silver")
     )
-
-    managed = with_medallion_metadata(df, created_by="gold", source_system="silver")
     if partial:
         catalog.overwrite_partitions(managed, "gold", "fact_sales")
-        n = managed.count()
     else:
         parts = ["order_month"] if name == "fact_sales" else []
         catalog.overwrite(managed, "gold", name, partition_by=parts)
-        n = catalog.spark.table(catalog.qualified("gold", name)).count()
+    n = count()
     if run_context is not None:
         for src_layer, src_table in GOLD_INPUTS[name]:
             run_context.log_lineage(
@@ -452,6 +457,16 @@ def _write_gold(
                 record_count=n,
             )
     return n
+
+
+def _write_side_by_side(catalog, dfs: dict, run_context) -> dict[str, int]:
+    """:func:`_write_gold` for independent gold tables at once
+    (:func:`session.fan_out`); returns ``{name: rows}`` in ``dfs`` order."""
+    rows = fan_out(catalog.spark, [
+        functools.partial(_write_gold, catalog, name, df, run_context=run_context)
+        for name, df in dfs.items()
+    ])
+    return dict(zip(dfs, rows))
 
 
 def run_gold(catalog, *, run_context=None) -> dict[str, int]:
@@ -510,7 +525,10 @@ def run_gold_incremental(catalog, *, run_context=None) -> dict:
 
 def _refresh(catalog, *, full: bool, run_context=None) -> dict:
     """The one gold write path. ``full`` replaces every table; otherwise
-    only what the new batches and the dim changes touched."""
+    only what the new batches and the dim changes touched. The steps run
+    in order — dims, fact, reports, ledger, worklist clear — and within a
+    step the independent tables write side by side: the two dims, then
+    the two reports."""
     from sql_data_warehouse_analytics_project_spark.medallion.silver import (
         _ledger_diff,
         _record_batches,
@@ -546,15 +564,10 @@ def _refresh(catalog, *, full: bool, run_context=None) -> dict:
         # below leaves it on disk for the replay to pick up
         _write_pending(catalog, months)
 
-    tables: dict[str, int] = {}
-    if c_changed:
-        tables["dim_customers"] = _write_gold(
-            catalog, "dim_customers", dim_c, run_context=run_context
-        )
-    if p_changed:
-        tables["dim_products"] = _write_gold(
-            catalog, "dim_products", dim_p, run_context=run_context
-        )
+    dims = (("dim_customers", dim_c, c_changed), ("dim_products", dim_p, p_changed))
+    tables = _write_side_by_side(
+        catalog, {name: df for name, df, changed in dims if changed}, run_context
+    )
     # Each table is built from the PERSISTED tables upstream of it (the
     # fact from the written dims, the reports from the written fact), so
     # the silver→dims→fact pipeline executes once and the declared
@@ -588,18 +601,10 @@ def _refresh(catalog, *, full: bool, run_context=None) -> dict:
         )
     if months or c_changed or p_changed or in_flight:
         fact_sales = catalog.read("gold", "fact_sales")
-        tables["report_customers"] = _write_gold(
-            catalog,
-            "report_customers",
-            build_customer_report(fact_sales, dim_customers),
-            run_context=run_context,
-        )
-        tables["report_products"] = _write_gold(
-            catalog,
-            "report_products",
-            build_product_report(fact_sales, dim_products),
-            run_context=run_context,
-        )
+        tables |= _write_side_by_side(catalog, {
+            "report_customers": build_customer_report(fact_sales, dim_customers),
+            "report_products": build_product_report(fact_sales, dim_products),
+        }, run_context)
 
     _record_batches(catalog, "crm_sales", new_batches, table=GOLD_BATCH_LOG_TABLE)
     # done: drop the worklist (a full build writes none, and it also
@@ -623,11 +628,8 @@ def _refresh(catalog, *, full: bool, run_context=None) -> dict:
 def _affected_months(catalog, new_sales, new_batches, new_dim_c, new_dim_p):
     """``(customers changed, products changed, fact months to rebuild,
     replaying a crashed refresh)`` for an incremental refresh; the months
-    are ``None`` when nothing gold reads changed."""
-    from sql_data_warehouse_analytics_project_spark.catalog import (
-        MEDALLION_METADATA_COLUMNS,
-    )
-
+    are ``None`` when nothing gold reads changed. The two dim diffs run
+    side by side (:func:`session.fan_out`)."""
     spark = catalog.spark
     # durable worklist of a refresh that crashed mid-swap (see docstring)
     carry_months, in_flight = _read_pending(catalog)
@@ -687,12 +689,14 @@ def _affected_months(catalog, new_sales, new_batches, new_dim_c, new_dim_p):
         gained = not state.filter(F.col("_o_h").isNull()).isEmpty()
         return changed, (stale if changed else None), gained and changed
 
-    c_changed, c_stale, c_gained = dim_state(
-        "dim_customers", new_dim_c, "customer_id", "customer_key"
-    )
-    p_changed, p_stale, p_gained = dim_state(
-        "dim_products", new_dim_p, "product_number", "product_key"
-    )
+    (c_changed, c_stale, c_gained), (p_changed, p_stale, p_gained) = fan_out(spark, [
+        functools.partial(
+            dim_state, "dim_customers", new_dim_c, "customer_id", "customer_key"
+        ),
+        functools.partial(
+            dim_state, "dim_products", new_dim_p, "product_number", "product_key"
+        ),
+    ])
 
     if not new_batches and not c_changed and not p_changed and not in_flight:
         return c_changed, p_changed, None, in_flight

@@ -9,9 +9,12 @@ built from the generic cleansing operators.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_analytics_project_spark.catalog import observe_rows
 from sql_data_warehouse_analytics_project_spark.functions.scalars import (
     safe_div,
     yyyymmdd_to_date,
@@ -23,6 +26,7 @@ from sql_data_warehouse_analytics_project_spark.operators.cleansing import (
     scd2_end_dates,
     standardize_codes,
 )
+from sql_data_warehouse_analytics_project_spark.session import fan_out
 
 MARITAL_STATUS = {"M": "Married", "S": "Single"}
 GENDER = {"M": "Male", "F": "Female", "MALE": "Male", "FEMALE": "Female"}
@@ -350,126 +354,137 @@ def run_silver_incremental(
 
 def _refresh(catalog, *, full: bool, run_context=None, tables=None) -> dict:
     """The one silver write path. ``full`` replaces every table from all
-    current bronze; otherwise each table applies only its new batches."""
-    spark = catalog.spark
+    current bronze; otherwise each table applies only its new batches.
+    The tables are independent, so they refresh side by side
+    (:func:`session.fan_out`); results keep :data:`SILVER_TRANSFORMS`
+    order, and the one ledger append runs after every table's write."""
+    units = [
+        partial(_refresh_table, catalog, raw_table, silver_table, fn,
+                full=full, run_context=run_context)
+        for raw_table, (silver_table, fn) in SILVER_TRANSFORMS.items()
+        if tables is None or raw_table in tables
+    ]
     results: dict[str, dict] = {}
     ledger: list = []
-    for raw_table, (silver_table, fn) in SILVER_TRANSFORMS.items():
-        if tables is not None and raw_table not in tables:
-            continue
-        if not catalog.table_exists("bronze", raw_table):
-            continue
-        bronze_all = spark.table(catalog.qualified("bronze", raw_table))
-        if "_is_current" in bronze_all.columns:
-            bronze_all = bronze_all.filter(F.col("_is_current"))
-        new, new_batches = _ledger_diff(
-            catalog, BATCH_LOG_TABLE, raw_table, bronze_all
-        )
-        replace = full or not catalog.table_exists("silver", silver_table)
-        if not replace and not new_batches:
-            results[silver_table] = {"mode": "noop", "batches": 0, "rows": 0}
-            continue
-
-        spec = SILVER_INCREMENTAL[raw_table]
-        qsilver = catalog.qualified("silver", silver_table)
-
-        if replace:
-            part = SILVER_PARTITIONING.get(silver_table)
-            catalog.overwrite(
-                _clean(bronze_all, raw_table, silver_table, fn),
-                "silver", silver_table,
-                partition_by=[part[0]] if part else [],
-            )
-            mode, n = "full", spark.table(qsilver).count()
-        elif spec["mode"] == "append":
-            # which of the new batches already landed in silver? (crash
-            # between append and ledger write — skip, don't double-apply)
-            # Probe ONLY the new batches' ids, not the whole fact: the
-            # isin filter rides parquet row-group stats and dictionary
-            # filters, so untouched files are skipped and the probe stays
-            # new-batch-sized at a 100 TB fact.
-            applied = [
-                r[0]
-                for r in spark.table(qsilver)
-                .select("_ingestion_batch_id")
-                .filter(F.col("_ingestion_batch_id").isin(new_batches))
-                .distinct()
-                .collect()
-            ]
-            n = 0
-            if len(applied) < len(new_batches):
-                todo = new.filter(~F.col("_ingestion_batch_id").isin(applied))
-                cleaned = _clean(todo, raw_table, silver_table, fn)
-                catalog.append(cleaned, "silver", silver_table)
-                n = cleaned.count()
-            mode = "append"
-        else:
-            skeys = spec["silver_keys"]
-            key_exprs = spec["key_exprs"]
-            sk = [f"_sk_{k}" for k in skeys]
-
-            def with_norm_keys(d):
-                # internal _sk_ names: bronze columns like CID would
-                # case-insensitively collide with a computed 'cid'
-                for name, mk in zip(sk, (key_exprs[k] for k in skeys)):
-                    d = d.withColumn(name, mk())
-                return d
-
-            dirty = with_norm_keys(new).select(*sk).distinct()
-
-            def null_safe_cond(left_alias, right_alias, lcols, rcols):
-                # NULL normalized keys (e.g. a NULL source CID) must ride
-                # the refresh like any other key — a plain equi join drops
-                # them, silently losing the row vs a full rebuild
-                cond = None
-                for lc, rc in zip(lcols, rcols):
-                    c = F.col(f"{left_alias}.{lc}").eqNullSafe(
-                        F.col(f"{right_alias}.{rc}")
-                    )
-                    cond = c if cond is None else cond & c
-                return cond
-
-            scope = (
-                with_norm_keys(bronze_all)
-                .alias("_b")
-                .join(
-                    F.broadcast(dirty).alias("_d"),
-                    null_safe_cond("_b", "_d", sk, sk),
-                    "semi",
-                )
-                .drop(*sk)
-            )
-            recleaned = _clean(scope, raw_table, silver_table, fn)
-            target = spark.table(qsilver)
-            # delete scope = the DIRTY key set (not recleaned's keys): the
-            # two coincide while bronze is append-only, but dirty also
-            # covers a key whose rows were all retired via _is_current
-            dirty_s = dirty.toDF(*skeys)
-            keep = target.alias("_t").join(
-                F.broadcast(dirty_s).alias("_ds"),
-                null_safe_cond("_t", "_ds", skeys, skeys),
-                "left_anti",
-            )
-            catalog.overwrite(
-                keep.unionByName(recleaned), "silver", silver_table
-            )
-            mode, n = "keyed", recleaned.count()
-
-        ledger += [(raw_table, b) for b in new_batches]
-        results[silver_table] = {
-            "mode": mode, "batches": len(new_batches), "rows": n,
-        }
-        if run_context is not None:
-            run_context.log_lineage(
-                source_schema=catalog.db("bronze"),
-                source_table=raw_table,
-                target_schema=catalog.db("silver"),
-                target_table=silver_table,
-                transformation_logic=f"{fn.__name__}[{mode}]",
-                record_count=n,
-            )
+    for out in fan_out(catalog.spark, units):
+        if out is not None:
+            silver_table, result, batches = out
+            results[silver_table] = result
+            ledger += batches
     # one ledger append per stage, after every data write: a crash before
     # it re-offers the batches, which the applied-batch probe (append) and
     # the deterministic recompute (keyed, full) make harmless
     _record_ledger(catalog, ledger)
     return results
+
+
+def _refresh_table(
+    catalog, raw_table: str, silver_table: str, fn, *, full: bool, run_context
+):
+    """Refresh one silver table; returns ``(silver_table, result, ledger
+    rows)``, or None when its bronze table does not exist."""
+    spark = catalog.spark
+    if not catalog.table_exists("bronze", raw_table):
+        return None
+    bronze_all = spark.table(catalog.qualified("bronze", raw_table))
+    if "_is_current" in bronze_all.columns:
+        bronze_all = bronze_all.filter(F.col("_is_current"))
+    new, new_batches = _ledger_diff(catalog, BATCH_LOG_TABLE, raw_table, bronze_all)
+    replace = full or not catalog.table_exists("silver", silver_table)
+    if not replace and not new_batches:
+        return silver_table, {"mode": "noop", "batches": 0, "rows": 0}, []
+
+    spec = SILVER_INCREMENTAL[raw_table]
+    qsilver = catalog.qualified("silver", silver_table)
+
+    if replace:
+        part = SILVER_PARTITIONING.get(silver_table)
+        cleaned, count = observe_rows(_clean(bronze_all, raw_table, silver_table, fn))
+        catalog.overwrite(
+            cleaned, "silver", silver_table,
+            partition_by=[part[0]] if part else [],
+        )
+        mode, n = "full", count()
+    elif spec["mode"] == "append":
+        # which of the new batches already landed in silver? (crash
+        # between append and ledger write — skip, don't double-apply)
+        # Probe ONLY the new batches' ids, not the whole fact: the
+        # isin filter rides parquet row-group stats and dictionary
+        # filters, so untouched files are skipped and the probe stays
+        # new-batch-sized at a 100 TB fact.
+        applied = [
+            r[0]
+            for r in spark.table(qsilver)
+            .select("_ingestion_batch_id")
+            .filter(F.col("_ingestion_batch_id").isin(new_batches))
+            .distinct()
+            .collect()
+        ]
+        n = 0
+        if len(applied) < len(new_batches):
+            todo = new.filter(~F.col("_ingestion_batch_id").isin(applied))
+            cleaned, count = observe_rows(_clean(todo, raw_table, silver_table, fn))
+            catalog.append(cleaned, "silver", silver_table)
+            n = count()
+        mode = "append"
+    else:
+        skeys = spec["silver_keys"]
+        key_exprs = spec["key_exprs"]
+        sk = [f"_sk_{k}" for k in skeys]
+
+        def with_norm_keys(d):
+            # internal _sk_ names: bronze columns like CID would
+            # case-insensitively collide with a computed 'cid'
+            for name, mk in zip(sk, (key_exprs[k] for k in skeys)):
+                d = d.withColumn(name, mk())
+            return d
+
+        dirty = with_norm_keys(new).select(*sk).distinct()
+
+        def null_safe_cond(left_alias, right_alias, lcols, rcols):
+            # NULL normalized keys (e.g. a NULL source CID) must ride
+            # the refresh like any other key — a plain equi join drops
+            # them, silently losing the row vs a full rebuild
+            cond = None
+            for lc, rc in zip(lcols, rcols):
+                c = F.col(f"{left_alias}.{lc}").eqNullSafe(
+                    F.col(f"{right_alias}.{rc}")
+                )
+                cond = c if cond is None else cond & c
+            return cond
+
+        scope = (
+            with_norm_keys(bronze_all)
+            .alias("_b")
+            .join(
+                F.broadcast(dirty).alias("_d"),
+                null_safe_cond("_b", "_d", sk, sk),
+                "semi",
+            )
+            .drop(*sk)
+        )
+        recleaned, count = observe_rows(_clean(scope, raw_table, silver_table, fn))
+        target = spark.table(qsilver)
+        # delete scope = the DIRTY key set (not recleaned's keys): the
+        # two coincide while bronze is append-only, but dirty also
+        # covers a key whose rows were all retired via _is_current
+        dirty_s = dirty.toDF(*skeys)
+        keep = target.alias("_t").join(
+            F.broadcast(dirty_s).alias("_ds"),
+            null_safe_cond("_t", "_ds", skeys, skeys),
+            "left_anti",
+        )
+        catalog.overwrite(keep.unionByName(recleaned), "silver", silver_table)
+        mode, n = "keyed", count()
+
+    if run_context is not None:
+        run_context.log_lineage(
+            source_schema=catalog.db("bronze"),
+            source_table=raw_table,
+            target_schema=catalog.db("silver"),
+            target_table=silver_table,
+            transformation_logic=f"{fn.__name__}[{mode}]",
+            record_count=n,
+        )
+    result = {"mode": mode, "batches": len(new_batches), "rows": n}
+    return silver_table, result, [(raw_table, b) for b in new_batches]

@@ -38,12 +38,14 @@ from collections import defaultdict
 import time
 import traceback
 from contextlib import ExitStack, contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sql_data_warehouse_analytics_project_spark.catalog import Catalog
+from sql_data_warehouse_analytics_project_spark.catalog import Catalog, observe_rows
 from sql_data_warehouse_analytics_project_spark.ops import schemas
+from sql_data_warehouse_analytics_project_spark.session import fan_out
 
 _counter = itertools.count()
 
@@ -59,10 +61,11 @@ class RunContext:
         self.catalog = catalog
         self.spark = catalog.spark
         self.created_by = created_by
-        # parallel loaders (bronze.load_source_system) log from worker
+        # fanned-out stage units (session.fan_out) log from worker
         # threads; appends to ONE parquet table share a commit-protocol
         # staging dir, so same-table writes must not interleave — but
         # different log tables are independent, so the lock is per table
+        # and flush() appends to the tables side by side
         self._write_locks: dict[str, threading.Lock] = defaultdict(threading.Lock)
         self._buf_lock = threading.Lock()
         self._buffers: dict[str, list[dict]] = defaultdict(list)
@@ -72,8 +75,11 @@ class RunContext:
         self._ensure_tables()
 
     def _ensure_tables(self) -> None:
-        for name, schema in schemas.LOGS_TABLES.items():
-            self.catalog.create_table("logs", name, schema, medallion_metadata=False)
+        fan_out(self.spark, [
+            partial(self.catalog.create_table, "logs", name, schema,
+                    medallion_metadata=False)
+            for name, schema in schemas.LOGS_TABLES.items()
+        ])
 
     def _append(self, table: str, row: dict) -> None:
         with self._buf_lock:
@@ -83,7 +89,8 @@ class RunContext:
 
     def flush(self, table: str | None = None) -> None:
         """Write buffered rows for ``table`` (or all tables) as ONE
-        columnar append each.
+        columnar append each; the appends to different tables run side
+        by side (:func:`session.fan_out`).
 
         Rows leave the buffer only AFTER their append commits: a failed
         append keeps them buffered for the next flush instead of
@@ -91,22 +98,26 @@ class RunContext:
         the per-table write lock, so it can never observe rows in
         neither the buffer nor the table mid-write."""
         names = [table] if table is not None else list(schemas.LOGS_TABLES)
-        for name in names:
-            with self._write_locks[name]:
-                with self._buf_lock:
-                    rows = list(self._buffers.get(name, ()))
-                if not rows:
-                    continue
-                # driver-side row batch: force one output file per flush —
-                # createDataFrame would otherwise slice a handful of rows
-                # across defaultParallelism partitions
-                df = self.spark.createDataFrame(
-                    rows, schemas.LOGS_TABLES[name]
-                ).coalesce(1)
-                self.catalog.append(df, "logs", name)
-                with self._buf_lock:
-                    buf = self._buffers.get(name, [])
-                    del buf[: len(rows)]
+        with self._buf_lock:
+            names = [n for n in names if self._buffers.get(n)]
+        fan_out(self.spark, [partial(self._flush_one, name) for name in names])
+
+    def _flush_one(self, name: str) -> None:
+        with self._write_locks[name]:
+            with self._buf_lock:
+                rows = list(self._buffers.get(name, ()))
+            if not rows:
+                return
+            # driver-side row batch: force one output file per flush —
+            # createDataFrame would otherwise slice a handful of rows
+            # across defaultParallelism partitions
+            df = self.spark.createDataFrame(
+                rows, schemas.LOGS_TABLES[name]
+            ).coalesce(1)
+            self.catalog.append(df, "logs", name)
+            with self._buf_lock:
+                buf = self._buffers.get(name, [])
+                del buf[: len(rows)]
 
     def close(self) -> None:
         """Flush everything still buffered (call when done logging
@@ -481,8 +492,6 @@ class RunContext:
         ``analysis.identify_bottlenecks`` can correlate a slow write with
         its shuffle volume and call it SHUFFLE_HEAVY instead of merely
         SLOW_EXECUTION."""
-        from pyspark.sql import Observation
-
         from sql_data_warehouse_analytics_project_spark.ops import spark_metrics
         from sql_data_warehouse_analytics_project_spark.ops.lineage_capture import (
             plan_column_lineage,
@@ -498,8 +507,7 @@ class RunContext:
         if len(col_edges) > 512:
             col_edges = []
         logs_db = self.catalog.db("logs")
-        obs = Observation()
-        instrumented = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        instrumented, count = observe_rows(df)
         # the capture stays open from here until the caller's finish(),
         # so the write's jobs run under its job group
         corr = f"capture:{_new_id()}"
@@ -511,7 +519,7 @@ class RunContext:
             elapsed = time.time() - t0
             bracket.close()  # restores the job group and fills ``work``
             try:
-                rows = int(obs.get["rows"])
+                rows = count()
             except Exception:  # noqa: BLE001 — metrics are best-effort
                 rows = None
             for src_schema, src_table in sources:

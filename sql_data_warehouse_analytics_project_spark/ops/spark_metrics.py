@@ -9,8 +9,9 @@ about where a distributed job actually spent its time).
 (``measure()`` blocks and auto-captured writes) and ``bench.py`` both
 call it. It runs a block under its own Spark JOB GROUP and, on exit,
 totals the stages of exactly the jobs that carried the group — so two
-captures interleaving on one SparkContext (the parallel bronze loader
-threads) never cross-attribute each other's stages. The job group rides
+captures interleaving on one SparkContext (the units of a stage that
+``session.fan_out`` runs side by side) never cross-attribute each
+other's stages. The job group rides
 Spark's thread-local ``spark.jobGroup.id`` property (PySpark pins Python
 threads to JVM threads, so a group set on the capturing thread tags
 precisely that thread's jobs). Jobs are looked up by group and stages by

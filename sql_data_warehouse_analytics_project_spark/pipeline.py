@@ -23,7 +23,12 @@ class Warehouse:
     (``setup_orchestrator.py:585-598``). Full and incremental stages share
     one write path per layer: a full build records the batch ledgers, so
     ``run_all`` followed by ``run_bronze`` + the incremental stages applies
-    each batch exactly once."""
+    each batch exactly once.
+
+    Stages run one after another; inside a stage the independent table
+    writes run side by side (:func:`session.fan_out`, which also states
+    the failure rule): bronze's six files, silver's six tables, gold's
+    two dims and then its two reports."""
 
     def __init__(self, spark: SparkSession, prefix: str = ""):
         self.catalog = Catalog(spark, prefix=prefix)
@@ -39,14 +44,9 @@ class Warehouse:
         ctx = self.ctx
         with ctx.run("bronze_ingestion", target_layer="bronze") as log_id:
             t0 = time.time()
-            results = {
-                **bronze.load_source_system(
-                    self.catalog, crm_dir, bronze.CRM_FILES, run_context=ctx
-                ),
-                **bronze.load_source_system(
-                    self.catalog, erp_dir, bronze.ERP_FILES, run_context=ctx
-                ),
-            }
+            results = bronze.load_sources(
+                self.catalog, crm_dir, erp_dir, run_context=ctx
+            )
             rows = sum(r.get("rows_loaded", 0) for r in results.values())
             elapsed = max(time.time() - t0, 1e-9)
             # the reference's headline metric (bronze.py:543-551)

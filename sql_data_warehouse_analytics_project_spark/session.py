@@ -9,6 +9,8 @@ Scale notes:
   on a real cluster set it (or rely on AQE coalescing) to ~2-3× total cores.
 - AQE is on: runtime shuffle-partition coalescing, skew-join splitting and
   dynamic join-strategy switching — required behavior at 100 TB.
+- The driver heap defaults to half the box's memory, capped at 48g
+  (``SPARK_DRIVER_MEMORY`` overrides it).
 - Session timezone is pinned to UTC so timestamp semantics are stable and
   DuckDB-oracle comparisons hash identically (SURVEY.md §7.2 risk 5).
 """
@@ -16,8 +18,14 @@ Scale notes:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_cpus() -> int:
@@ -29,6 +37,41 @@ def default_cpus() -> int:
     except ValueError:
         n = 0
     return n if n > 0 else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the box's
+    physical memory, capped at 48g, so a small box does not promise a
+    heap it cannot back."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
+def fan_out(spark: SparkSession, units: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent units side by side and return their results in
+    input order.
+
+    A unit is one or more Spark statements that touch nothing another
+    unit of the call touches (a table write, a log-table append). Running
+    them on a thread pool overlaps each statement's fixed driver and
+    scheduling cost instead of paying it once per unit. The pool is as
+    wide as the session's ``defaultParallelism``, so it follows the
+    cores the session was given. Every unit runs to its end, then the
+    first failure in input order is raised: no unit is still writing
+    when the caller sees the error. One unit runs inline, on the
+    caller's thread.
+
+    Each unit gets its own copy of the caller's Spark local properties
+    (job group, SQL execution id): PySpark pins a Python thread to a JVM
+    thread, and ``inheritable_thread_target`` clones the properties once
+    per wrapper, so a wrapper shared by several threads would have them
+    overwrite one another's job group."""
+    if len(units) <= 1:
+        return [u() for u in units]
+    width = min(spark.sparkContext.defaultParallelism, len(units))
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(u)) for u in units]
+    return [f.result() for f in futures]
 
 
 def get_spark(
@@ -68,7 +111,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The generated-class cache defaults to 100 entries; a workload

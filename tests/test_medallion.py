@@ -129,9 +129,7 @@ def cat(spark):
 
 @pytest.fixture(scope="module")
 def loaded(cat):
-    r1 = bronze.load_source_system(cat, CRM_DIR, bronze.CRM_FILES)
-    r2 = bronze.load_source_system(cat, ERP_DIR, bronze.ERP_FILES)
-    return {**r1, **r2}
+    return bronze.load_sources(cat, CRM_DIR, ERP_DIR)
 
 
 def test_bronze_loads_all_six(cat, loaded):
