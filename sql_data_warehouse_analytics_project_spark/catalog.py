@@ -58,6 +58,7 @@ from sql_data_warehouse_analytics_project_spark.functions.scalars import row_has
 from sql_data_warehouse_analytics_project_spark.operators.relational import (
     exclude_soft_deleted,
 )
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 LAYERS = ("bronze", "silver", "gold", "logs")
 
@@ -313,7 +314,7 @@ class Catalog:
         if medallion_metadata:
             present = {f.name for f in fields}
             fields += [f for f in MEDALLION_METADATA_FIELDS if f.name not in present]
-        empty = self.spark.createDataFrame([], T.StructType(fields))
+        empty = local_rows(self.spark, [], T.StructType(fields))
         gen_q = f"{self.db(layer)}.{self._gen_name(table, 1)}"
         # a crashed first write may have left generation 1 without a view
         self.spark.sql(f"DROP TABLE IF EXISTS {gen_q}")
@@ -530,7 +531,7 @@ class Catalog:
             "declared_by": declared_by,
         }
         self.append(
-            self.spark.createDataFrame([row], C.CONSTRAINTS_SCHEMA),
+            local_rows(self.spark, [row], C.CONSTRAINTS_SCHEMA),
             "logs",
             C.CONSTRAINTS_TABLE,
         )

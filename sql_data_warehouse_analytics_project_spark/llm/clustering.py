@@ -33,6 +33,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_analytics_project_spark.session import local_rows
+
 #: graphs with at most this many raw pair rows resolve on the driver
 #: (union-find); larger ones take the distributed label propagation
 DRIVER_MAX_EDGES = 1_000_000
@@ -104,7 +106,7 @@ def connected_components(
                 lo, hi = (ru, rv) if ru < rv else (rv, ru)
                 parent[hi] = lo
         rows = [(n, find(n)) for n in parent]
-        return e0.sparkSession.createDataFrame(rows, "node long, comp long")
+        return local_rows(e0.sparkSession, rows, "node long, comp long")
     # Symmetrize once for the distributed rounds; both directions
     # materialized together because every round re-reads the full edge
     # list, and distinct() keeps near-clique detectors from inflating

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_data_warehouse_analytics_project_spark.llm.text import tokens
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 
 def _tokenize(corpus: DataFrame, id_col: str, text_col: str):
@@ -253,7 +254,8 @@ def _read_postings(spark, root: str, m: dict, only_buckets=None):
         parts.append(df)
     if not parts:
         id_type = extra["id_type"]
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], f"term string, doc {id_type}, tf bigint, dl bigint, _bucket bigint"
         )
     out = parts[0]

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_data_warehouse_analytics_project_spark.llm.text import md5_60bit
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 #: Bucket space. 10^6 buckets ⇒ rate granularity of 0.0001%.
 DEFAULT_MOD = 1_000_000
@@ -119,7 +120,8 @@ def rebalance_mix(
     (same reproducibility contract as :func:`hash_sample`). Strata absent
     from ``weights`` are dropped. No driver-side collect anywhere."""
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_rows(
+        spark,
         [(k, float(v)) for k, v in weights.items()], f"{strata_col} string, _w double"
     )
     counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("_n")).join(

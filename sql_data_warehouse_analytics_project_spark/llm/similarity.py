@@ -21,6 +21,7 @@ from sql_data_warehouse_analytics_project_spark.llm.dedup import cosine
 from sql_data_warehouse_analytics_project_spark.llm.vocab import (
     _release_checkpoint,
 )
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 
 def cosine_topk(
@@ -418,8 +419,8 @@ def build_ivf_index(
     if not cent_rows:  # empty/all-null corpus: searchable, zero results
         return {
             "centroids": [],
-            "assignments": spark.createDataFrame(
-                [], f"neighbor_id {id_sql}, nv array<float>, centroid_id int"
+            "assignments": local_rows(
+                spark, [], f"neighbor_id {id_sql}, nv array<float>, centroid_id int"
             ),
             "id_type": id_sql,
         }
@@ -492,8 +493,8 @@ def search_ivf_index(
     id_sql = index["id_type"]
     cmat = np.array(index["centroids"], dtype=np.float64)
     if cmat.size == 0:
-        return spark.createDataFrame(
-            [],
+        return local_rows(
+            spark, [],
             f"query_id {id_sql}, neighbor_id {id_sql}, cosine double, rank int",
         )
     qbase = queries.filter(F.col(vec_col).isNotNull()).select(
@@ -751,8 +752,8 @@ def build_ivfpq_index(
     )
     if not codebooks:  # empty/all-null corpus: searchable, zero results
         spark = embeddings.sparkSession
-        assignments = spark.createDataFrame(
-            [], f"neighbor_id {ivf['id_type']}, centroid_id int, pq_code binary"
+        assignments = local_rows(
+            spark, [], f"neighbor_id {ivf['id_type']}, centroid_id int, pq_code binary"
         )
     else:
         codes = encode_pq(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
@@ -812,7 +813,8 @@ def search_ivfpq_index(
     id_sql = index["id_type"]
     cmat = np.array(index["centroids"], dtype=np.float64)
     if cmat.size == 0 or not index["codebooks"]:
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [], f"query_id {id_sql}, neighbor_id {id_sql}, score double, rank int"
         )
     bk = np.asarray(index["codebooks"], dtype=np.float64)  # (m, c, d_sub)
@@ -1079,8 +1081,8 @@ def _read_assignments(spark, root: str, m: dict, only_cells=None) -> DataFrame:
             )
         )
     if not parts:
-        return spark.createDataFrame(
-            [], f"neighbor_id {id_sql}, centroid_id int, pq_code binary"
+        return local_rows(
+            spark, [], f"neighbor_id {id_sql}, centroid_id int, pq_code binary"
         )
     out = parts[0]
     for p in parts[1:]:

@@ -35,6 +35,7 @@ from sql_data_warehouse_analytics_project_spark.llm.text import tokens
 from sql_data_warehouse_analytics_project_spark.llm.vocab import (
     _release_checkpoint,
 )
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 #: score for a character absent from the model during encoding (OOV
 #: escape hatch — unreachable during training, where seeding covers
@@ -237,7 +238,7 @@ def train_unigram(
         (p, int(counts[p]), float(final_logp[p]))
         for p in sorted(final_logp)
     ]
-    pieces = spark.createDataFrame(rows, "piece string, count long, logp double")
+    pieces = local_rows(spark, rows, "piece string, count long, logp double")
     return {
         "pieces": pieces,
         "n_single": len(singles),

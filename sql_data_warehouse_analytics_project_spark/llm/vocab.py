@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sql_data_warehouse_analytics_project_spark.llm.text import tokens
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 
 def build_vocab(
@@ -233,13 +234,11 @@ def train_bpe(
                         out.append(s[i])
                         i += 1
                 segs[w] = out
-        merges_df = spark.createDataFrame(
-            merges, "rank int, s1 string, s2 string, freq bigint"
-        ) if merges else spark.createDataFrame(
-            [], "rank int, s1 string, s2 string, freq bigint"
+        merges_df = local_rows(
+            spark, merges, "rank int, s1 string, s2 string, freq bigint"
         )
-        word_pieces = spark.createDataFrame(
-            [(w, words[w], segs[w]) for w in words],
+        word_pieces = local_rows(
+            spark, [(w, words[w], segs[w]) for w in words],
             "w string, wn bigint, pieces array<string>",
         )
         return {
@@ -292,10 +291,8 @@ def train_bpe(
         wc.count()
         _release_checkpoint(prev)
     spark = df.sparkSession
-    merges_df = spark.createDataFrame(
-        merges, "rank int, s1 string, s2 string, freq bigint"
-    ) if merges else spark.createDataFrame(
-        [], "rank int, s1 string, s2 string, freq bigint"
+    merges_df = local_rows(
+        spark, merges, "rank int, s1 string, s2 string, freq bigint"
     )
     return {"merges": merges_df, "word_pieces": wc, "n_merges": len(merges)}
 

@@ -28,7 +28,7 @@ from sql_data_warehouse_analytics_project_spark.catalog import (
 from sql_data_warehouse_analytics_project_spark.operators.windows import (
     contiguous_rank,
 )
-from sql_data_warehouse_analytics_project_spark.session import fan_out
+from sql_data_warehouse_analytics_project_spark.session import fan_out, local_rows
 
 
 def build_dim_customers(
@@ -414,7 +414,7 @@ def _write_pending(catalog, months) -> None:
     """Durably record the refresh worklist: one 'sync' sentinel (reports
     must be rebuilt) plus one 'month' row per affected fact month."""
     rows = [("sync", None)] + [("month", m) for m in months]
-    df = catalog.spark.createDataFrame(rows, _PENDING_SCHEMA).withColumn(
+    df = local_rows(catalog.spark, rows, _PENDING_SCHEMA).withColumn(
         "recorded_at", F.current_timestamp()
     )
     catalog.overwrite(df, "logs", GOLD_PENDING_TABLE)
@@ -423,8 +423,8 @@ def _write_pending(catalog, months) -> None:
 def _clear_pending(catalog) -> None:
     if not catalog.table_exists("logs", GOLD_PENDING_TABLE):
         return
-    empty = catalog.spark.createDataFrame(
-        [], _PENDING_SCHEMA + ", recorded_at timestamp"
+    empty = local_rows(
+        catalog.spark, [], _PENDING_SCHEMA + ", recorded_at timestamp"
     )
     catalog.overwrite(empty, "logs", GOLD_PENDING_TABLE)
 

@@ -26,7 +26,7 @@ from sql_data_warehouse_analytics_project_spark.operators.cleansing import (
     scd2_end_dates,
     standardize_codes,
 )
-from sql_data_warehouse_analytics_project_spark.session import fan_out
+from sql_data_warehouse_analytics_project_spark.session import fan_out, local_rows
 
 MARITAL_STATUS = {"M": "Married", "S": "Single"}
 GENDER = {"M": "Male", "F": "Female", "MALE": "Male", "FEMALE": "Female"}
@@ -226,6 +226,8 @@ SILVER_INCREMENTAL = {
 
 #: logs-layer ledger of bronze batches already reflected in silver
 BATCH_LOG_TABLE = "silver_batch_log"
+#: the columns a ledger append supplies (``processed_at`` is added on write)
+LEDGER_SCHEMA = "table_name string, _ingestion_batch_id string"
 
 # Directory partitioning for fact-scale silver tables: the sales fact is
 # partitioned by a derived order month (the same grain as gold.fact_sales),
@@ -261,9 +263,9 @@ def _record_ledger(catalog, rows, *, table: str = BATCH_LOG_TABLE) -> None:
     """One append of ``(table_name, _ingestion_batch_id)`` rows."""
     if not rows:
         return
-    df = catalog.spark.createDataFrame(
-        rows, "table_name string, _ingestion_batch_id string"
-    ).withColumn("processed_at", F.current_timestamp())
+    df = local_rows(catalog.spark, rows, LEDGER_SCHEMA).withColumn(
+        "processed_at", F.current_timestamp()
+    )
     catalog.append(df, "logs", table)
 
 

@@ -27,6 +27,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_analytics_project_spark.session import local_rows
+
 SEVERITIES = ("ERROR", "WARNING")
 
 
@@ -59,8 +61,8 @@ def validate(df: DataFrame, rules: Sequence[Mapping[str, Any]]) -> DataFrame:
     pass; data_type rules are answered from ``df.schema`` without a scan."""
     spark = df.sparkSession
     if not rules:
-        return spark.createDataFrame(
-            [],
+        return local_rows(
+            spark, [],
             "rule_name string, rule_type string, severity string,"
             " violation_count long, total_rows long, passed boolean",
         )
@@ -110,8 +112,8 @@ def validate(df: DataFrame, rules: Sequence[Mapping[str, Any]]) -> DataFrame:
             ).withColumn("passed", F.col("violation_count") == 0)
         )
     if schema_rows:
-        sdf = spark.createDataFrame(
-            schema_rows,
+        sdf = local_rows(
+            spark, schema_rows,
             "rule_name string, rule_type string, severity string,"
             " violation_count long, passed boolean",
         ).withColumn("total_rows", F.lit(0).cast("long"))

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
+from sql_data_warehouse_analytics_project_spark.session import local_rows
+
 _RESET_EXTRACTORS = {
     "yearly": lambda d: [F.year(d)],
     "monthly": lambda d: [F.year(d), F.month(d)],
@@ -355,7 +357,7 @@ def contiguous_rank(
         )
     # thousands of partitions: keep the plan small, attach by broadcast
     off = F.broadcast(
-        df.sparkSession.createDataFrame(offsets, "_cr_pid int, _cr_off long")
+        local_rows(df.sparkSession, offsets, "_cr_pid int, _cr_off long")
     )
     return (
         ranked.join(off, "_cr_pid")
@@ -704,8 +706,8 @@ def global_running_sum(
         )
         return part.withColumn(name, off_expr + local).drop("_cr_pid", "_cr_lrn")
     off = F.broadcast(
-        df.sparkSession.createDataFrame(
-            list(offsets.items()), "_cr_pid int, _cr_off long"
+        local_rows(
+            df.sparkSession, list(offsets.items()), "_cr_pid int, _cr_off long"
         )
     )
     return (

@@ -20,6 +20,9 @@ Implementation notes:
   process lifecycle. Trade-off: a hard-killed driver loses buffered
   RUNNING rows — call ``flush()`` after ``start_process`` if a
   monitoring system needs in-flight visibility.
+- A flush builds its rows through Arrow (:func:`session.local_rows`), so
+  it starts no Python worker, and a naive ``_now()`` time is stored as
+  the UTC instant it names whatever the host's time zone.
 - ``end_process`` carries the start row in memory (no read-back query);
   ids not started by this context fall back to reading the table —
   append-only cross-process semantics unchanged.
@@ -45,7 +48,7 @@ from pyspark.sql import functions as F
 
 from sql_data_warehouse_analytics_project_spark.catalog import Catalog, observe_rows
 from sql_data_warehouse_analytics_project_spark.ops import schemas
-from sql_data_warehouse_analytics_project_spark.session import fan_out
+from sql_data_warehouse_analytics_project_spark.session import fan_out, local_rows
 
 _counter = itertools.count()
 
@@ -108,12 +111,7 @@ class RunContext:
                 rows = list(self._buffers.get(name, ()))
             if not rows:
                 return
-            # driver-side row batch: force one output file per flush —
-            # createDataFrame would otherwise slice a handful of rows
-            # across defaultParallelism partitions
-            df = self.spark.createDataFrame(
-                rows, schemas.LOGS_TABLES[name]
-            ).coalesce(1)
+            df = local_rows(self.spark, rows, schemas.LOGS_TABLES[name])
             self.catalog.append(df, "logs", name)
             with self._buf_lock:
                 buf = self._buffers.get(name, [])
@@ -579,7 +577,7 @@ class RunContext:
         DECIMAL(15,4): values beyond its ±99,999,999,999.9999 range are
         CLAMPED to the bound (and the unit suffixed ``+clamped``) rather
         than buffered as-is — an unrepresentable Decimal would fail
-        createDataFrame at every later flush and, since failed rows stay
+        the Arrow conversion at every later flush and, since failed rows stay
         buffered, poison the whole metrics buffer including ``close()``.
         Telemetry callers avoid the clamp by recording in units that fit
         (executor byte counters record as MB — ``ops/spark_metrics.py``).

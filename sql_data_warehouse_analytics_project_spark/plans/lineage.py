@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_analytics_project_spark.session import local_rows
+
 #: Largest distinct edge list ``traverse`` walks.
 MAX_EDGES = 1_000_000
 #: Largest number of (node, depth, path) rows ``traverse`` enumerates.
@@ -84,8 +86,8 @@ def traverse(
                 f"than MAX_PATHS={MAX_PATHS} paths"
             )
         frontier = nxt
-    return lineage.sparkSession.createDataFrame(
-        [(n, d, list(p)) for n, d, p in rows],
+    return local_rows(
+        lineage.sparkSession, [(n, d, list(p)) for n, d, p in rows],
         "node string, depth int, path array<string>",
     )
 

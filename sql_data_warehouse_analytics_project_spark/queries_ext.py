@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 from sql_data_warehouse_analytics_project_spark.functions.scalars import money
 from sql_data_warehouse_analytics_project_spark.plans import lineage
 from sql_data_warehouse_analytics_project_spark.queries import register
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 from sql_data_warehouse_analytics_project_spark.sources.readers import load_table
 
 
@@ -119,7 +120,7 @@ def q30_theta_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin, so the fact side streams with no shuffle —
     the only sane physical strategy for interval predicates at scale."""
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(PRICE_BANDS, "band string, lo long, hi long")
+    bands = local_rows(spark, PRICE_BANDS, "band string, lo long, hi long")
     j = orders.join(
         F.broadcast(bands),
         (orders.o_totalprice >= bands.lo) & (orders.o_totalprice < bands.hi),

@@ -36,6 +36,7 @@ from sql_data_warehouse_analytics_project_spark.llm import (
     vocab,
 )
 from sql_data_warehouse_analytics_project_spark.queries import register
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 from sql_data_warehouse_analytics_project_spark.sources.readers import load_table
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2497,8 +2498,8 @@ def qd56_ivfpq_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall = hits.count() / float(exact.count() or 1)
     bytes_per_vec = index["m"]  # uint8 code per subspace
     raw_bytes = index["dim"] * 4  # float32 payload
-    return spark.createDataFrame(
-        [(n_q, recall >= 0.6, raw_bytes >= 16 * bytes_per_vec)],
+    return local_rows(
+        spark, [(n_q, recall >= 0.6, raw_bytes >= 16 * bytes_per_vec)],
         "n_queries bigint, recall_ok boolean, compression_ok boolean",
     )
 
@@ -2592,16 +2593,16 @@ def qd58_ivfpq_disk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "neighbor_id"
         )
         hits = (
-            spark.createDataFrame(
-                [(r[0], r[1]) for r in got],
+            local_rows(
+                spark, [(r[0], r[1]) for r in got],
                 f"query_id {index['id_type']}, neighbor_id {index['id_type']}",
             )
             .join(exact, ["query_id", "neighbor_id"])
             .count()
         )
         n_q = queries.count()
-        return spark.createDataFrame(
-            [(n_q, got == want, hits / float(exact.count() or 1) >= 0.6)],
+        return local_rows(
+            spark, [(n_q, got == want, hits / float(exact.count() or 1) >= 0.6)],
             "n_queries bigint, same_as_memory boolean, recall_ok boolean",
         )
     finally:
@@ -3010,8 +3011,8 @@ def qd63_ivfpq_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame
         ).collect())) == pre_results
 
         n_vectors = emb.count()
-        return spark.createDataFrame(
-            [(n_vectors, equals_rebuild, intact, pinned)],
+        return local_rows(
+            spark, [(n_vectors, equals_rebuild, intact, pinned)],
             "n_vectors bigint, update_equals_pinned_rebuild boolean,"
             " untouched_cells_intact boolean, reader_snapshot_pinned boolean",
         )
@@ -3573,8 +3574,8 @@ def qd69_ivfpq_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold_ok = got == ref and len(got) > 0
 
         refidx = dict(index)
-        refidx["assignments"] = spark.createDataFrame(
-            ref,
+        refidx["assignments"] = local_rows(
+            spark, ref,
             f"neighbor_id {index['id_type']}, centroid_id int,"
             " pq_code binary",
         )
@@ -3588,8 +3589,8 @@ def qd69_ivfpq_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_ok = s_got == s_ref and len(s_got) > 0
 
         n_vectors = emb.count()
-        return spark.createDataFrame(
-            [(n_vectors, fold_ok, replay_ok, search_ok)],
+        return local_rows(
+            spark, [(n_vectors, fold_ok, replay_ok, search_ok)],
             "n_vectors bigint, sink_fold_equals_pinned_rebuild boolean,"
             " replay_idempotent boolean, search_matches_pinned_rebuild"
             " boolean",

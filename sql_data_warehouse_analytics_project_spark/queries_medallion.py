@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from sql_data_warehouse_analytics_project_spark.medallion import gold, silver
 from sql_data_warehouse_analytics_project_spark.queries import register
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 
 # These replay entries read the reference's fixed six-CSV dataset, so they
 # are sf-invariant (the gate's sf_dir only scales the other entries). The
@@ -755,7 +756,7 @@ def q80_gold_incremental_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bronze(rows, schema, batch):
         data = [r[1:] for r in rows if r[0] == batch]
         return (
-            spark.createDataFrame(data, schema)
+            local_rows(spark, data, schema)
             .withColumn("_ingestion_batch_id", F.lit(batch))
             .withColumn("_is_current", F.lit(True))
         )

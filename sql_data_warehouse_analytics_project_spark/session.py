@@ -18,12 +18,15 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
-from typing import TypeVar
+from typing import Any, TypeVar
 
+import pyarrow as pa
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
@@ -72,6 +75,49 @@ def fan_out(spark: SparkSession, units: Sequence[Callable[[], T]]) -> list[T]:
     with ThreadPoolExecutor(max_workers=width) as pool:
         futures = [pool.submit(inheritable_thread_target(spark)(u)) for u in units]
     return [f.result() for f in futures]
+
+
+def local_rows(
+    spark: SparkSession,
+    rows: Iterable[Mapping[str, Any] | Sequence[Any]],
+    schema: StructType | str,
+) -> DataFrame:
+    """The one way to turn driver-side rows into a DataFrame.
+
+    ``rows`` are dicts (read by field name, a missing key is null) or
+    tuples (read by position); ``schema`` is a ``StructType`` or a DDL
+    string. The rows become one ``pyarrow.Table`` that the JVM decodes,
+    so no Python worker task runs. The DataFrame has one partition when
+    there are rows (a driver-side append writes one file) and none when
+    there are none; repartition it where a large input should spread.
+    ``spark.createDataFrame(<list>)`` instead pickles the rows through a
+    Python worker per partition (~0.2 s each) and slices even a handful
+    of rows across ``defaultParallelism`` partitions.
+
+    Naive ``datetime`` values in a ``timestamp`` column are UTC instants,
+    whatever the process or session time zone (the list path reads them
+    as the Python process's local time)."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    columns: list[list[Any]] = [[] for _ in names]
+    for row in rows:
+        values = [row.get(n) for n in names] if isinstance(row, Mapping) else row
+        if len(values) != len(names):
+            raise ValueError(
+                f"row {row!r} has {len(values)} values; the schema has "
+                f"{len(names)} fields ({', '.join(names)})"
+            )
+        for column, value in zip(columns, values):
+            column.append(value)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    df = spark.createDataFrame(table, struct)
+    # Spark plans the table as a local relation scanned on up to
+    # ``defaultParallelism`` partitions (none when empty); one is enough
+    return df.coalesce(1) if table.num_rows else df
 
 
 def get_spark(

@@ -24,6 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from sql_data_warehouse_analytics_project_spark.catalog import Catalog
 from sql_data_warehouse_analytics_project_spark.medallion.bronze import enrich_bronze
+from sql_data_warehouse_analytics_project_spark.session import local_rows
 from sql_data_warehouse_analytics_project_spark.sources import (
     manifest as sources_manifest,
 )
@@ -465,7 +466,7 @@ def corpus_dedup_sink(
                 ~((F.col("cp") == cp) & (F.col("batch_id") == batch_id))
             ).select("fingerprint")
         except AnalysisException:  # first batch: no ledger yet
-            prior = spark.createDataFrame([], "fingerprint string")
+            prior = local_rows(spark, [], "fingerprint string")
         fresh = dedup.dedup_against_snapshot(batch_df, prior, id_col, text_col)
         part = f"cp={cp}/batch_id={batch_id}"
         # observed slice writes: with auto-capture enabled the corpus and
@@ -567,10 +568,10 @@ def bm25_index_sink(
         ).collect()[0]
         id_type = dict(batch_df.dtypes)[id_col]
         writers.write_partitioned_slice(
-            spark.createDataFrame(
-                [(int(row["n_docs"] or 0), int(row["total_dl"] or 0), id_type)],
+            local_rows(
+                spark, [(int(row["n_docs"] or 0), int(row["total_dl"] or 0), id_type)],
                 "n_docs long, total_dl long, id_type string",
-            ).coalesce(1),
+            ),
             f"{index_dir}/stats/{part}",
         )
 
@@ -712,7 +713,7 @@ def retire_compact_bm25_sink(spark, index_dir: str) -> dict:
     doc_type = dict(retired.dtypes)["doc"]
     rgid, rgdir = sources_manifest.new_generation(f"{root}/retired")
     writers._write_layout(
-        spark.createDataFrame([], f"doc {doc_type}").coalesce(1),
+        local_rows(spark, [], f"doc {doc_type}"),
         f"{rgdir}/cp=__compacted__/batch_id=-1",
     )
     sources_manifest.publish(f"{root}/retired", rgid)
@@ -870,10 +871,10 @@ def ivfpq_index_sink(
         n_rows = batch_df.count()
         bq = similarity._mean_qerr(batch_df, ex["codebooks"], id_col, vec_col)
         writers.write_partitioned_slice(
-            spark.createDataFrame(
-                [(int(n_rows), float(bq) if bq is not None else None)],
+            local_rows(
+                spark, [(int(n_rows), float(bq) if bq is not None else None)],
                 "n_rows long, batch_qerr double",
-            ).coalesce(1),
+            ),
             f"{index_dir}/qstats/{part}",
         )
 
